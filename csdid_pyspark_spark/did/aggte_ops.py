@@ -5,16 +5,36 @@ Semantics follow the reference (ATTgt.py:519-878) and R ``did::aggte``
 never implemented (SURVEY.md §2.6 K17) and the weight-estimation
 influence correction ``wif`` (reference utils_aggte.py:7-36).
 
-Every aggregate is a linear combination of cell influence functions
-plus a wif term, so the whole computation is joins + groupBy over the
-long IF table: per-unit aggregated IFs never leave the executors; the
-driver sees only O(|egt|) scalars (and O(biters·|egt|) bootstrap
-partials). The wif algebra is folded into two per-cohort maps:
+Every aggregate — each egt key and the overall ATT — is one spec: cell
+weights θ[cid] and per-cohort wif weights β[g]. Its influence function
+is
 
-    wif_contrib(u) = (w_u·α_{G_u} − Sa)/P − (w_u·c_{G_u} − P)·Sa/P²
+    IF_u = Σ_cid θ[cid]·inf_sc(u, cid) + w_u·β[g_u]
 
-with α_g = Σ_{k∈K: g_k=g} att_k, c_g = |{k∈K: g_k=g}|, Sa = Σ att_k·pg_k,
-P = Σ pg_k — exactly utils_aggte.py's if1−if2 summed against att.
+For a pg-weighted average over keeper cells K (P = Σ_K pg_k,
+Sa = Σ_K att_k·pg_k), θ[k] = pg_k/P, and the reference's wif summed
+against att (if1 − if2) is
+
+    (w_u·α_g − Sa)/P − (w_u·c_g − P)·Sa/P²
+
+with g = g_u, α_g = Σ_{k∈K: g_k=g} att_k and c_g = |{k∈K: g_k=g}|.
+Expanded, its two terms free of w_u are −Sa/P and +P·Sa/P² = +Sa/P:
+they cancel, leaving w_u·(α_g − c_g·Sa/P)/P = w_u·β_{g_u} with
+
+    β_g = Σ_{k∈K: g_k=g} (att_k − Sa/P)/P
+
+Group's per-cohort keys are equal-weight means (θ = 1/|K|, no wif).
+The overall spec is a linear combination of the per-key specs — group:
+pg-weighted over cohorts with β from the cohort-level keepers;
+calendar: the mean over keys; dynamic: the mean over e ≥ 0 — except
+for simple, whose overall is its only key.
+
+The specs are built on the driver without Spark. One pass then gives
+the (key, uh, inf) table for every key at once: the IF table joined to
+broadcast θ, unioned with the unit weights joined to broadcast β, and
+reduced by one groupBy(key, uh). Per-unit IFs never leave the
+executors; the driver collects one SE per key and, with the bootstrap,
+one biters × keys draw matrix.
 """
 
 from __future__ import annotations
@@ -28,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csdid_pyspark_spark.cache import persist_rightsized
-from csdid_pyspark_spark.did.mboot import mboot
+from csdid_pyspark_spark.did.mboot import mboot, sigma_crit
 from csdid_pyspark_spark.did.preprocess import DidError
 from csdid_pyspark_spark.did.stats import norm_ppf
 
@@ -89,140 +109,51 @@ class AggteResult:
             )
 
 
-def _wif_df(unitw: DataFrame, keepers: list[dict], spark) -> DataFrame | None:
-    """Per-unit wif contribution Σ_k wif_{u,k}·att_k for keeper set K.
-    Returns (uh, wifv) over ALL inference units."""
-    if not keepers:
-        return None
-    P = sum(k["pg"] for k in keepers)
-    Sa = sum(k["att"] * k["pg"] for k in keepers)
-    per_g: dict[float, list[float]] = {}
-    for k in keepers:
-        a, c = per_g.get(k["g"], [0.0, 0.0])
-        per_g[k["g"]] = [a + k["att"], c + 1.0]
-    gmap = spark.createDataFrame(
-        [(g, a, c) for g, (a, c) in per_g.items()], "g_u double, alpha double, cnt double"
-    )
-    u = unitw.join(F.broadcast(gmap), "g_u", "left").na.fill({"alpha": 0.0, "cnt": 0.0})
-    wifv = (F.col("w_u") * F.col("alpha") - Sa) / P - (
-        (F.col("w_u") * F.col("cnt") - P) * Sa / (P * P)
-    )
-    return u.select("uh", wifv.alias("wifv"))
+# (att, θ: cid → cell weight, β: cohort → wif weight)
+Spec = tuple[float, dict[int, float], dict[float, float]]
 
 
-def _agg_if(
-    if_df: DataFrame,
-    cell_weights: list[tuple[int, float]],
-    wif_part: DataFrame | None,
-    spark,
-) -> DataFrame:
-    """Aggregated IF per unit: Σ θ_cid·inf_sc(u,cid) (+ wif). Returns
-    (uh, inf)."""
-    wdf = spark.createDataFrame(cell_weights, "cid int, theta double")
-    part = (
-        if_df.join(F.broadcast(wdf), "cid")
-        .groupBy("uh")
-        .agg(F.sum(F.col("theta") * F.col("inf_sc")).alias("inf"))
-    )
-    if wif_part is None:
-        return part
-    return (
-        part.join(wif_part, "uh", "full")
-        .select(
-            "uh",
-            (F.coalesce(F.col("inf"), F.lit(0.0)) + F.coalesce(F.col("wifv"), F.lit(0.0))).alias(
-                "inf"
-            ),
-        )
-    )
+def _pg_weighted(ks: list[dict]) -> Spec:
+    """pg-weighted average over keeper cells, wif included."""
+    P = sum(k["pg"] for k in ks)
+    Sa = sum(k["att"] * k["pg"] for k in ks)
+    beta: dict[float, float] = {}
+    for k in ks:
+        beta[k["g"]] = beta.get(k["g"], 0.0) + (k["att"] - Sa / P) / P
+    return Sa / P, {k["cid"]: k["pg"] / P for k in ks}, beta
 
 
-def _se_of(if_tbl: DataFrame, n: int) -> float:
-    row = if_tbl.agg((F.sqrt(F.sum(F.col("inf") * F.col("inf"))) / n).alias("se")).first()
-    se = row["se"]
-    if se is None or se <= math.sqrt(2.220446049250313e-16) * 10:
-        return float("nan")
-    return float(se)
+def _mix(specs: list[Spec], coefs: list[float]) -> Spec:
+    """The spec of Σ coef·spec."""
+    att, theta, beta = 0.0, {}, {}
+    for (a, th, be), c in zip(specs, coefs):
+        att += c * a
+        for cid, w in th.items():
+            theta[cid] = theta.get(cid, 0.0) + c * w
+        for g, b in be.items():
+            beta[g] = beta.get(g, 0.0) + c * b
+    return att, theta, beta
 
 
-def build_per_egt_if(
-    spark,
-    if_df: DataFrame,
-    unitw: DataFrame,
-    groups: dict[float, list[dict]],
-    use_wif: bool,
-    equal_w: bool = False,
-    cache: bool = True,
-    n_hint: int | None = None,
-):
-    """Build the per-egt aggregated IF table for ALL egt values in one
-    pass: a single (cid, key, theta) broadcast join + one
-    groupBy(key, uh), plus one broadcast-joined wif pass — instead of
-    one shuffle chain per event time. The full IF table is read EXACTLY
-    ONCE regardless of how many egt values are aggregated (the plan
-    property tests/test_plans.py asserts). Returns (egt_sorted, atts,
-    DataFrame(key, uh, inf))."""
-    egts = sorted(groups)
-    atts, weight_rows = [], []
-    wif_scalars, wif_gmap = [], []
-    for idx, e in enumerate(egts):
-        ks = groups[e]
-        tot = sum(k["pg"] for k in ks)
-        if equal_w:
-            weight_rows += [(k["cid"], idx, 1.0 / len(ks)) for k in ks]
-            atts.append(sum(k["att"] for k in ks) / len(ks))
-        else:
-            weight_rows += [(k["cid"], idx, k["pg"] / tot) for k in ks]
-            atts.append(sum(k["att"] * k["pg"] / tot for k in ks))
-        if use_wif:
-            P = sum(k["pg"] for k in ks)
-            Sa = sum(k["att"] * k["pg"] for k in ks)
-            wif_scalars.append((idx, Sa, P))
-            per_g: dict[float, list[float]] = {}
-            for k in ks:
-                a, c = per_g.get(k["g"], [0.0, 0.0])
-                per_g[k["g"]] = [a + k["att"], c + 1.0]
-            wif_gmap += [(idx, g, a, c) for g, (a, c) in per_g.items()]
-    wdf = spark.createDataFrame(weight_rows, "cid int, key int, theta double")
-    part = (
-        if_df.join(F.broadcast(wdf), "cid")
-        .groupBy("key", "uh")
-        .agg(F.sum(F.col("theta") * F.col("inf_sc")).alias("inf"))
+def aggregated_if(spark, if_df: DataFrame, unitw: DataFrame, specs: dict[int, Spec]) -> DataFrame:
+    """(key, uh, inf) for every spec in one pass: the IF table against
+    broadcast θ plus the unit weights against broadcast β, summed by one
+    groupBy(key, uh). The caller persists it if it reads it twice."""
+    theta = spark.createDataFrame(
+        [(key, cid, w) for key, (_, th, _) in specs.items() for cid, w in th.items()],
+        "key int, cid int, theta double",
     )
-    # ≤ one row per (unit, egt): driver-known bound, zero-pass sizing
-    if_u_bound = n_hint * max(1, len(egts)) if n_hint else None
-    if not use_wif:
-        return (
-            egts,
-            atts,
-            (persist_rightsized(part, known_rows=if_u_bound)[0] if cache else part),
-        )
-    sdf = spark.createDataFrame(wif_scalars, "key int, sa double, p double")
-    gdf = spark.createDataFrame(wif_gmap, "key int, g_u double, alpha double, cnt double")
-    u = (
-        unitw.crossJoin(F.broadcast(sdf))
-        .join(F.broadcast(gdf), ["key", "g_u"], "left")
-        .na.fill({"alpha": 0.0, "cnt": 0.0})
+    beta = spark.createDataFrame(
+        [(key, g, b) for key, (_, _, be) in specs.items() for g, b in be.items()],
+        "key int, g_u double, beta double",
     )
-    wifv = (F.col("w_u") * F.col("alpha") - F.col("sa")) / F.col("p") - (
-        (F.col("w_u") * F.col("cnt") - F.col("p")) * F.col("sa") / (F.col("p") * F.col("p"))
+    cell = if_df.join(F.broadcast(theta), "cid").select(
+        "key", "uh", (F.col("theta") * F.col("inf_sc")).alias("v")
     )
-    wif_tbl = u.select("key", "uh", wifv.alias("wifv"))
-    combined = (
-        part.join(wif_tbl, ["key", "uh"], "full")
-        .select(
-            "key",
-            "uh",
-            (
-                F.coalesce(F.col("inf"), F.lit(0.0)) + F.coalesce(F.col("wifv"), F.lit(0.0))
-            ).alias("inf"),
-        )
+    wif = unitw.join(F.broadcast(beta), "g_u").select(
+        "key", "uh", (F.col("w_u") * F.col("beta")).alias("v")
     )
-    return (
-        egts,
-        atts,
-        (persist_rightsized(combined, known_rows=if_u_bound)[0] if cache else combined),
-    )
+    return cell.unionByName(wif).groupBy("key", "uh").agg(F.sum("v").alias("inf"))
 
 
 def compute_aggte(
@@ -246,7 +177,6 @@ def compute_aggte(
     cband = fr.cband if cband is None else cband
     biters = attgt.biters if biters is None else biters
     alp = attgt.alp if alp is None else alp
-    spark = attgt.spark
     n = fr.n
     z = float(norm_ppf(1 - alp / 2))
 
@@ -257,7 +187,6 @@ def compute_aggte(
         if not na_rm:
             raise DidError("missing ATT(g,t) values; set na_rm=True to drop them")
         cells = cells[cells["att"].notna()]
-    cells = cells.reset_index(drop=True)
 
     unitw = attgt._unit_weights()
     pg = getattr(attgt, "_pg_cache", None)
@@ -266,153 +195,101 @@ def compute_aggte(
         pg = {r["g_u"]: r["pg"] for r in pg_rows}
         attgt._pg_cache = pg
 
-    def cell_info(row):
-        return {"cid": int(row.cid), "g": float(row.g), "t": float(row.t), "att": float(row.att), "pg": pg.get(float(row.g), 0.0)}
+    infos = [
+        {"cid": int(r.cid), "g": float(r.g), "t": float(r.t), "att": float(r.att),
+         "pg": pg.get(float(r.g), 0.0)}
+        for r in cells.itertuples()
+    ]
 
-    infos = [cell_info(r) for r in cells.itertuples()]
-
-    def per_egt_if(groups: dict[float, list[dict]], use_wif: bool, equal_w: bool = False):
-        return build_per_egt_if(
-            spark, fr.if_df, unitw, groups, use_wif, equal_w, n_hint=n
-        )
-
-    # ----- build groups per type ------------------------------------------
-    if typec == "simple":
-        keep = [k for k in infos if k["g"] <= k["t"] <= k["g"] + max_e]
-        if not keep:
-            raise DidError("no post-treatment cells to aggregate")
-        tot = sum(k["pg"] for k in keep)
-        att_o = sum(k["att"] * k["pg"] for k in keep) / tot
-        theta = [(k["cid"], k["pg"] / tot) for k in keep]
-        wif_part = _wif_df(unitw, keep, spark)
-        if_o = _agg_if(fr.if_df, theta, wif_part, spark).persist()
-        se_o = _se_of(if_o, n)
-        if bstrap:
-            bt = if_o.select(F.lit(0).alias("key"), "uh", "inf")
-            if attgt.pdata.has_cluster:
-                bt = attgt._cluster_collapse(bt, "key", "inf")
-                n_b = attgt._n_clusters()
-            else:
-                n_b = n
-            mb = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-            se_o = mb.se.get(0, se_o)
-        if_o.unpersist()
-        return AggteResult(typec, att_o, se_o, [], [], [], z, min_e, max_e, balance_e, alp)
-
-    if typec == "group":
-        groups = {}
+    # ----- step 1, driver only: θ/β specs per egt key and overall ----------
+    groups: dict[float, list[dict]] = {}
+    if typec in ("simple", "group"):
         for k in infos:
             if k["g"] <= k["t"] <= k["g"] + max_e:
                 groups.setdefault(k["g"], []).append(k)
-        egts, atts, if_u = per_egt_if(groups, use_wif=False, equal_w=True)
     elif typec == "calendar":
         min_g = min(k["g"] for k in infos)
-        groups = {}
         for k in infos:
             if k["t"] >= min_g and k["g"] <= k["t"]:
                 groups.setdefault(k["t"], []).append(k)
-        egts, atts, if_u = per_egt_if(groups, use_wif=True)
     else:  # dynamic
-        groups = {}
         tl = attgt.pdata.tlist
         span = max(tl) - min(tl)
+        max_t = max((i["t"] for i in infos), default=0.0)
         for k in infos:
             e = k["t"] - k["g"]
             if not (min_e <= e <= max_e):
                 continue
-            if balance_e is not None:
-                max_t = max(i["t"] for i in infos)
-                # R did balanced event-study window: cohorts observed
-                # for >= balance_e post periods, event times trimmed to
-                # balance_e - (t2 - t1) <= e <= balance_e — the lower
-                # trim keeps cohort composition IDENTICAL across every
-                # retained event time (without it, deep-negative e
-                # averages over a different cohort mix).
-                if max_t - k["g"] < balance_e or e > balance_e or e < balance_e - span:
-                    continue
+            # R did balanced event-study window: cohorts observed for
+            # >= balance_e post periods, event times trimmed to
+            # balance_e - (t2 - t1) <= e <= balance_e — the lower trim
+            # keeps cohort composition IDENTICAL across every retained
+            # event time (without it, deep-negative e averages over a
+            # different cohort mix).
+            if balance_e is not None and (
+                max_t - k["g"] < balance_e or e > balance_e or e < balance_e - span
+            ):
+                continue
             groups.setdefault(e, []).append(k)
-        egts, atts, if_u = per_egt_if(groups, use_wif=True)
 
-    # ----- per-egt SEs in one aggregation pass (+ optional uniform band) ---
+    if typec == "simple":
+        egts, per_key = [], []
+        keep = [k for ks in groups.values() for k in ks]
+        if not keep:
+            raise DidError("no post-treatment cells to aggregate")
+        overall = _pg_weighted(keep)
+    else:
+        egts = sorted(groups)
+        if typec == "group":
+            per_key = [
+                (sum(k["att"] for k in ks) / len(ks), {k["cid"]: 1.0 / len(ks) for k in ks}, {})
+                for ks in (groups[g] for g in egts)
+            ]
+        else:
+            per_key = [_pg_weighted(groups[e]) for e in egts]
+        o_keys = [i for i, e in enumerate(egts) if typec != "dynamic" or e >= 0]
+        if not o_keys:
+            raise DidError("no post-treatment cells to aggregate")
+        if typec == "group":
+            att_o, coef, beta_o = _pg_weighted(
+                [{"cid": i, "g": g, "att": per_key[i][0], "pg": pg.get(g, 0.0)}
+                 for i, g in enumerate(egts)]
+            )
+            overall = (att_o, _mix(per_key, [coef[i] for i in o_keys])[1], beta_o)
+        else:
+            overall = _mix([per_key[i] for i in o_keys], [1.0 / len(o_keys)] * len(o_keys))
+    specs = {**dict(enumerate(per_key)), OVERALL_KEY: overall}
+
+    # ----- step 2, one Spark pass: every key's IF, SE and bootstrap --------
+    if_u = aggregated_if(attgt.spark, fr.if_df, unitw, specs)
+    if bstrap:  # read twice: the SEs and the draws
+        if_u = persist_rightsized(if_u, known_rows=n * len(specs))[0]
     se_rows = if_u.groupBy("key").agg(
         (F.sqrt(F.sum(F.col("inf") * F.col("inf"))) / n).alias("se")
     ).collect()
-    se_map = {r["key"]: r["se"] for r in se_rows}
     tiny = math.sqrt(2.220446049250313e-16) * 10
-    ses = [
-        float("nan") if se_map.get(i) is None or se_map[i] <= tiny else float(se_map[i])
-        for i in range(len(egts))
-    ]
+    se = dict.fromkeys(specs, float("nan"))
+    se.update({r["key"]: float(r["se"]) for r in se_rows if r["se"] is not None and r["se"] > tiny})
     crit = z
     if bstrap:
+        bt, n_b = if_u, n
         if attgt.pdata.has_cluster:
             bt, n_b = attgt._cluster_collapse(if_u, "key", "inf"), attgt._n_clusters()
-        else:
-            bt, n_b = if_u, n
         mb = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-        ses = [mb.se.get(i, ses[i]) for i in range(len(egts))]
-        if cband:
-            crit = mb.crit_val
+        if_u.unpersist()
+        se.update(mb.se)
+        if cband and egts:
+            # the uniform band covers the egt keys, not the overall
+            egt_cols = [i for i, k in enumerate(mb.keys) if k != OVERALL_KEY]
+            crit = sigma_crit(mb.bres[:, egt_cols], alp)[2]
             if not math.isfinite(crit) or crit < z:
                 warnings.warn("simultaneous critical value degenerate; reporting pointwise bands", stacklevel=2)
                 crit = z
             elif crit >= 7:
                 warnings.warn("simultaneous critical value very large; estimates may be unreliable", stacklevel=2)
 
-    # ----- overall ---------------------------------------------------------
-    if typec == "group":
-        pgg = {g: pg.get(g, 0.0) for g in egts}
-        tot = sum(pgg.values())
-        att_o = sum(a * pgg[g] for a, g in zip(atts, egts)) / tot
-        # overall wif at the group level (keepers = the cohorts)
-        wif_part = _wif_df(
-            unitw,
-            [{"g": g, "att": a, "pg": pgg[g]} for a, g in zip(atts, egts)],
-            spark,
-        )
-        wdf = spark.createDataFrame(
-            [(i, pgg[g] / tot) for i, g in enumerate(egts)], "key int, theta double"
-        )
-        part = (
-            if_u.join(F.broadcast(wdf), "key")
-            .groupBy("uh")
-            .agg(F.sum(F.col("theta") * F.col("inf")).alias("inf"))
-        )
-        if_o = (
-            part.join(wif_part, "uh", "full")
-            .select(
-                "uh",
-                (
-                    F.coalesce(F.col("inf"), F.lit(0.0)) + F.coalesce(F.col("wifv"), F.lit(0.0))
-                ).alias("inf"),
-            )
-            .persist()
-        )
-    else:
-        if typec == "calendar":
-            o_keys = list(range(len(egts)))
-        else:  # dynamic: average post-treatment event times
-            o_keys = [i for i, e in enumerate(egts) if e >= 0]
-        att_o = sum(atts[i] for i in o_keys) / len(o_keys)
-        wdf = spark.createDataFrame(
-            [(i, 1.0 / len(o_keys)) for i in o_keys], "key int, theta double"
-        )
-        if_o = (
-            if_u.join(F.broadcast(wdf), "key")
-            .groupBy("uh")
-            .agg(F.sum(F.col("theta") * F.col("inf")).alias("inf"))
-            .persist()
-        )
-    se_o = _se_of(if_o, n)
-    if bstrap:
-        bt = if_o.select(F.lit(0).alias("key"), "uh", "inf")
-        if attgt.pdata.has_cluster:
-            bt, n_b = attgt._cluster_collapse(bt, "key", "inf"), attgt._n_clusters()
-        else:
-            n_b = n
-        mb_o = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-        se_o = mb_o.se.get(0, se_o)
-    if_o.unpersist()
-    if_u.unpersist()
-
-    return AggteResult(typec, float(att_o), se_o, [float(e) for e in egts], [float(a) for a in atts], ses, float(crit), min_e, max_e, balance_e, alp)
+    return AggteResult(
+        typec, float(overall[0]), se[OVERALL_KEY], [float(e) for e in egts],
+        [float(a) for a, _, _ in per_key], [se[i] for i in range(len(egts))], float(crit),
+        min_e, max_e, balance_e, alp,
+    )

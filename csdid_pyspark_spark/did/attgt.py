@@ -411,11 +411,13 @@ class ATTgt:
 
     # ------------------------------------------------------------------
     def compute_aggte(self, typec: str = "group", **kwargs):
-        """Aggregate the fitted ATT(g,t) table. Results are memoized
-        per (typec, kwargs): an aggregation is a pure function of the
-        fit, and real sessions request the same one repeatedly (table
-        + plot + bands), so repeats must not re-run the IF aggregation
-        passes. fit() invalidates the memo."""
+        """Aggregate the fitted ATT(g,t) table. Every egt key and the
+        overall ATT come out of one Spark pass over the IF table, with
+        one bootstrap call over all of them when bootstrapping
+        (aggte_ops). Results are memoized per (typec, kwargs): an
+        aggregation is a pure function of the fit, and real sessions
+        request the same one repeatedly (table + plot + bands), so a
+        repeat runs no Spark job. fit() invalidates the memo."""
         from csdid_pyspark_spark.did.aggte_ops import compute_aggte
 
         key = (typec, tuple(sorted(kwargs.items())))

@@ -120,6 +120,25 @@ class MbootResult:
     # (reference mboot.py:125 — np.cov(bres); may be defective in degenerate cases)
 
 
+def sigma_crit(bres: np.ndarray, alp: float) -> tuple[np.ndarray, np.ndarray, float]:
+    """Bootstrap statistics of a (draws × columns) matrix: the mask of
+    non-degenerate columns (reference mboot.py:118-121), their IQR-based
+    sigma, and the sup-t critical value over those columns."""
+    ndg = np.logical_and(
+        ~np.isnan(bres.sum(axis=0)),
+        (bres**2).sum(axis=0) > np.sqrt(np.finfo(float).eps) * 10,
+    )
+    b_use = bres[:, ndg]
+    q75 = np.quantile(b_use, 0.75, axis=0, method="inverted_cdf")
+    q25 = np.quantile(b_use, 0.25, axis=0, method="inverted_cdf")
+    sig = (q75 - q25) / (norm_ppf(0.75) - norm_ppf(0.25))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        bT = np.max(np.abs(b_use / sig), axis=1)
+    bT = bT[np.isfinite(bT)]
+    crit_val = float(np.quantile(bT, 1 - alp, method="inverted_cdf")) if len(bT) else float("nan")
+    return ndg, sig, crit_val
+
+
 def mboot(
     if_df: DataFrame,
     key_col: str,
@@ -142,20 +161,8 @@ def mboot(
     bres[draws["b"].to_numpy(), draws["k"].map(kpos).to_numpy()] = draws["s"].to_numpy()
     bres *= np.sqrt(n) / n
 
-    # non-degenerate columns (reference mboot.py:118-121)
-    ndg = np.logical_and(
-        ~np.isnan(bres.sum(axis=0)),
-        (bres**2).sum(axis=0) > np.sqrt(np.finfo(float).eps) * 10,
-    )
+    ndg, sig, crit_val = sigma_crit(bres, alp)
     b_use = bres[:, ndg]
-    q75 = np.quantile(b_use, 0.75, axis=0, method="inverted_cdf")
-    q25 = np.quantile(b_use, 0.25, axis=0, method="inverted_cdf")
-    sig = (q75 - q25) / (norm_ppf(0.75) - norm_ppf(0.25))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        bT = np.max(np.abs(b_use / sig), axis=1)
-    bT = bT[np.isfinite(bT)]
-    crit_val = float(np.quantile(bT, 1 - alp, method="inverted_cdf")) if len(bT) else float("nan")
-
     se_arr = np.full(len(keys), np.nan)
     se_arr[ndg] = sig / np.sqrt(n)
     V = np.cov(b_use, rowvar=False) if b_use.shape[1] else None

@@ -71,6 +71,8 @@ def assign_codes_arrow(
       ``slice()`` projection produced.
 
     Returns (id, m, code[, sub]) — one row per (vector, subspace).
+    A vector with a NaN or inf component raises ``ValueError`` naming
+    its id.
     """
     import numpy as np
 
@@ -107,6 +109,17 @@ def assign_codes_arrow(
                 diff = x[:, :, d, None] - cb_mat[None, :, :, d]
                 acc += diff * diff
             idx = np.argmin(acc, axis=2)  # ties -> first = lowest id
+            best = np.take_along_axis(acc, idx[:, :, None], axis=2)[:, :, 0]
+            bad = ~np.isfinite(best).all(axis=1)
+            if bad.any():
+                # a NaN/inf component leaves no finite distance: argmin
+                # would pick an arbitrary entry, or the +inf padding whose
+                # int64-max id wraps in the int32 cast below
+                first = b.column(0)[int(np.flatnonzero(bad)[0])].as_py()
+                raise ValueError(
+                    f"{id_col} {first!r} has no finite distance to any "
+                    "codebook entry (NaN or inf component)"
+                )
             codes = ids_mat[np.arange(m)[None, :], idx]
             arrays = [
                 pa.array(np.repeat(ids_np, m)),

@@ -78,65 +78,7 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessi
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Registration order matters operationally: external harnesses that cap the
-# number of checked queries take them in dict order (the round-1 run checked
-# exactly the first 50 of 77). The rotation below is AUTOMATIC: it reads the
-# harness's own CORRECTNESS_r*.json verdicts from the repo root and
-# front-loads (1) any query whose last external check FAILED, then (2) every
-# query that has never received an external check (including ones whose only
-# checks so far were rows-only but which now carry an oracle — their first
-# HASH check is still outstanding), then (3) previously-green queries as
-# regression sentinels ordered OLDEST-CHECKED FIRST, so sentinel staleness is
-# bounded at ceil(registry/window) rounds. Estimator (did_*) queries sort
-# first within each tier. New queries therefore enter the checked window on
-# the next run with zero bookkeeping, and green queries rotate out to make
-# room.
-
-
-def _externally_green() -> tuple[set[str], set[str], set[str], dict[str, int]]:
-    """Names with a green external verdict, names whose LATEST verdict
-    is a failure (any error/mismatch other than the rows-only
-    'no_oracle' gate), names that have a HASH-green verdict (not just
-    the weaker rows-only acceptance), and the last round each name was
-    checked in."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    green: set[str] = set()
-    failed: set[str] = set()
-    hash_green: set[str] = set()
-    last_checked: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                verdicts = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(verdicts, dict):
-            continue
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        rnd = int(m.group(1)) if m else 0
-        for name, v in verdicts.items():
-            if not isinstance(v, dict):
-                continue
-            last_checked[name] = max(rnd, last_checked.get(name, 0))
-            ok = (
-                v.get("hash_match") is True
-                or (v.get("err") == "no_oracle" and v.get("spark_rows") is not None)
-            )
-            if ok:
-                green.add(name)
-                failed.discard(name)
-                if v.get("hash_match") is True:
-                    hash_green.add(name)
-            else:
-                failed.add(name)
-    return green, failed, hash_green, last_checked
-
-
+# Registration order is module order.
 _raw: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 for mod in (did_events, llm_ops, relational, analytics_ext, pipeline_ext, streaming_gate, estimation_ext, stats_ext):
     _raw.update(mod.QUERIES)
@@ -198,36 +140,9 @@ FOLDED: dict[str, str] = {
     "text_keywords": "text_bm25",
 }
 
-_green, _failed, _hash_green, _last_checked = _externally_green()
-
-
-def _rank(name: str) -> tuple[int, int, int]:
-    if name in _failed:
-        cls = 0  # failed last check: re-check first
-    elif name not in _green:
-        cls = 1  # never externally checked
-    elif name not in _hash_green and name in ORACLES:
-        # previously only rows-only-checked but an oracle now exists
-        # (e.g. a pinned VALUES golden): its first HASH check is still
-        # outstanding — front-load with the never-checked class
-        cls = 1
-    else:
-        cls = 2  # green sentinel
-    # Green sentinels rotate OLDEST-CHECKED first (recency tiebreak):
-    # with a 50-query external window over a larger registry, this
-    # bounds any query's staleness at ceil(registry/window) rounds —
-    # without it a query last hash-checked in round 1 and one checked
-    # last round rank identically and the window never advances.
-    staleness = _last_checked.get(name, 0) if cls == 2 else 0
-    return (cls, staleness, 0 if name.startswith("did_") else 1)
-
-
-_module_order = list(_raw)
-_ordered = sorted(_module_order, key=lambda n: (_rank(n), _module_order.index(n)))
-
 # Local surface (tests, golden/plan tooling): everything, folded included.
 ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    name: _tuned(_raw[name]) for name in _ordered
+    name: _tuned(fn) for name, fn in _raw.items()
 }
 ALL_ORACLES: dict[str, str] = dict(ORACLES)
 

@@ -1063,6 +1063,25 @@ def test_pq_recall_and_compression_vs_bruteforce(spark):
     assert cb2 == cb  # bit-identical codebooks under repartitioning
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_pq_assign_codes_rejects_non_finite_vector(spark, bad):
+    """A vector with a NaN or inf component has no finite distance to
+    any codebook entry: the assignment kernel raises a ValueError that
+    names it, rather than emitting an arbitrary code or the +inf padding
+    entry's wrapped id (subspace 1 is ragged, so it carries padding)."""
+    from csdid_pyspark_spark.operators.pq import assign_codes_arrow
+
+    codebook = {0: {0: [0.0, 0.0], 1: [1.0, 1.0]}, 1: {0: [0.0, 0.0]}}
+    df = spark.createDataFrame(
+        [(1, [0.9, 0.8, 0.3, 0.4]), (7, [0.1, 0.2, bad, 0.4])],
+        "vec_id long, embedding array<double>",
+    )
+    good = assign_codes_arrow(df.filter("vec_id = 1"), codebook).orderBy("m").collect()
+    assert [(r["m"], r["code"]) for r in good] == [(0, 1), (1, 0)]
+    with pytest.raises(Exception, match=r"ValueError: vec_id 7 has no finite distance"):
+        assign_codes_arrow(df, codebook).collect()
+
+
 def test_misra_gries_heavy_hitters_exact_and_bounded(spark):
     """The MG candidate pass must (a) emit at most k+1 rows per
     partition — the O(partitions·k) shuffle bound IS the operator's

@@ -73,3 +73,23 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     if not _approx_equal(ns, nd):
         diffs = [(a, b) for a, b in zip(ns, nd) if a != b][:5]
         pytest.fail(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def test_folded_names_map_to_registered_representatives():
+    """Every FOLDED key is a withdrawn-but-still-implemented query
+    (present in ALL_QUERIES, absent from the exported surface) and
+    every representative named in its fold-map value is REGISTERED —
+    so the folded logic always has a live externally-checked cover.
+    A representative that is itself folded (or deleted) would silently
+    orphan the folded query's external coverage."""
+    from csdid_pyspark_spark import queries
+
+    for folded, reps in queries.FOLDED.items():
+        assert folded in queries.ALL_QUERIES, f"FOLDED key not implemented: {folded}"
+        assert folded not in queries.QUERIES, f"FOLDED key still exported: {folded}"
+        assert folded not in queries.ORACLES, f"FOLDED key still in ORACLES: {folded}"
+        for rep in reps.split(" + "):
+            assert rep in queries.QUERIES, (
+                f"fold representative {rep!r} (covering {folded!r}) is not "
+                "a registered query"
+            )

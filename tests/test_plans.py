@@ -88,16 +88,16 @@ def test_asof_join_single_window_shuffle(spark, sf_dir):
 
 
 def test_dynamic_aggte_single_pass_over_if_table(spark):
-    """The per-egt aggregation path must read the (persisted) IF table
-    exactly once no matter how many event times are aggregated — the
-    single-pass design that keeps aggte O(|IF|) instead of
-    O(|egt|·|IF|). Guarded at the plan level: one cache scan, weights
-    and wif joined via broadcast only, a single non-broadcast shuffle
-    for the (key, uh) reduction plus one for the wif alignment join."""
+    """Every aggregation key (each event time and the overall ATT) comes
+    out of ONE pass over the IF table, no matter how many keys there
+    are — the single-pass design that keeps aggte O(|IF|) instead of
+    O(|egt|·|IF|). Guarded at the plan level: one cache scan, cell and
+    wif weights joined via broadcast only, and a single non-broadcast
+    shuffle, the (key, uh) reduction — no sort-merge join."""
     import pandas as pd
 
     from csdid_pyspark_spark.did import ATTgt
-    from csdid_pyspark_spark.did.aggte_ops import build_per_egt_if
+    from csdid_pyspark_spark.did.aggte_ops import OVERALL_KEY, aggregated_if
 
     rows = []
     for i in range(120):
@@ -109,21 +109,14 @@ def test_dynamic_aggte_single_pass_over_if_table(spark):
     est = ATTgt(sdf, "y", "t", "id", "g", allow_unbalanced_panel=False)
     est.fit("reg")
 
-    infos = [
-        {"cid": int(r.cid), "g": float(r.g), "t": float(r.t), "att": 0.5, "pg": 0.33}
-        for r in est.fit_result.cell_map.itertuples()
-    ]
-    groups: dict = {}
-    for k in infos:
-        groups.setdefault(k["t"] - k["g"], []).append(k)
-    # cache=False: assert on the LAZY single-pass plan. The production
-    # path wraps the same plan in a right-sized cache (persist_rightsized),
-    # whose InMemoryRelation nests this plan as replay text — counting
-    # scan lines across that nesting would double-count the one real scan.
-    _, _, if_u = build_per_egt_if(
-        spark, est.fit_result.if_df, est._unit_weights(), groups, use_wif=True,
-        cache=False,
-    )
+    cm = est.fit_result.cell_map
+    specs = {
+        int(e): (0.5, {int(r.cid): 0.5 for r in cm[cm.t - cm.g == e].itertuples()}, {3.0: 0.1})
+        for e in sorted(set(cm.t - cm.g))
+    }
+    specs[OVERALL_KEY] = (0.5, {int(cm.cid.iloc[0]): 1.0}, {3.0: 0.1, 4.0: -0.1})
+    # the builder returns the lazy plan; the caller persists it
+    if_u = aggregated_if(spark, est.fit_result.if_df, est._unit_weights(), specs)
     plan = if_u._jdf.queryExecution().executedPlan().toString()
     est.unpersist()
     # the cached IF table (columns cid, uh, inf_sc) is scanned exactly
@@ -133,13 +126,11 @@ def test_dynamic_aggte_single_pass_over_if_table(spark):
         if "InMemoryTableScan" in ln and "inf_sc" in ln
     ]
     assert len(if_scans) == 1, plan
-    # weights and wif joins are broadcast-only; the live shuffles of the
-    # aggte path (keyed on the aggregation key) are exactly the (key,uh)
-    # reduction and the wif alignment — lineage exchanges inside the
-    # cached IF relation are replay text, keyed on (cid,_id), not these
-    live_shuffles = plan.count("Exchange hashpartitioning(key#")
-    assert live_shuffles <= 2, plan
-    assert plan.count("SortMergeJoin") <= 1, plan  # only the (key,uh) full join
+    # weights join via broadcast; the one live shuffle keyed on the
+    # aggregation key is the (key, uh) reduction — lineage exchanges
+    # inside the cached IF relation are replay text, keyed on (cid,_id)
+    assert plan.count("Exchange hashpartitioning(key#") == 1, plan
+    assert plan.count("SortMergeJoin") == 0, plan
 
 
 def test_q4_semi_join_with_nonequi_condition(spark, sf_dir):
