@@ -115,7 +115,7 @@ def test_dynamic_aggte_single_pass_over_if_table(spark):
         for e in sorted(set(cm.t - cm.g))
     }
     specs[OVERALL_KEY] = (0.5, {int(cm.cid.iloc[0]): 1.0}, {3.0: 0.1, 4.0: -0.1})
-    # the builder returns the lazy plan; the caller persists it
+    # aggregated_if returns the lazy plan; compute_aggte persists it
     if_u = aggregated_if(spark, est.fit_result.if_df, est._unit_weights(), specs)
     plan = if_u._jdf.queryExecution().executedPlan().toString()
     est.unpersist()
