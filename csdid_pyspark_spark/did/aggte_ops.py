@@ -29,12 +29,16 @@ pg-weighted over cohorts with β from the cohort-level keepers;
 calendar: the mean over keys; dynamic: the mean over e ≥ 0 — except
 for simple, whose overall is its only key.
 
-The specs are built on the driver without Spark. One pass then gives
-the (key, uh, inf) table for every key at once: the IF table joined to
-broadcast θ, unioned with the unit weights joined to broadcast β, and
-reduced by one groupBy(key, uh). Per-unit IFs never leave the
-executors; the driver collects one SE per key and, with the bootstrap,
-one biters × keys draw matrix.
+Each spec is thus a weight vector θ̃ over the fit's moment columns z
+(the cells, then each cohort's unit-weight column), and with the
+moments C = Σ_u z_u z_uᵀ and the draw sums S of the fit (mboot.py)
+
+    SE = sqrt(θ̃ᵀ C θ̃) / n,    bootstrap draws = S θ̃
+
+— all on the driver, without Spark. The fit's pg are its cohort
+columns' totals over n. A bootstrap the fit's draws do not cover
+(the fit ran without one, or with other biters) re-runs the same
+moment pass once and keeps its draws for later requests.
 """
 
 from __future__ import annotations
@@ -43,12 +47,10 @@ import math
 import warnings
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from csdid_pyspark_spark.cache import persist_rightsized
-from csdid_pyspark_spark.did.mboot import mboot, sigma_crit
+from csdid_pyspark_spark.did.mboot import boot_result, mboot, sigma_crit
 from csdid_pyspark_spark.did.preprocess import DidError
 from csdid_pyspark_spark.did.stats import norm_ppf
 
@@ -135,27 +137,6 @@ def _mix(specs: list[Spec], coefs: list[float]) -> Spec:
     return att, theta, beta
 
 
-def aggregated_if(spark, if_df: DataFrame, unitw: DataFrame, specs: dict[int, Spec]) -> DataFrame:
-    """(key, uh, inf) for every spec in one pass: the IF table against
-    broadcast θ plus the unit weights against broadcast β, summed by one
-    groupBy(key, uh). The caller persists it if it reads it twice."""
-    theta = spark.createDataFrame(
-        [(key, cid, w) for key, (_, th, _) in specs.items() for cid, w in th.items()],
-        "key int, cid int, theta double",
-    )
-    beta = spark.createDataFrame(
-        [(key, g, b) for key, (_, _, be) in specs.items() for g, b in be.items()],
-        "key int, g_u double, beta double",
-    )
-    cell = if_df.join(F.broadcast(theta), "cid").select(
-        "key", "uh", (F.col("theta") * F.col("inf_sc")).alias("v")
-    )
-    wif = unitw.join(F.broadcast(beta), "g_u").select(
-        "key", "uh", (F.col("w_u") * F.col("beta")).alias("v")
-    )
-    return cell.unionByName(wif).groupBy("key", "uh").agg(F.sum("v").alias("inf"))
-
-
 def compute_aggte(
     attgt,
     typec: str = "group",
@@ -188,12 +169,8 @@ def compute_aggte(
             raise DidError("missing ATT(g,t) values; set na_rm=True to drop them")
         cells = cells[cells["att"].notna()]
 
-    unitw = attgt._unit_weights()
-    pg = getattr(attgt, "_pg_cache", None)
-    if pg is None:  # one scan per estimator: every aggte type reuses it
-        pg_rows = unitw.groupBy("g_u").agg((F.sum("w_u") / n).alias("pg")).collect()
-        pg = {r["g_u"]: r["pg"] for r in pg_rows}
-        attgt._pg_cache = pg
+    mom = fr.moments
+    pg = {g: mom.total[mom.pos[k]] / n for g, k in fr.cohort_keys.items() if k in mom.pos}
 
     infos = [
         {"cid": int(r.cid), "g": float(r.g), "t": float(r.t), "att": float(r.att),
@@ -260,27 +237,25 @@ def compute_aggte(
             overall = _mix([per_key[i] for i in o_keys], [1.0 / len(o_keys)] * len(o_keys))
     specs = {**dict(enumerate(per_key)), OVERALL_KEY: overall}
 
-    # ----- step 2, one Spark pass: every key's IF, SE and bootstrap --------
-    if_u = aggregated_if(attgt.spark, fr.if_df, unitw, specs)
-    if bstrap:  # read twice: the SEs and the draws
-        if_u = persist_rightsized(if_u, known_rows=n * len(specs))[0]
-    se_rows = if_u.groupBy("key").agg(
-        (F.sqrt(F.sum(F.col("inf") * F.col("inf"))) / n).alias("se")
-    ).collect()
+    # ----- step 2, driver only: every key's SE and bootstrap from the moments
+    if bstrap and mom.S.shape[0] != biters:  # not covered by the fit's draws
+        mom = fr.moments = mboot(attgt._moment_table(fr.if_df), "key", "uh", "inf", n,
+                                 biters, alp, attgt.seed).moments
+    keys = list(specs)
+    theta = np.zeros((len(mom.keys), len(keys)))
+    for j, (_, th, be) in enumerate(specs.values()):
+        for key, w in [*th.items(), *((fr.cohort_keys[g], b) for g, b in be.items())]:
+            theta[mom.pos[key], j] += w
+    se_arr = np.sqrt(np.maximum(((mom.C @ theta) * theta).sum(axis=0), 0.0)) / n
     tiny = math.sqrt(2.220446049250313e-16) * 10
-    se = dict.fromkeys(specs, float("nan"))
-    se.update({r["key"]: float(r["se"]) for r in se_rows if r["se"] is not None and r["se"] > tiny})
+    se = {key: float(s) if s > tiny else float("nan") for key, s in zip(keys, se_arr)}
     crit = z
     if bstrap:
-        bt, n_b = if_u, n
-        if attgt.pdata.has_cluster:
-            bt, n_b = attgt._cluster_collapse(if_u, "key", "inf"), attgt._n_clusters()
-        mb = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-        if_u.unpersist()
+        mb = boot_result(mom.S @ theta, keys, mom.clusters or n, alp)
         se.update(mb.se)
         if cband and egts:
             # the uniform band covers the egt keys, not the overall
-            egt_cols = [i for i, k in enumerate(mb.keys) if k != OVERALL_KEY]
+            egt_cols = [i for i, k in enumerate(keys) if k != OVERALL_KEY]
             crit = sigma_crit(mb.bres[:, egt_cols], alp)[2]
             if not math.isfinite(crit) or crit < z:
                 warnings.warn("simultaneous critical value degenerate; reporting pointwise bands", stacklevel=2)

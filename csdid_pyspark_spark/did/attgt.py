@@ -5,9 +5,10 @@ API mirrors the reference (``ATTgt(data, yname, tname, idname, gname,
 ...).fit(est_method, base_period, bstrap)`` — reference ATTgt.py:22-52,
 233) but the execution model is one declarative plan: cached cell
 table → aggregation-pass kernels → influence functions as columns →
-distributed seeded bootstrap. No per-cell Spark actions, no dense
-n×(G·T) driver matrix (the reference's scalability cliff,
-SURVEY.md §4).
+one pass of per-unit moments (mboot.py) from which the SEs, the seeded
+bootstrap, every aggregation and the pre-test follow on the driver. No
+per-cell Spark actions, no dense n×(G·T) driver matrix (the reference's
+scalability cliff, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -18,18 +19,21 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
-from csdid_pyspark_spark.did.stats import norm_ppf
 
 from csdid_pyspark_spark.did import cells as cells_mod
 from csdid_pyspark_spark.did.kernels import estimate_custom, estimate_panel, estimate_rc
-from csdid_pyspark_spark.did.mboot import mboot
-from csdid_pyspark_spark.did.preprocess import CL, DidError, PanelData, preprocess_did
+from csdid_pyspark_spark.did.mboot import Moments, mboot, sigma_crit, unit_moments
+from csdid_pyspark_spark.did.preprocess import CL, G, ID, T, W, DidError, PanelData, preprocess_did
+from csdid_pyspark_spark.did.stats import chi2_sf, norm_ppf
 
-# Upper bound on pre-treatment cells the Wald pre-test will assemble an
-# m×m covariance for (driver O(m²), join O(m²)/unit). Real designs sit
-# at m ≤ ~100; see pretrend_test for the rationale.
-PRETREND_MAX_CELLS = 500
+# Upper bound on the moment pass's width M = cells + cohorts + 1: a task
+# holds the M×M Gram and biters×M draw sums, and one such blob reaches
+# the driver. Measured on one task (2,000 units, 999 draws): M=1024 takes
+# 0.8 s at 192 MiB peak with a 16 MiB blob; M=2048 2.2 s, 360 MiB, 48 MiB;
+# M=4096 6.4 s, 921 MiB, 159 MiB. Real designs sit at M ≤ ~200.
+MOMENT_MAX_COLS = 2048
 
 EST_METHODS = ("dr", "ipw", "reg")
 
@@ -39,6 +43,8 @@ class FitResult:
     table: pd.DataFrame  # g, t, post, att, se, lower, upper, sig
     crit_val: float
     if_df: DataFrame  # (cid, unit-hash uh, inf_sc) scaled to the unit universe
+    moments: Moments  # of the IF table's cells and the cohort weight columns
+    cohort_keys: dict[float, int]  # cohort g → its weight column's key
     cell_map: pd.DataFrame  # cid, g, t, post
     n: int
     est_method: str
@@ -113,13 +119,21 @@ class ATTgt:
         specs = cells_mod.build_cell_specs(
             pdata.tlist, pdata.glist, base_period, self.anticipation
         )
+        active_cells = sum(1 for s in specs if s.pret is not None and not s.zero)
+        width = active_cells + len(pdata.glist) + 1
+        if width > MOMENT_MAX_COLS:
+            raise DidError(
+                f"the moment pass is O(M²) in M = cells + cohorts + 1 = {width} > "
+                f"MOMENT_MAX_COLS={MOMENT_MAX_COLS}: a cohort column with unit-level "
+                f"granularity? Coarsen the time/cohort grid, or raise "
+                f"csdid_pyspark_spark.did.attgt.MOMENT_MAX_COLS to accept the cost."
+            )
         sdf = cells_mod.spec_df(self.spark, specs)
         from csdid_pyspark_spark.cache import persist_rightsized
 
         # driver-known upper bound on cell-table rows (each inference
         # unit appears at most once per active cell) — sizes the cache
         # partition count with zero extra passes (cache.py)
-        active_cells = sum(1 for s in specs if s.pret is not None and not s.zero)
         cell_bound = max(1, pdata.n * max(1, active_cells))
         if pdata.panel:
             cell_df, _ = persist_rightsized(
@@ -169,30 +183,20 @@ class ATTgt:
             known_rows=if_rows,
         )
 
-        # analytic SEs: one aggregation over the IF table
-        se_rows = if_df.groupBy("cid").agg(
-            (F.sqrt(F.sum(F.col("inf_sc") * F.col("inf_sc"))) / n).alias("se")
-        ).collect()
-        se_by_cid = {r["cid"]: r["se"] for r in se_rows}
+        # one pass over the IF table and the unit weights: the SEs here,
+        # and every aggregation and the pre-test later, come from it
+        cohort_keys = {g: -2 - j for j, g in enumerate(pdata.glist)}
+        z_df = self._moment_table(if_df)
+        mb = mboot(z_df, "key", "uh", "inf", n, self.biters, self.alp, self.seed) if bstrap else None
+        mom = mb.moments if bstrap else unit_moments(z_df, "key", "uh", "inf", 0, self.seed)
+        cids = [e.cid for e in ests if not e.skipped and e.cid in mom.pos]
         crit_val = float(norm_ppf(1 - self.alp / 2))
-
         if bstrap:
-            has_cl = self.pdata.has_cluster  # False when clustervars was just the id
-            boot_if = self._cluster_collapse(if_df) if has_cl else if_df
-            n_boot = self._n_clusters() if has_cl else n
-            mb = mboot(
-                boot_if,
-                "cid",
-                "uh",
-                "inf_sc",
-                n_boot,
-                biters=self.biters,
-                alp=self.alp,
-                seed=self.seed,
-            )
-            se_by_cid = {cid: mb.se.get(cid, float("nan")) for cid in se_by_cid}
-            if cband and math.isfinite(mb.crit_val):
-                crit_val = mb.crit_val
+            se_by_cid = {cid: mb.se[cid] for cid in cids}
+            crit = sigma_crit(mb.bres[:, [mom.pos[c] for c in cids]], self.alp)[2]
+            crit_val = crit if cband and math.isfinite(crit) else crit_val
+        else:
+            se_by_cid = {cid: math.sqrt(mom.C[mom.pos[cid], mom.pos[cid]]) / n for cid in cids}
 
         rows = []
         for s in specs:
@@ -221,6 +225,8 @@ class ATTgt:
             table=table,
             crit_val=crit_val,
             if_df=if_df,
+            moments=mom,
+            cohort_keys=cohort_keys,
             cell_map=cell_map,
             n=n,
             est_method=est_method if isinstance(est_method, str) else "custom",
@@ -233,56 +239,25 @@ class ATTgt:
         return table
 
     # ------------------------------------------------------------------
-    def _unit_weights(self) -> DataFrame:
-        """Per-inference-unit (hash, weight, cohort) table for aggte
-        weighting, aligned with the IF table's unit hashes: panel units
-        are ids (first-period slice, reference ATTgt.py:591-593), RC
-        units are observation rows."""
-        from csdid_pyspark_spark.did.preprocess import G, ID, T, W
-
-        df = self.pdata.df
-        if self.pdata.panel:
-            first_t = self.pdata.tlist[0]
-            return df.filter(F.col(T) == first_t).select(
-                F.xxhash64(ID).alias("uh"), F.col(W).alias("w_u"), F.col(G).alias("g_u")
-            )
-        return df.select(
-            F.xxhash64(ID, T).alias("uh"), F.col(W).alias("w_u"), F.col(G).alias("g_u")
-        )
-
-    def _cluster_map(self) -> DataFrame:
-        """(uh, cl): inference-unit hash → cluster, aligned with the IF
-        table's hashes (panel: per id; RC: per observation row)."""
-        from csdid_pyspark_spark.did.preprocess import CL, ID, T
-
-        if self.pdata.panel:
-            return self.pdata.df.select(
-                F.xxhash64(ID).alias("uh"), F.col(CL).alias("cl")
-            ).distinct()
-        return self.pdata.df.select(F.xxhash64(ID, T).alias("uh"), F.col(CL).alias("cl"))
-
-    def _cluster_collapse(
-        self, if_df: DataFrame, key_col: str = "cid", inf_col: str = "inf_sc"
-    ) -> DataFrame:
-        """Cluster bootstrap support: average IFs within cluster (the
-        reference's clustered path crashes on pandas-on-Spark idioms —
-        mboot.py:99-111, SURVEY.md §2.8.6)."""
-        cl_map = self._cluster_map()
-        sizes = cl_map.groupBy("cl").agg(F.count("*").alias("cl_n"))
-        return (
-            if_df.join(cl_map, "uh")
-            .groupBy(key_col, "cl")
-            .agg(F.sum(inf_col).alias("s"))
-            .join(F.broadcast(sizes), "cl")
-            .select(
-                key_col,
-                F.xxhash64("cl").alias("uh"),
-                (F.col("s") / F.col("cl_n")).alias(inf_col),
-            )
-        )
-
-    def _n_clusters(self) -> int:
-        return self.pdata.df.select(CL).distinct().count()
+    def _moment_table(self, if_df: DataFrame) -> DataFrame:
+        """The moment pass's input: the IF table (key = cid) unioned with
+        one row per inference unit — panel: id (first-period slice,
+        reference ATTgt.py:591-593); RC: observation row — holding its
+        weight w_u under its cohort's key (-2 - position in glist; -1
+        for cohorts that are not aggregated), aligned with the IF table's
+        unit hashes. Clustered, that row also carries the cluster's hash
+        and 1/size."""
+        pdata = self.pdata
+        units, uh = (pdata.df.filter(F.col(T) == pdata.tlist[0]), F.xxhash64(ID)) \
+            if pdata.panel else (pdata.df, F.xxhash64(ID, T))
+        key = -1 - F.array_position(F.array(*[F.lit(g) for g in pdata.glist]), F.col(G))
+        cluster = [
+            F.xxhash64(CL).alias("cl"),
+            (1.0 / F.count(F.lit(1)).over(Window.partitionBy(CL))).alias("cl_w"),
+        ] if pdata.has_cluster else []
+        return if_df.select(F.col("cid").alias("key"), "uh", F.col("inf_sc").alias("inf")) \
+            .unionByName(units.select(key.alias("key"), uh.alias("uh"), F.col(W).alias("inf"),
+                                      *cluster), allowMissingColumns=True)
 
     # ------------------------------------------------------------------
     def unpersist(self) -> None:
@@ -330,12 +305,9 @@ class ATTgt:
         pre-treatment ATT(g,t) vector, chi-squared with dof = rank of
         V_pre under H0.
 
-        V is assembled distributed from the long influence-function
-        table: V[ij] = sum_u IF_i(u)·IF_j(u) / n² — one self-equi-join
-        on the unit hash restricted to the m pre-treatment cells, then
-        a (cid_a, cid_b) aggregation with map-side combine; the driver
-        receives O(m²) scalars, never a unit-length vector, so the
-        test costs the same at 20M rows as at 20k. Singular V_pre
+        V is the fit's per-unit Gram restricted to the m pre-treatment
+        cells, V = C_pre / n² (C = Σ_u IF_u IF_uᵀ, mboot.py): no Spark
+        job, and the same cost at 20M rows as at 20k. Singular V_pre
         (collinear pre-cells) falls back to the pseudo-inverse with
         dof = rank, flagged in the result.
 
@@ -352,45 +324,10 @@ class ATTgt:
         if pre.empty:
             return {"W": float("nan"), "dof": 0, "pvalue": float("nan"),
                     "n_pre": 0, "singular": False}
-        cids = [int(c) for c in pre["cid"]]
         att = pre["att"].to_numpy()
-        m = len(cids)
-        # The V assembly below collects O(m²) covariance scalars and the
-        # unit-hash self-join carries m² cell pairs per unit. Real
-        # staggered designs have m = #pre-treatment (g,t) cells ≤ ~100
-        # (|G|·|T| bounded), so this is driver-trivial — but a caller
-        # who mistakes cells for units (or feeds a degenerate design
-        # with thousands of cohorts) should hit a clear wall, not a
-        # silent multi-GB driver collect. Same discipline as
-        # operators/dedup.py::EXACT_PAIRS_LIMIT.
-        if m > PRETREND_MAX_CELLS:
-            raise DidError(
-                f"pretrend_test covariance is O(m²) in the number of "
-                f"pre-treatment cells; got m={m} > {PRETREND_MAX_CELLS}. "
-                f"A design with this many (g,t) pre-cells is almost "
-                f"certainly mis-specified (cohort column with unit-level "
-                f"granularity?). Coarsen the time/cohort grid, or raise "
-                f"csdid_pyspark_spark.did.attgt.PRETREND_MAX_CELLS to "
-                f"accept the cost explicitly."
-            )
-        a = fr.if_df.filter(F.col("cid").isin(cids)).select(
-            F.col("cid").alias("ca"), "uh", F.col("inf_sc").alias("ia")
-        )
-        b = fr.if_df.filter(F.col("cid").isin(cids)).select(
-            F.col("cid").alias("cb"), "uh", F.col("inf_sc").alias("ib")
-        )
-        rows = (
-            a.join(b, "uh")
-            .filter(F.col("ca") <= F.col("cb"))
-            .groupBy("ca", "cb")
-            .agg(F.sum(F.col("ia") * F.col("ib")).alias("s"))
-            .collect()
-        )
-        pos = {c: i for i, c in enumerate(cids)}
-        V = np.zeros((m, m))
-        for r in rows:
-            i, j = pos[r["ca"]], pos[r["cb"]]
-            V[i, j] = V[j, i] = r["s"] / (fr.n * fr.n)
+        m = len(pre)
+        at = [fr.moments.pos[int(c)] for c in pre["cid"]]
+        V = fr.moments.C[np.ix_(at, at)] / (fr.n * fr.n)
         singular = False
         try:
             sol = np.linalg.solve(V, att)
@@ -403,8 +340,6 @@ class ATTgt:
             sol = np.linalg.pinv(V) @ att
             dof = int(np.linalg.matrix_rank(V))
         W = float(att @ sol)
-        from csdid_pyspark_spark.did.stats import chi2_sf
-
         pvalue = chi2_sf(W, dof) if dof > 0 and np.isfinite(W) else float("nan")
         return {"W": W, "dof": dof, "pvalue": pvalue, "n_pre": m,
                 "singular": singular}
@@ -412,8 +347,10 @@ class ATTgt:
     # ------------------------------------------------------------------
     def compute_aggte(self, typec: str = "group", **kwargs):
         """Aggregate the fitted ATT(g,t) table. Every egt key and the
-        overall ATT come out of one Spark pass over the IF table, with
-        one bootstrap call over all of them when bootstrapping
+        overall ATT is a weight vector over the fit's moment columns, so
+        its SE and bootstrap draws follow from the stored moments with no
+        Spark job; only a bootstrap the fit's draws do not cover (no
+        bootstrap at fit, or other biters) re-runs the moment pass once
         (aggte_ops). Results are memoized per (typec, kwargs): an
         aggregation is a pure function of the fit, and real sessions
         request the same one repeatedly (table + plot + bands), so a

@@ -1,13 +1,28 @@
-"""Distributed, deterministic multiplier bootstrap.
+"""Per-unit moments of an influence-function table, and the seeded
+multiplier bootstrap built on them.
 
-The reference draws unseeded Rademacher weights on the driver with
-joblib (reference mboot.py:17-61; nondeterministic run-to-run — its own
-notebooks report different SEs per run, SURVEY.md §4). Here each draw's
-weight for a unit is a seeded splitmix64 hash of (unit, draw), so
-results are exactly reproducible, and the heavy multiply-accumulate
-runs inside ``mapInPandas``: every partition emits only a
-(draws × columns) partial matrix, which one shuffle reduces. Driver
-memory is O(biters · columns) — never O(n).
+Every SE, bootstrap draw and covariance computed after a fit is a
+linear or quadratic form of the IF table. Unit u contributes a vector
+z_u over the table's keys (its value per key, zero where it has no
+row), and one ``mapInArrow`` pass over the table, partitioned and
+sorted by unit hash, accumulates
+
+    C    = Σ_u z_u z_uᵀ            (the Gram: every analytic SE)
+    t    = Σ_u z_u                 (column totals)
+    S[b] = Σ_u s_ub · a_u · z_u    (bootstrap draw sums, b < biters)
+
+with units processed in blocks by dense GEMMs, so a task holds
+O(block·M + M² + biters·M) for M keys. The sign s_ub is a seeded
+splitmix64 hash of (unit, draw), drawn once per unit, so results are
+reproducible whatever the partitioning (the reference draws unseeded
+Rademacher weights on the driver with joblib, reference mboot.py:17-61;
+its own notebooks report different SEs per run, SURVEY.md §4). A table
+that also carries each unit's cluster — columns ``cl`` (cluster hash)
+and ``cl_w`` (1/cluster size) on at least one of the unit's rows —
+draws one sign per cluster and applies it with weight a_u = 1/n_cl
+(a_u = 1 otherwise). The per-partition sums are added on one executor
+and a single (M² + M + biters·M)-value blob reaches the driver: never
+O(n).
 
 Quantile semantics match the reference exactly (inverted-CDF for both
 the IQR-based sigma and the sup-t critical value, mboot.py:128-137).
@@ -16,28 +31,24 @@ the IQR-based sigma and the sup-t critical value, mboot.py:128-137).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from csdid_pyspark_spark.did.stats import norm_ppf
 
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("b", IntegerType(), False),
-        StructField("k", LongType(), False),
-        StructField("s", DoubleType(), False),
-    ]
-)
+_BLOB = "keys binary, vals binary"
+# doubles in one dense block of units × keys (or units × draws): 8 MiB
+_BLOCK_VALUES = 1 << 20
 
 
-def _splitmix_sign(uh: np.ndarray, b: int, seed: int) -> np.ndarray:
-    """Deterministic ±1 per (unit-hash, draw). uint64 wraparound is the
-    point of the mixing arithmetic — suppress the overflow warning."""
+def _splitmix_sign(uh: np.ndarray, b, seed: int) -> np.ndarray:
+    """Deterministic ±1 per (unit-hash, draw); broadcasts over arrays of
+    both. uint64 wraparound is the point of the mixing arithmetic —
+    suppress the overflow warning."""
     with np.errstate(over="ignore"):
         z = (uh.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15) * np.uint64(b + 1)
              + np.uint64(0xD1B54A32D192ED03) * np.uint64(seed + 1))
@@ -47,67 +58,138 @@ def _splitmix_sign(uh: np.ndarray, b: int, seed: int) -> np.ndarray:
     return np.where((z & np.uint64(1)).astype(bool), 1.0, -1.0)
 
 
-def bootstrap_draws(
-    if_df: DataFrame,
-    key_col: str,
-    unit_hash_col: str,
-    inf_col: str,
-    biters: int,
-    seed: int,
-    block: int = 100,
-) -> pd.DataFrame:
-    """Compute S[b, k] = Σ_units sign(unit,b) · inf(unit,k) for all
-    draws b and IF columns k. Returns a pandas frame (b, k, s) of size
-    biters × |keys| — tiny; everything larger stays on executors."""
+@dataclass
+class Moments:
+    keys: np.ndarray  # sorted int64 key of each column of z
+    C: np.ndarray  # M × M
+    total: np.ndarray  # M
+    S: np.ndarray  # biters × M
+    clusters: int | None  # sign groups Σ_u a_u of a clustered table, else None
+    pos: dict[int, int] = field(init=False)
 
+    def __post_init__(self):
+        self.pos = {int(k): i for i, k in enumerate(self.keys)}
+
+
+class _Sums:
+    """Running C, t, S and Σ a_u over a key set that widens as keys
+    appear."""
+
+    def __init__(self, biters: int):
+        self.keys = np.empty(0, np.int64)
+        self.C = np.zeros((0, 0))
+        self.total = np.zeros(0)
+        self.S = np.zeros((biters, 0))
+        self.groups = 0.0
+
+    def cols(self, keys: np.ndarray) -> np.ndarray:
+        """Column of each key, widening the sums to keys not seen yet."""
+        new = np.union1d(self.keys, keys)
+        if len(new) > len(self.keys):
+            old = np.searchsorted(new, self.keys)
+            C = np.zeros((len(new), len(new)))
+            C[np.ix_(old, old)] = self.C
+            total = np.zeros(len(new))
+            total[old] = self.total
+            S = np.zeros((self.S.shape[0], len(new)))
+            S[:, old] = self.S
+            self.keys, self.C, self.total, self.S = new, C, total, S
+        return np.searchsorted(self.keys, keys)
+
+    def add(self, keys, C, total, S, groups) -> None:
+        at = self.cols(keys)
+        self.C[np.ix_(at, at)] += C
+        self.total[at] += total
+        self.S[:, at] += S
+        self.groups += groups
+
+    def blob(self) -> pa.RecordBatch:
+        vals = np.concatenate([self.C.ravel(), self.total, self.S.ravel(), [self.groups]])
+        return pa.RecordBatch.from_pydict({"keys": [self.keys.tobytes()], "vals": [vals.tobytes()]})
+
+    @staticmethod
+    def unblob(keys: bytes, vals: bytes, biters: int) -> tuple:
+        k = np.frombuffer(keys, np.int64).copy()
+        v = np.frombuffer(vals, np.float64).copy()
+        m = len(k)
+        return (k, v[: m * m].reshape(m, m), v[m * m : m * m + m],
+                v[m * m + m : -1].reshape(biters, m), v[-1])
+
+    def add_units(self, k, uh, v, cl, cl_ok, cl_w, biters: int, seed: int) -> None:
+        """Fold rows sorted by unit hash, holding every row of their
+        units, into the sums, one block of units at a time."""
+        if not len(uh):
+            return
+        col = self.cols(k)
+        m = len(self.keys)
+        first = np.flatnonzero(np.r_[True, uh[1:] != uh[:-1]])
+        unit = np.cumsum(np.r_[False, uh[1:] != uh[:-1]])
+        # per-unit sign hash and weight: the unit's own, or its cluster's
+        sh, a = uh[first].copy(), np.ones(len(first))
+        sh[unit[cl_ok]], a[unit[cl_ok]] = cl[cl_ok], cl_w[cl_ok]
+        self.groups += a.sum()
+        step = max(1, _BLOCK_VALUES // max(m, biters))
+        draws = np.arange(biters)
+        for u0 in range(0, len(first), step):
+            u1 = min(u0 + step, len(first))
+            r0, r1 = first[u0], first[u1] if u1 < len(first) else len(uh)
+            Z = np.bincount((unit[r0:r1] - u0) * m + col[r0:r1], weights=v[r0:r1],
+                            minlength=(u1 - u0) * m).reshape(u1 - u0, m)
+            self.C += Z.T @ Z
+            self.total += Z.sum(axis=0)
+            if biters:
+                signs = _splitmix_sign(sh[u0:u1, None], draws[None, :], seed)
+                self.S += (signs * a[u0:u1, None]).T @ Z
+
+
+def _columns(rb: pa.RecordBatch) -> list[np.ndarray]:
+    cl = rb.column("cl")
+    return [rb.column("k").to_numpy(), rb.column("uh").to_numpy(),
+            rb.column("v").to_numpy(zero_copy_only=False),
+            cl.fill_null(0).to_numpy(), cl.is_valid().to_numpy(zero_copy_only=False),
+            rb.column("cl_w").fill_null(0.0).to_numpy()]
+
+
+def unit_moments(
+    if_df: DataFrame, key_col: str, unit_hash_col: str, inf_col: str, biters: int, seed: int
+) -> Moments:
+    """C, t and S (module docstring) of a (key, unit hash, value) table,
+    in one pass."""
+    clustered = "cl" in if_df.columns
     df = if_df.select(
         F.col(key_col).cast("long").alias("k"),
         F.col(unit_hash_col).cast("long").alias("uh"),
         F.col(inf_col).cast("double").alias("v"),
-    )
+        (F.col("cl") if clustered else F.lit(None)).cast("long").alias("cl"),
+        (F.col("cl_w") if clustered else F.lit(None)).cast("double").alias("cl_w"),
+    ).repartition("uh").sortWithinPartitions("uh")
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # accumulate a (biters × keys-seen) partial per partition,
-        # streaming Arrow batches so memory stays O(batch·block)
-        acc: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if pdf.empty:
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sums, held = _Sums(biters), None
+        for rb in batches:
+            cols = _columns(rb)
+            if held is not None:
+                cols = [np.concatenate(p) for p in zip(held, cols)]
+            if not len(cols[1]):
                 continue
-            order = np.argsort(pdf["k"].to_numpy(), kind="stable")
-            uh = pdf["uh"].to_numpy()[order]
-            v = pdf["v"].to_numpy()[order]
-            keys = pdf["k"].to_numpy()[order]
-            uniq, starts = np.unique(keys, return_index=True)
-            for k in uniq:
-                if int(k) not in acc:
-                    acc[int(k)] = np.zeros(biters)
-            for b0 in range(0, biters, block):
-                b1 = min(b0 + block, biters)
-                signs = np.empty((len(uh), b1 - b0))
-                for j, b in enumerate(range(b0, b1)):
-                    signs[:, j] = _splitmix_sign(uh, b, seed)
-                weighted = signs * v[:, None]  # rows × block
-                sums = np.add.reduceat(weighted, starts, axis=0)  # keys × block
-                for i, k in enumerate(uniq):
-                    acc[int(k)][b0:b1] += sums[i]
-        if not acc:
-            return
-        bs, ks, ss = [], [], []
-        for k, col in acc.items():
-            bs.extend(range(biters))
-            ks.extend([k] * biters)
-            ss.extend(col)
-        yield pd.DataFrame(
-            {"b": np.array(bs, dtype=np.int32), "k": np.array(ks, dtype=np.int64), "s": ss}
-        )
+            # the last unit may continue in the next batch: hold it back
+            cut = np.searchsorted(cols[1], cols[1][-1])
+            sums.add_units(*[c[:cut] for c in cols], biters, seed)
+            held = [c[cut:] for c in cols]
+        if held is not None:
+            sums.add_units(*held, biters, seed)
+        yield sums.blob()
 
-    reduced = (
-        df.mapInPandas(partials, _PARTIAL_SCHEMA)
-        .groupBy("b", "k")
-        .agg(F.sum("s").alias("s"))
-        .toPandas()
-    )
-    return reduced
+    def reduce(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sums = _Sums(biters)
+        for rb in batches:
+            for keys, vals in zip(rb.column("keys").to_pylist(), rb.column("vals").to_pylist()):
+                sums.add(*_Sums.unblob(keys, vals, biters))
+        yield sums.blob()
+
+    out = df.mapInArrow(partial, _BLOB).repartition(1).mapInArrow(reduce, _BLOB).toArrow()
+    *sums, groups = _Sums.unblob(out["keys"][0].as_py(), out["vals"][0].as_py(), biters)
+    return Moments(*sums, round(groups) if clustered else None)
 
 
 @dataclass
@@ -118,6 +200,7 @@ class MbootResult:
     keys: list[int]
     V: np.ndarray | None = None  # bootstrap covariance over non-degenerate keys
     # (reference mboot.py:125 — np.cov(bres); may be defective in degenerate cases)
+    moments: Moments | None = None  # the pass the draws came from
 
 
 def sigma_crit(bres: np.ndarray, alp: float) -> tuple[np.ndarray, np.ndarray, float]:
@@ -139,6 +222,25 @@ def sigma_crit(bres: np.ndarray, alp: float) -> tuple[np.ndarray, np.ndarray, fl
     return ndg, sig, crit_val
 
 
+def boot_result(S: np.ndarray, keys, n: int, alp: float) -> MbootResult:
+    """Bootstrap SEs, sup-t critical value and covariance of draw sums
+    S (biters × keys) over a universe of n units (or clusters):
+    bres = sqrt(n) · S / n — reference mboot.py:103."""
+    bres = S * (np.sqrt(n) / n)
+    ndg, sig, crit_val = sigma_crit(bres, alp)
+    b_use = bres[:, ndg]
+    se_arr = np.full(len(keys), np.nan)
+    se_arr[ndg] = sig / np.sqrt(n)
+    V = np.cov(b_use, rowvar=False) if b_use.shape[1] else None
+    return MbootResult(
+        se={int(k): float(se_arr[i]) for i, k in enumerate(keys)},
+        crit_val=crit_val,
+        bres=bres,
+        keys=[int(k) for k in keys],
+        V=V,
+    )
+
+
 def mboot(
     if_df: DataFrame,
     key_col: str,
@@ -150,26 +252,10 @@ def mboot(
     seed: int = 42,
 ) -> MbootResult:
     """Multiplier bootstrap over an IF table whose influence values are
-    already scaled to the full unit universe (zeros implicit).
-
-    bres[b,k] = sqrt(n) · (1/n) Σ_u v_ub · IF_u,k  — reference
-    mboot.py:103 — then IQR-based sigma, sup-t crit value, se."""
-    draws = bootstrap_draws(if_df, key_col, unit_hash_col, inf_col, biters, seed)
-    keys = sorted(draws["k"].unique())
-    kpos = {k: i for i, k in enumerate(keys)}
-    bres = np.zeros((biters, len(keys)))
-    bres[draws["b"].to_numpy(), draws["k"].map(kpos).to_numpy()] = draws["s"].to_numpy()
-    bres *= np.sqrt(n) / n
-
-    ndg, sig, crit_val = sigma_crit(bres, alp)
-    b_use = bres[:, ndg]
-    se_arr = np.full(len(keys), np.nan)
-    se_arr[ndg] = sig / np.sqrt(n)
-    V = np.cov(b_use, rowvar=False) if b_use.shape[1] else None
-    return MbootResult(
-        se={k: float(se_arr[i]) for i, k in enumerate(keys)},
-        crit_val=crit_val,
-        bres=bres,
-        keys=[int(k) for k in keys],
-        V=V,
-    )
+    already scaled to the full unit universe of n units (zeros
+    implicit); a clustered table's universe is its clusters, which the
+    pass counts. The result carries the pass's moments."""
+    mom = unit_moments(if_df, key_col, unit_hash_col, inf_col, biters, seed)
+    out = boot_result(mom.S, mom.keys, mom.clusters or n, alp)
+    out.moments = mom
+    return out

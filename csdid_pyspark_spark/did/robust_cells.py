@@ -575,9 +575,10 @@ def sunab_event_band_frame(
     derivation on :func:`sunab_event_se_frame`.
 
     Scale shape: the ψ table is the data-scale object and stays on
-    executors — mboot's mapInPandas emits (biters × |e|) partials per
-    partition, one shuffle reduces them; driver memory is
-    O(biters·|e|). Deterministic (seeded hashes) → pinned golden.
+    executors — mboot's one moment pass sums per-unit draw products
+    (biters × |e|) and the |e|×|e| Gram per partition and adds them on
+    an executor; driver memory is O(biters·|e| + |e|²). Deterministic
+    (seeded hashes) → pinned golden.
 
     Output: (e, att_iw, se_boot, crit_val, band_lo, band_hi,
     n_treated), ordered by e."""

@@ -788,6 +788,10 @@ def winnow_fingerprints(
     )
 
 
+class ComponentsNotConverged(RuntimeError):
+    """Label propagation ran out of rounds before a fixpoint."""
+
+
 def components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -803,7 +807,9 @@ def components(
     deep graphs swap in large-star/small-star (Kiveris et al.) with the
     same join primitives. Returns (node, comp) with comp = min node id
     of the component; only nodes that appear in ``pairs`` are emitted
-    (singletons are their own trivial component).
+    (singletons are their own trivial component). Raises
+    ``ComponentsNotConverged`` when ``max_iter`` rounds end without a
+    fixpoint, rather than returning unconverged labels.
     """
     import math as _math
 
@@ -871,5 +877,10 @@ def components(
         labels = new
         if not changed:
             break
+    else:
+        edges.unpersist()
+        raise ComponentsNotConverged(
+            f"label propagation did not reach a fixpoint in max_iter={max_iter} rounds"
+        )
     edges.unpersist()
     return labels.select("node", "comp")

@@ -347,22 +347,21 @@ def test_pretrend_test_null_vs_violation(spark):
     assert bad_res["W"] > null_res["W"]
 
 
-def test_pretrend_cell_bound_guard(spark, monkeypatch):
-    """A degenerate design with more pre-cells than the O(m²) guard
-    allows must fail loudly BEFORE assembling the covariance (the
-    failure mode is a cohort column with unit-level granularity that
-    would otherwise drive a silent multi-GB driver collect)."""
+def test_moment_width_bound_guard(spark, monkeypatch):
+    """A design wider than the moment pass allows (cells + cohorts + 1,
+    whose Gram is O(M²)) must fail loudly in fit() BEFORE any pass runs
+    (the failure mode is a cohort column with unit-level granularity
+    that would otherwise drive a silent multi-GB driver collect)."""
     from csdid_pyspark_spark.did import attgt as attgt_mod
     from csdid_pyspark_spark.did.preprocess import DidError
 
     pdf = make_panel_dgp(n_units=400, periods=(1, 2, 3, 4, 5), cohorts=(0, 4, 5), seed=7)
-    est = _fit(spark, pdf)
-    monkeypatch.setattr(attgt_mod, "PRETREND_MAX_CELLS", 1)
-    with pytest.raises(DidError, match="O\\(m²\\)"):
-        est.pretrend_test()
-    # restoring the real bound, the same fitted estimator tests fine
-    monkeypatch.setattr(attgt_mod, "PRETREND_MAX_CELLS", 500)
-    assert est.pretrend_test()["n_pre"] > 1
+    monkeypatch.setattr(attgt_mod, "MOMENT_MAX_COLS", 1)
+    with pytest.raises(DidError, match="MOMENT_MAX_COLS"):
+        _fit(spark, pdf)
+    # restoring the real bound, the same design fits and tests fine
+    monkeypatch.undo()
+    assert _fit(spark, pdf).pretrend_test()["n_pre"] > 1
 
 
 def test_pretrend_requires_fit(spark, dgp):

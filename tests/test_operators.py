@@ -278,6 +278,17 @@ def test_components_chain_and_cliques(spark):
     assert got[300] == 300 and got[301] == 300
 
 
+def test_components_raises_when_rounds_run_out(spark):
+    """A chain longer than max_iter cannot reach its fixpoint in time:
+    components raises instead of returning unconverged labels. The same
+    chain converges with the default max_iter."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(8)], "id_a long, id_b long")
+    with pytest.raises(dedup.ComponentsNotConverged, match="max_iter=3"):
+        dedup.components(pairs, max_iter=3)
+    got = {r["node"]: r["comp"] for r in dedup.components(pairs).collect()}
+    assert got == dict.fromkeys(range(9), 0)
+
+
 def test_jaccard_max_df_cap(spark):
     """High caps are exact; cap=1 removes every shared shingle (so no
     candidate pairs survive) — the skew-bounding knob works end-to-end."""

@@ -5,6 +5,7 @@ fail before any benchmark notices."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from csdid_pyspark_spark.queries import ALL_QUERIES as QUERIES
@@ -87,50 +88,71 @@ def test_asof_join_single_window_shuffle(spark, sf_dir):
     assert "Window" in plan
 
 
-def test_dynamic_aggte_single_pass_over_if_table(spark):
-    """Every aggregation key (each event time and the overall ATT) comes
-    out of ONE pass over the IF table, no matter how many keys there
-    are — the single-pass design that keeps aggte O(|IF|) instead of
-    O(|egt|·|IF|). Guarded at the plan level: one cache scan, cell and
-    wif weights joined via broadcast only, and a single non-broadcast
-    shuffle, the (key, uh) reduction — no sort-merge join."""
-    import pandas as pd
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, counted through a job group."""
+    import uuid
 
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs started by one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _did_fit(spark, bstrap):
     from csdid_pyspark_spark.did import ATTgt
-    from csdid_pyspark_spark.did.aggte_ops import OVERALL_KEY, aggregated_if
+    from tests.test_did_parity import make_panel_dgp
 
-    rows = []
-    for i in range(120):
-        g = float([0, 3, 4][i % 3])
-        for t in (1, 2, 3, 4):
-            tau = 1.0 if 0 < g <= t else 0.0
-            rows.append((i, t, g, 0.1 * t + tau + (i % 7) * 0.01))
-    sdf = spark.createDataFrame(pd.DataFrame(rows, columns=["id", "t", "g", "y"]))
-    est = ATTgt(sdf, "y", "t", "id", "g", allow_unbalanced_panel=False)
-    est.fit("reg")
+    pdf = make_panel_dgp(n_units=120, periods=(1, 2, 3, 4, 5), cohorts=(0, 3, 4), seed=5)
+    est = ATTgt(spark.createDataFrame(pdf), "Y", "period", "id", "G", biters=99, seed=2,
+                allow_unbalanced_panel=False)
+    est.fit("reg", bstrap=bstrap, cband=bstrap)
+    return est
 
-    cm = est.fit_result.cell_map
-    specs = {
-        int(e): (0.5, {int(r.cid): 0.5 for r in cm[cm.t - cm.g == e].itertuples()}, {3.0: 0.1})
-        for e in sorted(set(cm.t - cm.g))
-    }
-    specs[OVERALL_KEY] = (0.5, {int(cm.cid.iloc[0]): 1.0}, {3.0: 0.1, 4.0: -0.1})
-    # aggregated_if returns the lazy plan; compute_aggte persists it
-    if_u = aggregated_if(spark, est.fit_result.if_df, est._unit_weights(), specs)
-    plan = if_u._jdf.queryExecution().executedPlan().toString()
-    est.unpersist()
-    # the cached IF table (columns cid, uh, inf_sc) is scanned exactly
-    # once inside the whole nested plan
-    if_scans = [
-        ln for ln in plan.splitlines()
-        if "InMemoryTableScan" in ln and "inf_sc" in ln
-    ]
-    assert len(if_scans) == 1, plan
-    # weights join via broadcast; the one live shuffle keyed on the
-    # aggregation key is the (key, uh) reduction — lineage exchanges
-    # inside the cached IF relation are replay text, keyed on (cid,_id)
-    assert plan.count("Exchange hashpartitioning(key#") == 1, plan
-    assert plan.count("SortMergeJoin") == 0, plan
+
+def test_aggte_and_pretrend_run_no_spark_job_after_bootstrapped_fit(spark):
+    """Every aggregation type, bootstrapped with the fit's draws, and the
+    pre-test are NumPy over the fit's per-unit moments: zero Spark jobs."""
+    est = _did_fit(spark, bstrap=True)
+    try:
+        def post_fit():
+            for typec in ("simple", "group", "calendar", "dynamic"):
+                est.compute_aggte(typec, bstrap=True, cband=True)
+            est.pretrend_test()
+
+        assert _jobs_started(spark, post_fit) == 0
+    finally:
+        est.unpersist()
+
+
+def test_uncovered_aggte_bootstrap_runs_one_moment_pass(spark, monkeypatch):
+    """After a fit without bootstrap, a bootstrapped aggregation re-runs
+    the moment pass exactly once, keeps its draws for the next request,
+    and equals the bootstrapped fit's aggregation."""
+    from csdid_pyspark_spark.did import mboot as mboot_mod
+
+    passes = []
+    real = mboot_mod.unit_moments
+    monkeypatch.setattr(mboot_mod, "unit_moments", lambda *a, **k: passes.append(1) or real(*a, **k))
+    boot, plain = _did_fit(spark, bstrap=True), _did_fit(spark, bstrap=False)
+    try:
+        passes.clear()
+        got = plain.compute_aggte("dynamic", bstrap=True, cband=True)
+        assert len(passes) == 1
+        plain.compute_aggte("group", bstrap=True, cband=True)
+        assert len(passes) == 1
+        want = boot.compute_aggte("dynamic")
+        np.testing.assert_allclose(
+            [got.overall_att, got.overall_se, got.crit_val_egt, *got.att_egt, *got.se_egt],
+            [want.overall_att, want.overall_se, want.crit_val_egt, *want.att_egt, *want.se_egt],
+            rtol=1e-9,
+        )
+    finally:
+        boot.unpersist()
+        plain.unpersist()
 
 
 def test_q4_semi_join_with_nonequi_condition(spark, sf_dir):
@@ -333,31 +355,27 @@ def test_attgt_cell_spec_join_broadcast_one_shuffle(spark):
 
 
 def test_attgt_if_table_cached_and_se_pass_reads_cache(spark):
-    """fit() persists the influence-function table; every SE/aggte pass
+    """fit() persists the influence-function table; the moment pass that
+    yields the SEs (and, on a bootstrap fit's cache miss, aggte's draws)
     must re-read that InMemoryRelation, not re-derive the kernel
-    lineage (which would multiply the fixed pass count the design
-    promises). Gated on the live SE aggregation plan."""
-    from pyspark.sql import functions as F
-
+    lineage. Gated on the plan of the pass's input table."""
     from csdid_pyspark_spark.did import ATTgt
 
     est = ATTgt(_synth_panel(spark), "y", "t", "id", "g", allow_unbalanced_panel=False)
     est.fit("reg")
     if_df = est.fit_result.if_df
     assert if_df.storageLevel.useMemory, "IF table must be persisted after fit()"
-    se_agg = if_df.groupBy("cid").agg(
-        (F.sqrt(F.sum(F.col("inf_sc") * F.col("inf_sc"))) / est.fit_result.n).alias("se")
-    )
-    plan = se_agg._jdf.queryExecution().executedPlan().toString()
+    plan = est._moment_table(if_df)._jdf.queryExecution().executedPlan().toString()
     est.unpersist()
     # Everything after the first InMemoryRelation is the cached table's
-    # stored-lineage replay text (it embeds the whole kernel plan);
-    # the LIVE pass is the segment before it: partial agg -> one cid
-    # shuffle -> final agg, reading the cache, no joins.
+    # stored-lineage replay text (it embeds the whole kernel plan); the
+    # LIVE pass is the segment before it: a scan of the cache, no joins,
+    # no shuffle.
     head = plan.split("InMemoryRelation", 1)[0]
     assert "InMemoryTableScan" in head, plan
-    assert head.count("Exchange hashpartitioning") <= 1, plan
+    assert "Exchange" not in head, plan
     assert "Join" not in head, plan
+
 
 def test_incremental_dedup_caps_and_prunes_corpus_side(spark, sf_dir):
     """Incremental dedup's physical plan must show (a) the broadcast
