@@ -239,8 +239,8 @@ def compute_aggte(
 
     # ----- step 2, driver only: every key's SE and bootstrap from the moments
     if bstrap and mom.S.shape[0] != biters:  # not covered by the fit's draws
-        mom = fr.moments = mboot(attgt._moment_table(fr.if_df), "key", "uh", "inf", n,
-                                 biters, alp, attgt.seed).moments
+        z_df = attgt._moment_table(fr.if_df, fr.cohort_keys)
+        mom = fr.moments = mboot(z_df, "key", "uh", "inf", n, biters, alp, attgt.seed).moments
     keys = list(specs)
     theta = np.zeros((len(mom.keys), len(keys)))
     for j, (_, th, be) in enumerate(specs.values()):

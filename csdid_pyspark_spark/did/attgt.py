@@ -186,9 +186,9 @@ class ATTgt:
         # one pass over the IF table and the unit weights: the SEs here,
         # and every aggregation and the pre-test later, come from it
         cohort_keys = {g: -2 - j for j, g in enumerate(pdata.glist)}
-        z_df = self._moment_table(if_df)
-        mb = mboot(z_df, "key", "uh", "inf", n, self.biters, self.alp, self.seed) if bstrap else None
-        mom = mb.moments if bstrap else unit_moments(z_df, "key", "uh", "inf", 0, self.seed)
+        z = self._moment_table(if_df, cohort_keys)
+        mb = mboot(z, "key", "uh", "inf", n, self.biters, self.alp, self.seed) if bstrap else None
+        mom = mb.moments if bstrap else unit_moments(z, "key", "uh", "inf", 0, self.seed)
         cids = [e.cid for e in ests if not e.skipped and e.cid in mom.pos]
         crit_val = float(norm_ppf(1 - self.alp / 2))
         if bstrap:
@@ -239,18 +239,18 @@ class ATTgt:
         return table
 
     # ------------------------------------------------------------------
-    def _moment_table(self, if_df: DataFrame) -> DataFrame:
+    def _moment_table(self, if_df: DataFrame, cohort_keys: dict[float, int]) -> DataFrame:
         """The moment pass's input: the IF table (key = cid) unioned with
         one row per inference unit — panel: id (first-period slice,
         reference ATTgt.py:591-593); RC: observation row — holding its
-        weight w_u under its cohort's key (-2 - position in glist; -1
-        for cohorts that are not aggregated), aligned with the IF table's
-        unit hashes. Clustered, that row also carries the cluster's hash
-        and 1/size."""
+        weight w_u under its cohort's key (-1 for cohorts that are not
+        aggregated), aligned with the IF table's unit hashes. Clustered,
+        that row also carries the cluster's hash and 1/size."""
         pdata = self.pdata
         units, uh = (pdata.df.filter(F.col(T) == pdata.tlist[0]), F.xxhash64(ID)) \
             if pdata.panel else (pdata.df, F.xxhash64(ID, T))
-        key = -1 - F.array_position(F.array(*[F.lit(g) for g in pdata.glist]), F.col(G))
+        by_cohort = F.create_map(*[F.lit(x) for g, k in cohort_keys.items() for x in (g, k)])
+        key = F.coalesce(by_cohort[F.col(G)], F.lit(-1))
         cluster = [
             F.xxhash64(CL).alias("cl"),
             (1.0 / F.count(F.lit(1)).over(Window.partitionBy(CL))).alias("cl_w"),

@@ -136,7 +136,8 @@ def test_uncovered_aggte_bootstrap_runs_one_moment_pass(spark, monkeypatch):
 
     passes = []
     real = mboot_mod.unit_moments
-    monkeypatch.setattr(mboot_mod, "unit_moments", lambda *a, **k: passes.append(1) or real(*a, **k))
+    monkeypatch.setattr(mboot_mod, "unit_moments",
+                        lambda *a, **k: passes.append(1) or real(*a, **k))
     boot, plain = _did_fit(spark, bstrap=True), _did_fit(spark, bstrap=False)
     try:
         passes.clear()
@@ -365,7 +366,8 @@ def test_attgt_if_table_cached_and_se_pass_reads_cache(spark):
     est.fit("reg")
     if_df = est.fit_result.if_df
     assert if_df.storageLevel.useMemory, "IF table must be persisted after fit()"
-    plan = est._moment_table(if_df)._jdf.queryExecution().executedPlan().toString()
+    z_df = est._moment_table(if_df, est.fit_result.cohort_keys)
+    plan = z_df._jdf.queryExecution().executedPlan().toString()
     est.unpersist()
     # Everything after the first InMemoryRelation is the cached table's
     # stored-lineage replay text (it embeds the whole kernel plan); the
