@@ -357,8 +357,8 @@ def test_attgt_cell_spec_join_broadcast_one_shuffle(spark):
 
 def test_attgt_if_table_cached_and_se_pass_reads_cache(spark):
     """fit() persists the influence-function table; the moment pass that
-    yields the SEs (and, on a bootstrap fit's cache miss, aggte's draws)
-    must re-read that InMemoryRelation, not re-derive the kernel
+    yields the SEs (and re-runs for a bootstrap the fit's draws do not
+    cover) must re-read that InMemoryRelation, not re-derive the kernel
     lineage. Gated on the plan of the pass's input table."""
     from csdid_pyspark_spark.did import ATTgt
 
