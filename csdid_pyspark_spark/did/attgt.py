@@ -4,8 +4,8 @@ effects, Spark-native.
 API mirrors the reference (``ATTgt(data, yname, tname, idname, gname,
 ...).fit(est_method, base_period, bstrap)`` — reference ATTgt.py:22-52,
 233) but the execution model is one declarative plan: cached cell
-table → aggregation-pass kernels → influence functions as columns →
-one pass of per-unit moments (mboot.py) from which the SEs, the seeded
+table → per-cell pass kernels (did/linalg.py) → influence functions as
+rows → one pass of per-unit moments (mboot.py) from which the SEs, the seeded
 bootstrap, every aggregation and the pre-test follow on the driver. No
 per-cell Spark actions, no dense n×(G·T) driver matrix (the reference's
 scalability cliff, SURVEY.md §4).
@@ -167,18 +167,19 @@ class ATTgt:
         n = pdata.n
         est_by_cid = {e.cid: e for e in ests}
         # scale per-cell IF into the length-n universe: ×(n/n1), zeros
-        # implicit for units outside the cell (reference ATTgt.py:374-378)
-        scale_rows = [
-            (e.cid, n / e.n1 if e.n1 else 0.0) for e in ests if not e.skipped
-        ]
-        scale_df = self.spark.createDataFrame(scale_rows, "cid int, if_scale double")
+        # implicit for units outside the cell (reference ATTgt.py:374-378);
+        # the per-cell factors are a literal array indexed by cid
+        scale = [0.0] * (max((e.cid for e in ests), default=0) + 1)
+        for e in ests:
+            if not e.skipped and e.n1:
+                scale[e.cid] = n / e.n1
         # exact driver-known row count: one IF row per (cell, unit)
         if_rows = int(sum(e.n1 for e in ests if not e.skipped)) or 1
         if_df, _ = persist_rightsized(
-            if_raw.join(F.broadcast(scale_df), "cid").select(
+            if_raw.select(
                 "cid",
                 uh.alias("uh"),
-                (F.col("inf") * F.col("if_scale")).alias("inf_sc"),
+                (F.col("inf") * F.lit(scale)[F.col("cid")]).alias("inf_sc"),
             ),
             known_rows=if_rows,
         )

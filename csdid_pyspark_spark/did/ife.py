@@ -38,8 +38,8 @@ moments, |G| cohort matrices, and the final |e| rows. The rank-1
 choice is forced by the shortest pre-window (cohort g=3 has T0 = 2
 pre-periods, exactly identifying intercept + one loading); the
 preconditions (invertible per-cohort pre-window Gram, balanced pre
-rows per unit) raise loudly — same convention as the singular-design
-raise in did/linalg.py and robust_cells._req.
+rows per unit) raise loudly — same convention as the named skip of a
+singular-design cell in did/kernels.py and robust_cells._req.
 
 The reference repo (d2cml-ai/csdid-pyspark) has no factor-model
 estimator; this extends the robustness suite beyond it (Bacon, SA,

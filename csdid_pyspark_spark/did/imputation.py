@@ -38,7 +38,7 @@ absorbing the unit effects analytically:
 3. The (T-1) x (T-1) solve (baseline = earliest untreated period,
    lambda there = 0) happens driver-side on a numpy matrix of a few
    dozen entries — executor->driver traffic is O(T^2) floats,
-   independent of rows, the same contract as the estimator's Gram
+   independent of rows, the same contract as the estimator's per-cell
    passes (did/linalg.py).
 4. lambda_hat broadcasts back as a literal MAP; alpha_hat_i =
    ybar_i - mean_{s in U_i} lambda_hat_s is a higher-order-function

@@ -3,16 +3,22 @@ panel and repeated cross-section).
 
 The reference delegates these to the external d2cml-ai/DRDID NumPy
 package after collecting every column to the driver (reference
-ATTgt.py:346-372, 424-432; SURVEY.md §2.6 K1-K3). Here each kernel is a
-fixed number of aggregation passes over the cached cell table — all
-(g,t) cells estimated simultaneously — plus O(|cells|·p³) driver-side
-solves, and influence functions emitted as column expressions. Exact
-formula parity with ``tests/ref_drdid.py`` (same published math) is
-asserted in tests.
+ATTgt.py:346-372, 424-432; SURVEY.md §2.6 K1-K3). Here every (g,t) cell
+is estimated at once by a fixed number of per-cell passes over the
+cached cell table (did/linalg.py): pass 1 sums each cell's counts,
+means and outcome-regression Grams; the propensity logit iterates
+(``irls_logit``, one pass per iteration); for ipw and dr a final pass
+sums the propensity-weighted terms and the logit's information matrix.
+Each pass is one ``mapInArrow`` job whose per-row terms are NumPy and
+whose per-cell constants ride in the closure, followed by
+O(|cells|·p³) driver-side solves. The influence-function pass is the
+same kind of ``mapInArrow``, emitting one value per row. Exact formula
+parity with ``tests/ref_drdid.py`` (same published math) is asserted in
+tests.
 
-Data movement per fit: O(|cells| · p²) Gram scalars to the driver and
-one broadcast of O(|cells| · p) coefficients back. Nothing scales
-with the number of units.
+Data movement per fit: O(partitions · |cells| · p²) partial sums to the
+driver per pass; no shuffle, no broadcast, nothing that scales with the
+number of units.
 """
 
 from __future__ import annotations
@@ -21,20 +27,20 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csdid_pyspark_spark.did.linalg import (
+    cell_rows,
+    cell_sums,
     consts_df,
-    dot,
-    gram_aggs,
+    gram,
     inv_safe,
     irls_logit,
     sigmoid,
     solve_safe,
-    unpack_gram,
-    unpack_vec,
-    vec_aggs,
+    wx,
+    xdot,
 )
 
 PS_CLAMP = 1.0 - 1e-16
@@ -49,9 +55,79 @@ class CellEstimate:
     message: str = ""
 
 
+def _by_cell(sums: dict[str, np.ndarray], cids: list[int]) -> dict[int, dict[str, np.ndarray]]:
+    """Per-cell views of a pass's sums."""
+    return {cid: {k: v[cid] for k, v in sums.items()} for cid in cids}
+
+
+def _results(cids, n_of, skipped, consts) -> list[CellEstimate]:
+    return [
+        CellEstimate(cid, math.nan, float(n_of[cid]), True, skipped[cid]) if cid in skipped
+        else CellEstimate(cid, float(consts[cid]["att"]), float(n_of[cid]), False)
+        for cid in cids
+    ]
+
+
+def _ps(X, k):
+    return np.minimum(sigmoid(xdot(X, k["gma"])), PS_CLAMP)
+
+
 # ---------------------------------------------------------------------------
 # Panel kernels
 # ---------------------------------------------------------------------------
+
+PANEL_COLS = ["d", "w", "dy"]
+
+
+def _panel_pass1(X, c, k):
+    d, w, dy = c["d"], c["w"], c["dy"]
+    w_t, w_c = w * d, w * (1 - d)
+    return {
+        "n": np.ones_like(d), "n_tr": d, "n_co": 1 - d, "sw_t": w_t, "swdy_t": w_t * dy,
+        "m1": wx(w_t, X), "org": gram(w_c, X), "orb": wx(w_c, X) * dy[:, None],
+    }
+
+
+def _panel_passf(X, c, k):
+    d, w = c["d"], c["w"]
+    ps = _ps(X, k)
+    wc = w * ps * (1 - d) / (1 - ps)
+    resid = c["dy"] - xdot(X, k["beta"])  # beta = 0 for ipw: resid = dy
+    return {
+        "swc": wc, "swcr": wc * resid, "v2": wx(wc * resid, X), "v3": wx(wc, X),
+        "info": gram(w * ps * (1 - ps), X),
+    }
+
+
+def _panel_if(est_method):
+    def inf(X, c, k):
+        d, w, dy = c["d"], c["w"], c["dy"]
+        w_t, w_c = w * d, w * (1 - d)
+        et, ec, m_wt = k["eta_t"], k["eta_c"], k["m_wt"]
+        if est_method == "reg":
+            xb = xdot(X, k["beta"])
+            return (
+                (w_t * (dy - et)) / m_wt
+                - (w_t * (xb - ec)) / m_wt
+                - w_c * (dy - xb) * xdot(X, k["a_ols"])
+            )
+        ps = _ps(X, k)
+        wc = w * ps * (1 - d) / (1 - ps)
+        if est_method == "ipw":
+            return (
+                (w_t * (dy - et)) / m_wt
+                - (wc * (dy - ec)) / k["m_wc"]
+                - w * (d - ps) * xdot(X, k["a_ps"])
+            )
+        resid = dy - xdot(X, k["beta"])
+        return (
+            (w_t * (resid - et)) / m_wt
+            - (wc * (resid - ec)) / k["m_wc"]
+            - w_c * resid * xdot(X, k["a_ols"])
+            - w * (d - ps) * xdot(X, k["a_ps"])
+        )
+    return inf
+
 
 def estimate_panel(
     cell_df: DataFrame,
@@ -65,21 +141,10 @@ def estimate_panel(
     columns cid, uid, inf) — inf is the per-unit IF *within* the cell;
     scaling to the unit universe happens in attgt."""
     p = len(xcols)
-    w, d, dy = F.col("w"), F.col("d"), F.col("dy")
-    w_t = w * d
-    w_c = w * (1 - d)
-
-    base = [
-        F.count("*").alias("n"),
-        F.sum(d).alias("n_tr"),
-        F.sum(1 - d).alias("n_co"),
-        F.sum(w_t).alias("sw_t"),
-        F.sum(w_t * dy).alias("swdy_t"),
-        *vec_aggs("m1", w_t, xcols),
-        *gram_aggs("org", w_c, xcols, dy),
-    ]
-    pass1 = {r["cid"]: r for r in cell_df.groupBy("cid").agg(*base).collect()}
-    cids = sorted(pass1)
+    s1 = cell_sums(cell_df, xcols, PANEL_COLS, _panel_pass1)
+    n_of = s1.get("n", np.zeros(0))
+    cids = [int(c) for c in np.flatnonzero(n_of)]
+    pass1 = _by_cell(s1, cids)
 
     skipped: dict[int, str] = {}
     for cid, r in pass1.items():
@@ -92,9 +157,9 @@ def estimate_panel(
         for cid in cids:
             if cid in skipped:
                 continue
-            Gm, b = unpack_gram(pass1[cid], "org", p)
-            bb = solve_safe(Gm, b)
-            XpXi = inv_safe(Gm / pass1[cid]["n"])
+            r = pass1[cid]
+            bb = solve_safe(r["org"], r["orb"])
+            XpXi = inv_safe(r["org"] / r["n"])
             if bb is None or XpXi is None:
                 skipped[cid] = "singular outcome-regression design"
                 continue
@@ -104,8 +169,8 @@ def estimate_panel(
     if est_method in ("ipw", "dr"):
         # warm-start the intercept at logit of the cell's treated share
         init = {
-            cid: np.array([math.log(pass1[cid]["n_tr"] / pass1[cid]["n_co"])] + [0.0] * (p - 1))
-            for cid in cids
+            cid: np.r_[math.log(r["n_tr"] / r["n_co"]), np.zeros(p - 1)]
+            for cid, r in pass1.items()
             if cid not in skipped
         }
         gamma = irls_logit(cell_df, xcols, spark, [c for c in cids if c not in skipped], init=init)
@@ -120,139 +185,162 @@ def estimate_panel(
             if cid in skipped:
                 continue
             r = pass1[cid]
-            n, sw_t = r["n"], r["sw_t"]
-            m1 = unpack_vec(r, "m1", p)
+            n, sw_t, m1 = r["n"], r["sw_t"], r["m1"]
             eta_t = r["swdy_t"] / sw_t
             eta_c = float(beta[cid] @ m1) / sw_t
-            a_ols = xpx_inv[cid] @ m1 / sw_t
             consts[cid] = {
                 "att": eta_t - eta_c,
                 "eta_t": eta_t,
                 "eta_c": eta_c,
                 "m_wt": sw_t / n,
-                "m_wc": 0.0,
-                "beta": list(beta[cid]),
-                "gma": [0.0] * p,
-                "a_ols": list(a_ols),
-                "a_ps": [0.0] * p,
+                "beta": beta[cid],
+                "a_ols": xpx_inv[cid] @ m1 / sw_t,
             }
     else:
-        # second aggregation pass with coefficients joined in
-        cdf = consts_df(
-            spark,
-            {
-                cid: {
-                    "beta": list(beta.get(cid, np.zeros(p))),
-                    "gma": list(gamma.get(cid) if gamma.get(cid) is not None else np.zeros(p)),
-                }
-                for cid in cids
-                if cid not in skipped
-            },
-            [],
-            ["beta", "gma"],
-        )
-        it = cell_df.join(F.broadcast(cdf), "cid")
-        ps = F.least(sigmoid(dot(xcols, "gma")), F.lit(PS_CLAMP))
-        wc = w * ps * (1 - d) / (1 - ps)
-        resid = dy - dot(xcols, "beta") if est_method == "dr" else dy
-        aggs = [
-            F.sum(wc).alias("swc"),
-            F.sum(wc * resid).alias("swcr"),
-            *vec_aggs("v2", wc * resid, xcols),
-            *vec_aggs("v3", wc, xcols),
-            *gram_aggs("info", w * ps * (1 - ps), xcols, None),
-        ]
-        passf = {r["cid"]: r for r in it.groupBy("cid").agg(*aggs).collect()}
-        for cid in cids:
-            if cid in skipped:
-                continue
+        # final pass with the coefficients in the closure
+        live = [c for c in cids if c not in skipped]
+        passf = _by_cell(cell_sums(cell_df, xcols, PANEL_COLS, _panel_passf, consts_df(
+            {cid: {"beta": beta.get(cid, np.zeros(p)), "gma": gamma[cid]} for cid in live}
+        )), live)
+        for cid in live:
             r1, rf = pass1[cid], passf[cid]
-            n, sw_t = r1["n"], r1["sw_t"]
-            m1 = unpack_vec(r1, "m1", p)
+            n, sw_t, m1 = r1["n"], r1["sw_t"], r1["m1"]
             swc = rf["swc"]
             if not swc:
                 skipped[cid] = "zero control weight mass"
                 continue
-            info_inv = inv_safe(unpack_gram(rf, "info", p)[0] / n)
+            info_inv = inv_safe(rf["info"] / n)
             if info_inv is None:
                 skipped[cid] = "singular propensity information matrix"
                 continue
             m_wt, m_wc = sw_t / n, swc / n
             eta_c = rf["swcr"] / swc
-            v2 = unpack_vec(rf, "v2", p)
-            v3 = unpack_vec(rf, "v3", p)
-            M2 = (v2 - eta_c * v3) / n
+            M2 = (rf["v2"] - eta_c * rf["v3"]) / n
             a_ps = info_inv @ M2 / m_wc
             if est_method == "ipw":
                 eta_t = r1["swdy_t"] / sw_t
-                a_ols = np.zeros(p)
-                bvec = np.zeros(p)
+                a_ols = bvec = np.zeros(p)
             else:  # dr
                 bvec = beta[cid]
                 eta_t = (r1["swdy_t"] - float(bvec @ m1)) / sw_t
-                M1 = m1 / n
-                M3 = v3 / n
-                a_ols = xpx_inv[cid] @ (M1 / m_wt - M3 / m_wc)
+                a_ols = xpx_inv[cid] @ (m1 / n / m_wt - rf["v3"] / n / m_wc)
             consts[cid] = {
                 "att": eta_t - eta_c,
                 "eta_t": eta_t,
                 "eta_c": eta_c,
                 "m_wt": m_wt,
                 "m_wc": m_wc,
-                "beta": list(bvec),
-                "gma": list(gamma[cid]),
-                "a_ols": list(a_ols),
-                "a_ps": list(a_ps),
+                "beta": bvec,
+                "gma": gamma[cid],
+                "a_ols": a_ols,
+                "a_ps": a_ps,
             }
 
-    # --- influence-function pass -------------------------------------------
-    cdf = consts_df(
-        spark,
-        consts,
-        ["eta_t", "eta_c", "m_wt", "m_wc"],
-        ["beta", "gma", "a_ols", "a_ps"],
-    )
-    it = cell_df.join(F.broadcast(cdf), "cid")
-    et, ec, m_wt, m_wc = (F.col(c) for c in ("eta_t", "eta_c", "m_wt", "m_wc"))
-    if est_method == "reg":
-        xb = dot(xcols, "beta")
-        inf = (
-            (w_t * (dy - et)) / m_wt
-            - (w_t * (xb - ec)) / m_wt
-            - w_c * (dy - xb) * dot(xcols, "a_ols")
-        )
-    elif est_method == "ipw":
-        ps = F.least(sigmoid(dot(xcols, "gma")), F.lit(PS_CLAMP))
-        wc = w * ps * (1 - d) / (1 - ps)
-        inf = (
-            (w_t * (dy - et)) / m_wt
-            - (wc * (dy - ec)) / m_wc
-            - w * (d - ps) * dot(xcols, "a_ps")
-        )
-    else:  # dr
-        ps = F.least(sigmoid(dot(xcols, "gma")), F.lit(PS_CLAMP))
-        wc = w * ps * (1 - d) / (1 - ps)
-        resid = dy - dot(xcols, "beta")
-        inf = (
-            (w_t * (resid - et)) / m_wt
-            - (wc * (resid - ec)) / m_wc
-            - w_c * resid * dot(xcols, "a_ols")
-            - w * (d - ps) * dot(xcols, "a_ps")
-        )
-    if_df = it.select("cid", "uid", inf.alias("inf"))
-
-    results = []
-    for cid in cids:
-        if cid in skipped:
-            results.append(CellEstimate(cid, math.nan, float(pass1[cid]["n"]), True, skipped[cid]))
-        else:
-            results.append(CellEstimate(cid, float(consts[cid]["att"]), float(pass1[cid]["n"]), False))
-    return results, if_df
+    if_df = cell_rows(cell_df, xcols, PANEL_COLS, _panel_if(est_method), consts_df(consts), ["uid"])
+    return _results(cids, n_of, skipped, consts), if_df
 
 
 # ---------------------------------------------------------------------------
 # Repeated cross-section kernels
 # ---------------------------------------------------------------------------
+
+RC_COLS = ["d", "pst", "w", "y"]
+
+
+def _rc_weights(c):
+    """Per-row treated (post, pre), control OLS (post, pre) and treated weights."""
+    d, pst, w = c["d"], c["pst"], c["w"]
+    return (w * d * pst, w * d * (1 - pst), w * (1 - d) * pst, w * (1 - d) * (1 - pst), w * d)
+
+
+def _rc_pass1(X, c, k):
+    d, pst, y = c["d"], c["pst"], c["y"]
+    wt1, wt0, wc1w, wc0w, wd = _rc_weights(c)
+    out = {
+        "n": np.ones_like(d),
+        "n_t1": d * pst, "n_t0": d * (1 - pst), "n_c1": (1 - d) * pst, "n_c0": (1 - d) * (1 - pst),
+        "sw_t1": wt1, "sw_t0": wt0, "sw_d": wd, "swy_t1": wt1 * y, "swy_t0": wt0 * y,
+        "md": wx(wd, X), "mdt1": wx(wt1, X), "mdt0": wx(wt0, X),
+    }
+    for blk, s in (("gc0", wc0w), ("gc1", wc1w), ("gt0", wt0), ("gt1", wt1)):
+        out[blk], out[blk + "_b"] = gram(s, X), wx(s, X) * y[:, None]
+    return out
+
+
+def _rc_control(X, c, k):
+    """Propensity score and the post / pre control IPW weights."""
+    d, pst, w = c["d"], c["pst"], c["w"]
+    ps = _ps(X, k)
+    odds = ps * (1 - d) / (1 - ps)
+    return ps, w * odds * pst, w * odds * (1 - pst)
+
+
+def _rc_passf(X, c, k):
+    pst, w, y = c["pst"], c["w"], c["y"]
+    wt1, wt0 = _rc_weights(c)[:2]
+    ps, wc1, wc0 = _rc_control(X, c, k)
+    # bc = 0 for ipw: resid = y
+    resid = y - (pst * xdot(X, k["bc1"]) + (1 - pst) * xdot(X, k["bc0"]))
+    return {
+        "swc1": wc1, "swc0": wc0, "swc1r": wc1 * resid, "swc0r": wc0 * resid,
+        "swt1r": wt1 * resid, "swt0r": wt0 * resid,
+        "v1r": wx(wc1 * resid, X), "v1": wx(wc1, X), "v0r": wx(wc0 * resid, X), "v0": wx(wc0, X),
+        "info": gram(w * ps * (1 - ps), X),
+    }
+
+
+def _rc_if(est_method):
+    def inf(X, c, k):
+        d, pst, w, y = c["d"], c["pst"], c["w"], c["y"]
+        wt1, wt0, wc1w, wc0w, wd = _rc_weights(c)
+        m_wt1, m_wt0 = k["m_wt1"], k["m_wt0"]
+        if est_method == "reg":
+            xb0, xb1 = xdot(X, k["bc0"]), xdot(X, k["bc1"])
+            return (
+                (wt1 * (y - k["eta_tp"])) / m_wt1
+                - (wt0 * (y - k["eta_tr"])) / m_wt0
+                - (wd * ((xb1 - xb0) - k["eta_c"])) / k["m_wd"]
+                - wc1w * (y - xb1) * xdot(X, k["a_c1"])
+                + wc0w * (y - xb0) * xdot(X, k["a_c0"])
+            )
+        ps, wc1, wc0 = _rc_control(X, c, k)
+        if est_method == "ipw":
+            return (
+                (wt1 * (y - k["eta_tp"])) / m_wt1
+                - (wt0 * (y - k["eta_tr"])) / m_wt0
+                - (
+                    (wc1 * (y - k["eta_cp"])) / k["m_wc1"]
+                    - (wc0 * (y - k["eta_cr"])) / k["m_wc0"]
+                    + w * (d - ps) * xdot(X, k["a_ps"])
+                )
+            )
+        xbc0, xbc1 = xdot(X, k["bc0"]), xdot(X, k["bc1"])
+        xbt0, xbt1 = xdot(X, k["bt0"]), xdot(X, k["bt1"])
+        resid = y - (pst * xbc1 + (1 - pst) * xbc0)
+        dpost, dpre = xbt1 - xbc1, xbt0 - xbc0
+        inf_treat_cont = (
+            (wt1 * (resid - k["eta_tp"])) / m_wt1
+            - (wt0 * (resid - k["eta_tr"])) / m_wt0
+            - (wc1 * (resid - k["eta_cp"])) / k["m_wc1"]
+            + (wc0 * (resid - k["eta_cr"])) / k["m_wc0"]
+            - w * (d - ps) * xdot(X, k["a_ps"])
+        )
+        m_wd = m_wt1 + m_wt0  # mean(w·d·post) + mean(w·d·(1-post))
+        inf_eff = (
+            (wd * (dpost - k["e1"])) / m_wd
+            - (wt1 * (dpost - k["e2"])) / m_wt1
+            - (wd * (dpre - k["e3"])) / m_wd
+            + (wt0 * (dpre - k["e4"])) / m_wt0
+        )
+        inf_or = (
+            wt1 * (y - xbt1) * xdot(X, k["a_t1"])
+            + wt0 * (y - xbt0) * xdot(X, k["a_t0"])
+            + wc1w * (y - xbc1) * xdot(X, k["a_c1"])
+            + wc0w * (y - xbc0) * xdot(X, k["a_c0"])
+        )
+        return inf_treat_cont + inf_eff + inf_or
+    return inf
+
 
 def estimate_rc(
     cell_df: DataFrame,
@@ -265,32 +353,10 @@ def estimate_rc(
     Sant'Anna & Zhao (2020) eq. 3.4 (the reference's drdid_rc path,
     ATTgt.py:424-432)."""
     p = len(xcols)
-    w, d, y, pst = F.col("w"), F.col("d"), F.col("y"), F.col("pst")
-    wt1, wt0 = w * d * pst, w * d * (1 - pst)
-    wc1w, wc0w = w * (1 - d) * pst, w * (1 - d) * (1 - pst)  # OLS weights
-    wd = w * d
-
-    base = [
-        F.count("*").alias("n"),
-        F.sum(d * pst).alias("n_t1"),
-        F.sum(d * (1 - pst)).alias("n_t0"),
-        F.sum((1 - d) * pst).alias("n_c1"),
-        F.sum((1 - d) * (1 - pst)).alias("n_c0"),
-        F.sum(wt1).alias("sw_t1"),
-        F.sum(wt0).alias("sw_t0"),
-        F.sum(wd).alias("sw_d"),
-        F.sum(wt1 * y).alias("swy_t1"),
-        F.sum(wt0 * y).alias("swy_t0"),
-        *vec_aggs("md", wd, xcols),
-        *vec_aggs("mdt1", wt1, xcols),
-        *vec_aggs("mdt0", wt0, xcols),
-        *gram_aggs("gc0", wc0w, xcols, y),
-        *gram_aggs("gc1", wc1w, xcols, y),
-        *gram_aggs("gt0", wt0, xcols, y),
-        *gram_aggs("gt1", wt1, xcols, y),
-    ]
-    pass1 = {r["cid"]: r for r in cell_df.groupBy("cid").agg(*base).collect()}
-    cids = sorted(pass1)
+    s1 = cell_sums(cell_df, xcols, RC_COLS, _rc_pass1)
+    n_of = s1.get("n", np.zeros(0))
+    cids = [int(c) for c in np.flatnonzero(n_of)]
+    pass1 = _by_cell(s1, cids)
 
     skipped: dict[int, str] = {}
     for cid, r in pass1.items():
@@ -305,40 +371,27 @@ def estimate_rc(
     # outcome regressions
     beta: dict[int, dict[str, np.ndarray]] = {}
     xpxi: dict[int, dict[str, np.ndarray]] = {}
-    need_t = est_method == "dr"
+    blocks = ["gc0", "gc1"] + (["gt0", "gt1"] if est_method == "dr" else [])
     for cid in cids:
         if cid in skipped:
             continue
         r = pass1[cid]
-        n = r["n"]
         bs, xs = {}, {}
-        blocks = ["gc0", "gc1"] + (["gt0", "gt1"] if need_t else [])
-        ok = True
         for blk in blocks:
-            Gm, b = unpack_gram(r, blk, p)
-            bb = solve_safe(Gm, b)
-            Xi = inv_safe(Gm / n)
+            bb = solve_safe(r[blk], r[blk + "_b"])
+            Xi = inv_safe(r[blk] / r["n"])
             if bb is None or Xi is None:
                 skipped[cid] = f"singular regression design in block {blk}"
-                ok = False
                 break
             bs[blk], xs[blk] = bb, Xi
-        if ok:
+        else:
             beta[cid], xpxi[cid] = bs, xs
 
     gamma: dict[int, np.ndarray | None] = {}
     if est_method in ("ipw", "dr"):
         init = {
-            cid: np.array(
-                [
-                    math.log(
-                        (pass1[cid]["n_t1"] + pass1[cid]["n_t0"])
-                        / (pass1[cid]["n_c1"] + pass1[cid]["n_c0"])
-                    )
-                ]
-                + [0.0] * (p - 1)
-            )
-            for cid in cids
+            cid: np.r_[math.log((r["n_t1"] + r["n_t0"]) / (r["n_c1"] + r["n_c0"])), np.zeros(p - 1)]
+            for cid, r in pass1.items()
             if cid not in skipped
         }
         gamma = irls_logit(cell_df, xcols, spark, [c for c in cids if c not in skipped], init=init)
@@ -355,86 +408,43 @@ def estimate_rc(
             r = pass1[cid]
             n = r["n"]
             b0, b1 = beta[cid]["gc0"], beta[cid]["gc1"]
-            md = unpack_vec(r, "md", p)
-            m_wt1, m_wt0, m_wd = r["sw_t1"] / n, r["sw_t0"] / n, r["sw_d"] / n
+            md = r["md"]
+            m_wd = r["sw_d"] / n
+            Mv = md / n
             eta_tp = r["swy_t1"] / r["sw_t1"]
             eta_tr = r["swy_t0"] / r["sw_t0"]
             eta_c = float((b1 - b0) @ md) / r["sw_d"]
-            Mv = md / n
-            a_post = xpxi[cid]["gc1"] @ Mv / m_wd
-            a_pre = xpxi[cid]["gc0"] @ Mv / m_wd
             consts[cid] = {
                 "att": (eta_tp - eta_tr) - eta_c,
                 "eta_tp": eta_tp,
                 "eta_tr": eta_tr,
-                "eta_cp": eta_c,  # reused slot: the single control eta
-                "eta_cr": 0.0,
-                "m_wt1": m_wt1,
-                "m_wt0": m_wt0,
-                "m_wc1": m_wd,  # reused slot: mean(w·d)
-                "m_wc0": 0.0,
-                "e1": 0.0,
-                "e2": 0.0,
-                "e3": 0.0,
-                "e4": 0.0,
-                "bc0": list(b0),
-                "bc1": list(b1),
-                "bt0": [0.0] * p,
-                "bt1": [0.0] * p,
-                "gma": [0.0] * p,
-                "a_c0": list(a_pre),
-                "a_c1": list(a_post),
-                "a_t0": [0.0] * p,
-                "a_t1": [0.0] * p,
-                "a_ps": [0.0] * p,
+                "eta_c": eta_c,
+                "m_wt1": r["sw_t1"] / n,
+                "m_wt0": r["sw_t0"] / n,
+                "m_wd": m_wd,
+                "bc0": b0,
+                "bc1": b1,
+                "a_c0": xpxi[cid]["gc0"] @ Mv / m_wd,
+                "a_c1": xpxi[cid]["gc1"] @ Mv / m_wd,
             }
     else:
-        cdf = consts_df(
-            spark,
-            {
-                cid: {
-                    "bc0": list(beta[cid]["gc0"]) if cid in beta else [0.0] * p,
-                    "bc1": list(beta[cid]["gc1"]) if cid in beta else [0.0] * p,
-                    "gma": list(gamma.get(cid) if gamma.get(cid) is not None else np.zeros(p)),
-                }
-                for cid in cids
-                if cid not in skipped
-            },
-            [],
-            ["bc0", "bc1", "gma"],
-        )
-        it = cell_df.join(F.broadcast(cdf), "cid")
-        ps = F.least(sigmoid(dot(xcols, "gma")), F.lit(PS_CLAMP))
-        odds = ps * (1 - d) / (1 - ps)
-        wc1 = w * odds * pst
-        wc0 = w * odds * (1 - pst)
-        if est_method == "dr":
-            resid = y - (pst * dot(xcols, "bc1") + (1 - pst) * dot(xcols, "bc0"))
-        else:
-            resid = y
-        aggs = [
-            F.sum(wc1).alias("swc1"),
-            F.sum(wc0).alias("swc0"),
-            F.sum(wc1 * resid).alias("swc1r"),
-            F.sum(wc0 * resid).alias("swc0r"),
-            F.sum(wt1 * resid).alias("swt1r"),
-            F.sum(wt0 * resid).alias("swt0r"),
-            *vec_aggs("v1r", wc1 * resid, xcols),
-            *vec_aggs("v1", wc1, xcols),
-            *vec_aggs("v0r", wc0 * resid, xcols),
-            *vec_aggs("v0", wc0, xcols),
-            *gram_aggs("info", w * ps * (1 - ps), xcols, None),
-        ]
-        passf = {r["cid"]: r for r in it.groupBy("cid").agg(*aggs).collect()}
-        for cid in cids:
-            if cid in skipped:
-                continue
+        live = [c for c in cids if c not in skipped]
+        zero = np.zeros(p)
+        passf = _by_cell(cell_sums(cell_df, xcols, RC_COLS, _rc_passf, consts_df({
+            cid: {
+                "bc0": beta[cid]["gc0"] if est_method == "dr" else zero,
+                "bc1": beta[cid]["gc1"] if est_method == "dr" else zero,
+                "gma": gamma[cid],
+            }
+            for cid in live
+        })), live)
+        for cid in live:
             r1, rf = pass1[cid], passf[cid]
             n = r1["n"]
             if not rf["swc1"] or not rf["swc0"]:
                 skipped[cid] = "zero control weight mass"
                 continue
-            info_inv = inv_safe(unpack_gram(rf, "info", p)[0] / n)
+            info_inv = inv_safe(rf["info"] / n)
             if info_inv is None:
                 skipped[cid] = "singular propensity information matrix"
                 continue
@@ -442,9 +452,19 @@ def estimate_rc(
             m_wc1, m_wc0 = rf["swc1"] / n, rf["swc0"] / n
             eta_cp = rf["swc1r"] / rf["swc1"]
             eta_cr = rf["swc0r"] / rf["swc0"]
-            M2p = (unpack_vec(rf, "v1r", p) - eta_cp * unpack_vec(rf, "v1", p)) / n / m_wc1
-            M2r = (unpack_vec(rf, "v0r", p) - eta_cr * unpack_vec(rf, "v0", p)) / n / m_wc0
+            M2p = (rf["v1r"] - eta_cp * rf["v1"]) / n / m_wc1
+            M2r = (rf["v0r"] - eta_cr * rf["v0"]) / n / m_wc0
             a_ps = info_inv @ (M2p - M2r)
+            common = {
+                "eta_cp": eta_cp,
+                "eta_cr": eta_cr,
+                "m_wt1": m_wt1,
+                "m_wt0": m_wt0,
+                "m_wc1": m_wc1,
+                "m_wc0": m_wc0,
+                "gma": gamma[cid],
+                "a_ps": a_ps,
+            }
             if est_method == "ipw":
                 eta_tp = r1["swy_t1"] / r1["sw_t1"]
                 eta_tr = r1["swy_t0"] / r1["sw_t0"]
@@ -452,33 +472,12 @@ def estimate_rc(
                     "att": (eta_tp - eta_tr) - (eta_cp - eta_cr),
                     "eta_tp": eta_tp,
                     "eta_tr": eta_tr,
-                    "eta_cp": eta_cp,
-                    "eta_cr": eta_cr,
-                    "m_wt1": m_wt1,
-                    "m_wt0": m_wt0,
-                    "m_wc1": m_wc1,
-                    "m_wc0": m_wc0,
-                    "e1": 0.0,
-                    "e2": 0.0,
-                    "e3": 0.0,
-                    "e4": 0.0,
-                    "bc0": [0.0] * p,
-                    "bc1": [0.0] * p,
-                    "bt0": [0.0] * p,
-                    "bt1": [0.0] * p,
-                    "gma": list(gamma[cid]),
-                    "a_c0": [0.0] * p,
-                    "a_c1": [0.0] * p,
-                    "a_t0": [0.0] * p,
-                    "a_t1": [0.0] * p,
-                    "a_ps": list(a_ps),
+                    **common,
                 }
                 continue
             # doubly robust, locally efficient
             b = beta[cid]
-            md = unpack_vec(r1, "md", p)
-            mdt1 = unpack_vec(r1, "mdt1", p)
-            mdt0 = unpack_vec(r1, "mdt0", p)
+            md, mdt1, mdt0 = r1["md"], r1["mdt1"], r1["mdt0"]
             eta_tp = rf["swt1r"] / r1["sw_t1"]
             eta_tr = rf["swt0r"] / r1["sw_t0"]
             d_post = b["gt1"] - b["gc1"]
@@ -493,118 +492,37 @@ def estimate_rc(
                 + (eta_d_post - eta_dt1_post)
                 - (eta_d_pre - eta_dt0_pre)
             )
-            # asy-lin-rep coefficient vectors (see module docstring):
-            m_tp = (mdt1 / n) / m_wt1
-            m_tr = (mdt0 / n) / m_wt0
-            m_cp = (unpack_vec(rf, "v1", p) / n) / m_wc1
-            m_cr = (unpack_vec(rf, "v0", p) / n) / m_wc0
+            # asy-lin-rep coefficient vectors:
+            m_cp = (rf["v1"] / n) / m_wc1
+            m_cr = (rf["v0"] / n) / m_wc0
             mom_d = (md / n) / m_wd
             mom_dt1 = (mdt1 / n) / m_wt1
             mom_dt0 = (mdt0 / n) / m_wt0
-            v_c1 = -m_tp + m_cp - (mom_d - mom_dt1)
-            v_c0 = m_tr - m_cr + (mom_d - mom_dt0)
+            v_c1 = -mom_dt1 + m_cp - (mom_d - mom_dt1)
+            v_c0 = mom_dt0 - m_cr + (mom_d - mom_dt0)
             v_t1 = mom_d - mom_dt1
             v_t0 = -(mom_d - mom_dt0)
             consts[cid] = {
                 "att": att,
                 "eta_tp": eta_tp,
                 "eta_tr": eta_tr,
-                "eta_cp": eta_cp,
-                "eta_cr": eta_cr,
-                "m_wt1": m_wt1,
-                "m_wt0": m_wt0,
-                "m_wc1": m_wc1,
-                "m_wc0": m_wc0,
+                **common,
                 "e1": eta_d_post,
                 "e2": eta_dt1_post,
                 "e3": eta_d_pre,
                 "e4": eta_dt0_pre,
-                "bc0": list(b["gc0"]),
-                "bc1": list(b["gc1"]),
-                "bt0": list(b["gt0"]),
-                "bt1": list(b["gt1"]),
-                "gma": list(gamma[cid]),
-                "a_c0": list(xpxi[cid]["gc0"] @ v_c0),
-                "a_c1": list(xpxi[cid]["gc1"] @ v_c1),
-                "a_t0": list(xpxi[cid]["gt0"] @ v_t0),
-                "a_t1": list(xpxi[cid]["gt1"] @ v_t1),
-                "a_ps": list(a_ps),
+                "bc0": b["gc0"],
+                "bc1": b["gc1"],
+                "bt0": b["gt0"],
+                "bt1": b["gt1"],
+                "a_c0": xpxi[cid]["gc0"] @ v_c0,
+                "a_c1": xpxi[cid]["gc1"] @ v_c1,
+                "a_t0": xpxi[cid]["gt0"] @ v_t0,
+                "a_t1": xpxi[cid]["gt1"] @ v_t1,
             }
 
-    # --- influence-function pass -------------------------------------------
-    cdf = consts_df(
-        spark,
-        consts,
-        ["eta_tp", "eta_tr", "eta_cp", "eta_cr", "m_wt1", "m_wt0", "m_wc1", "m_wc0", "e1", "e2", "e3", "e4"],
-        ["bc0", "bc1", "bt0", "bt1", "gma", "a_c0", "a_c1", "a_t0", "a_t1", "a_ps"],
-    )
-    it = cell_df.join(F.broadcast(cdf), "cid")
-    C = {c: F.col(c) for c in ("eta_tp", "eta_tr", "eta_cp", "eta_cr", "m_wt1", "m_wt0", "m_wc1", "m_wc0", "e1", "e2", "e3", "e4")}
-
-    if est_method == "reg":
-        xb0, xb1 = dot(xcols, "bc0"), dot(xcols, "bc1")
-        inf = (
-            (wt1 * (y - C["eta_tp"])) / C["m_wt1"]
-            - (wt0 * (y - C["eta_tr"])) / C["m_wt0"]
-            - (wd * ((xb1 - xb0) - C["eta_cp"])) / C["m_wc1"]
-            - wc1w * (y - xb1) * dot(xcols, "a_c1")
-            + wc0w * (y - xb0) * dot(xcols, "a_c0")
-        )
-    elif est_method == "ipw":
-        ps = F.least(sigmoid(dot(xcols, "gma")), F.lit(PS_CLAMP))
-        odds = ps * (1 - d) / (1 - ps)
-        wc1 = w * odds * pst
-        wc0 = w * odds * (1 - pst)
-        inf = (
-            (wt1 * (y - C["eta_tp"])) / C["m_wt1"]
-            - (wt0 * (y - C["eta_tr"])) / C["m_wt0"]
-            - (
-                (wc1 * (y - C["eta_cp"])) / C["m_wc1"]
-                - (wc0 * (y - C["eta_cr"])) / C["m_wc0"]
-                + w * (d - ps) * dot(xcols, "a_ps")
-            )
-        )
-    else:  # dr
-        ps = F.least(sigmoid(dot(xcols, "gma")), F.lit(PS_CLAMP))
-        odds = ps * (1 - d) / (1 - ps)
-        wc1 = w * odds * pst
-        wc0 = w * odds * (1 - pst)
-        xbc0, xbc1 = dot(xcols, "bc0"), dot(xcols, "bc1")
-        xbt0, xbt1 = dot(xcols, "bt0"), dot(xcols, "bt1")
-        resid = y - (pst * xbc1 + (1 - pst) * xbc0)
-        dpost = xbt1 - xbc1
-        dpre = xbt0 - xbc0
-        inf_treat_cont = (
-            (wt1 * (resid - C["eta_tp"])) / C["m_wt1"]
-            - (wt0 * (resid - C["eta_tr"])) / C["m_wt0"]
-            - (wc1 * (resid - C["eta_cp"])) / C["m_wc1"]
-            + (wc0 * (resid - C["eta_cr"])) / C["m_wc0"]
-            - w * (d - ps) * dot(xcols, "a_ps")
-        )
-        m_wd = C["m_wt1"] + C["m_wt0"]  # mean(w·d·post) + mean(w·d·(1-post))
-        inf_eff = (
-            (wd * (dpost - C["e1"])) / m_wd
-            - (wt1 * (dpost - C["e2"])) / C["m_wt1"]
-            - (wd * (dpre - C["e3"])) / m_wd
-            + (wt0 * (dpre - C["e4"])) / C["m_wt0"]
-        )
-        inf_or = (
-            wt1 * (y - xbt1) * dot(xcols, "a_t1")
-            + wt0 * (y - xbt0) * dot(xcols, "a_t0")
-            + wc1w * (y - xbc1) * dot(xcols, "a_c1")
-            + wc0w * (y - xbc0) * dot(xcols, "a_c0")
-        )
-        inf = inf_treat_cont + inf_eff + inf_or
-
-    if_df = it.select("cid", "uid", "ut", inf.alias("inf"))
-
-    results = []
-    for cid in cids:
-        if cid in skipped:
-            results.append(CellEstimate(cid, math.nan, float(pass1[cid]["n"]), True, skipped[cid]))
-        else:
-            results.append(CellEstimate(cid, float(consts[cid]["att"]), float(pass1[cid]["n"]), False))
-    return results, if_df
+    if_df = cell_rows(cell_df, xcols, RC_COLS, _rc_if(est_method), consts_df(consts), ["uid", "ut"])
+    return _results(cids, n_of, skipped, consts), if_df
 
 
 # ---------------------------------------------------------------------------

@@ -1,127 +1,207 @@
-"""Gram-matrix aggregation machinery.
+"""Per-cell passes over the cached cell table.
 
-Every regression/logit the estimator needs is a p×p problem with tiny
-p (intercept + covariates). We therefore never materialize design
-matrices: each fit is ONE ``groupBy(cid)`` aggregation producing the
-p(p+1)/2 + p Gram sums per cell, followed by an O(p³) solve on the
-driver for every cell at once. This replaces the reference's
-collect-to-NumPy pattern (reference ATTgt.py:346-351, utils.py:20-34)
-with aggregation-only data movement: O(|cells|·p²) scalars leave the
-executors regardless of data size.
+Every regression and logit the estimator needs is a p×p problem per
+(g,t) cell with tiny p (intercept + covariates), so no design matrix is
+ever materialized. Each pass over the cell table is ONE ``mapInArrow``
+job: the pass's per-cell constants (coefficients, etas, means) travel
+in the closure as dense NumPy arrays indexed by cell id, each Arrow
+batch computes its per-row terms in NumPy and sums them per cell with
+``bincount``, and each partition yields one cells × terms blob that the
+driver adds up, then solves every cell's p×p system at once. O(partitions
+· cells · p²) values reach the driver, never O(units), and there is no
+shuffle and no broadcast: kernel pass 1, every IRLS iteration and the
+final propensity pass are the same primitive (``cell_sums``), and the
+influence-function pass (``cell_rows``) emits one value per row instead
+of sums. This replaces the reference's collect-to-NumPy pattern
+(reference ATTgt.py:346-351, utils.py:20-34).
 """
 
 from __future__ import annotations
 
+import json
+from collections.abc import Callable, Iterator
+
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+# terms(X, cols, consts) → {name: per-row array (rows, *shape)}: X is the
+# rows × p covariate matrix, cols the named columns, consts the pass's
+# per-cell constants gathered to each row.
+Terms = Callable[[np.ndarray, dict, dict], dict]
+
+_BLOB = "layout string, sums binary"
 
 
-def gram_aggs(prefix: str, weight: Column, xcols: list[str], ycol: Column | None) -> list[Column]:
-    """sum(w·x_i·x_j) for i<=j (+ sum(w·x_i·y) when y given)."""
-    p = len(xcols)
-    aggs = []
-    for i in range(p):
-        for j in range(i, p):
-            aggs.append(
-                F.sum(weight * F.col(xcols[i]) * F.col(xcols[j])).alias(f"{prefix}_g_{i}_{j}")
-            )
-    if ycol is not None:
-        for i in range(p):
-            aggs.append(F.sum(weight * F.col(xcols[i]) * ycol).alias(f"{prefix}_b_{i}"))
-    return aggs
+def consts_df(per_cell: dict[int, dict[str, float | np.ndarray]]) -> dict[str, np.ndarray]:
+    """Pack one pass's per-cell constants into dense arrays indexed by
+    cell id (zero rows for cells the pass skips), plus the ``live`` mask
+    of the cells it reads."""
+    ncell = max(per_cell, default=-1) + 1
+    out = {"live": np.zeros(ncell, bool)}
+    for cid, named in per_cell.items():
+        out["live"][cid] = True
+        for name, v in named.items():
+            v = np.asarray(v, float)
+            out.setdefault(name, np.zeros((ncell, *v.shape)))[cid] = v
+    return out
 
 
-def vec_aggs(prefix: str, weight: Column, xcols: list[str]) -> list[Column]:
-    """sum(w·x_i) per covariate."""
-    return [F.sum(weight * F.col(xcols[i])).alias(f"{prefix}_{i}") for i in range(len(xcols))]
+def _batch(rb: pa.RecordBatch, xcols: list[str], cols: list[str], consts: dict | None):
+    """The rows of a batch that belong to live cells: their mask, cell
+    ids, covariate matrix, named columns and gathered constants."""
+    cid = rb.column("cid").to_numpy(zero_copy_only=False).astype(np.intp)
+    keep = np.ones(len(cid), bool)
+    if consts is not None:
+        live = consts["live"]
+        keep = cid < len(live)
+        keep[keep] = live[cid[keep]]
+        cid = cid[keep]
+
+    def col(c):
+        return rb.column(c).to_numpy(zero_copy_only=False).astype(float)[keep]
+
+    X = np.column_stack([col(c) for c in xcols]) if xcols else np.empty((len(cid), 0))
+    per_row = {k: v[cid] for k, v in (consts or {}).items() if k != "live"}
+    return keep, cid, X, {c: col(c) for c in cols}, per_row
 
 
-def unpack_gram(row, prefix: str, p: int) -> tuple[np.ndarray, np.ndarray | None]:
-    Gm = np.zeros((p, p))
-    for i in range(p):
-        for j in range(i, p):
-            v = row[f"{prefix}_g_{i}_{j}"]
-            Gm[i, j] = Gm[j, i] = v if v is not None else 0.0
-    b = None
-    if f"{prefix}_b_0" in row.__fields__:
-        b = np.array([row[f"{prefix}_b_{i}"] or 0.0 for i in range(p)])
-    return Gm, b
+def cell_sums(
+    cell_df: DataFrame,
+    xcols: list[str],
+    cols: list[str],
+    terms: Terms,
+    consts: dict[str, np.ndarray] | None = None,
+) -> dict[str, np.ndarray]:
+    """Σ over each cell's rows of every term, in one Spark job: name →
+    (cells, *shape) array, row c holding cell c's sums (zeros where the
+    cell has no rows). With ``consts`` only live cells' rows are read."""
 
-
-def unpack_vec(row, prefix: str, p: int) -> np.ndarray:
-    return np.array([row[f"{prefix}_{i}"] or 0.0 for i in range(p)])
-
-
-def dot(xcols: list[str], vec_col: str) -> Column:
-    """x·v where v is a per-cell array<double> column (1-based element_at)."""
-    expr = F.element_at(vec_col, 1) * F.col(xcols[0])
-    for i in range(1, len(xcols)):
-        expr = expr + F.element_at(vec_col, i + 1) * F.col(xcols[i])
-    return expr
-
-
-def consts_df(
-    spark: SparkSession,
-    per_cell: dict[int, dict[str, float | list[float]]],
-    scalar_names: list[str],
-    vector_names: list[str],
-) -> DataFrame:
-    """Tiny per-cell constants table (broadcast-joined back on cid)."""
-    fields = [StructField("cid", IntegerType(), False)]
-    fields += [StructField(s, DoubleType(), True) for s in scalar_names]
-    fields += [StructField(v, ArrayType(DoubleType()), True) for v in vector_names]
-    rows = []
-    for cid, d in per_cell.items():
-        rows.append(
-            (
-                cid,
-                *[float(d[s]) for s in scalar_names],
-                *[[float(x) for x in d[v]] for v in vector_names],
-            )
+    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        layout, acc = [], np.zeros((0, 0))
+        for rb in batches:
+            _, cid, X, named, per_row = _batch(rb, xcols, cols, consts)
+            with np.errstate(over="ignore"):
+                out = terms(X, named, per_row)
+            layout = [(k, v.shape[1:]) for k, v in out.items()]
+            T = np.concatenate([v.reshape(len(cid), -1) for v in out.values()], axis=1)
+            m, k = int(cid.max(initial=-1)) + 1, T.shape[1]
+            if m > len(acc) or k != acc.shape[1]:  # k is fixed once a batch is seen
+                acc = np.vstack([acc.reshape(-1, k), np.zeros((m - len(acc), k))])
+            at = (cid[:, None] * k + np.arange(k)).ravel()
+            acc[:m] += np.bincount(at, weights=T.ravel(), minlength=m * k).reshape(m, k)
+        yield pa.RecordBatch.from_pydict(
+            {"layout": [json.dumps([acc.shape, layout])], "sums": [acc.tobytes()]}
         )
-    return spark.createDataFrame(rows, StructType(fields))
+
+    blobs = cell_df.select("cid", *xcols, *cols).mapInArrow(part, _BLOB).toArrow()
+    ncell = len(consts["live"]) if consts is not None else 0
+    parts = []
+    for spec, sums in zip(blobs["layout"].to_pylist(), blobs["sums"].to_pylist()):
+        shape, layout = json.loads(spec)
+        if shape[0]:
+            parts.append(np.frombuffer(sums, np.float64).reshape(shape))
+            ncell = max(ncell, shape[0])
+    if not parts:
+        return {}
+    total = np.zeros((ncell, parts[0].shape[1]))
+    for s in parts:
+        total[: len(s)] += s
+    out, at = {}, 0
+    for name, shape in layout:
+        size = int(np.prod(shape))
+        out[name] = total[:, at : at + size].reshape(ncell, *shape)
+        at += size
+    return out
 
 
-def sigmoid(col: Column) -> Column:
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-col))
+def cell_rows(
+    cell_df: DataFrame,
+    xcols: list[str],
+    cols: list[str],
+    value: Callable[[np.ndarray, dict, dict], np.ndarray],
+    consts: dict[str, np.ndarray],
+    keep_cols: list[str],
+) -> DataFrame:
+    """One value per row of every live cell, as (cid, *keep_cols, inf):
+    the lazy sibling of ``cell_sums`` that emits rows instead of sums."""
+    keep_cols = ["cid", *keep_cols]
+    schema = StructType([cell_df.schema[c] for c in keep_cols] + [StructField("inf", DoubleType())])
+
+    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            keep, _, X, named, per_row = _batch(rb, xcols, cols, consts)
+            with np.errstate(over="ignore"):
+                inf = value(X, named, per_row)
+            kept = rb.filter(pa.array(keep))
+            yield pa.RecordBatch.from_arrays(
+                [kept.column(c) for c in keep_cols] + [pa.array(inf, pa.float64())],
+                names=[*keep_cols, "inf"],
+            )
+
+    return cell_df.select(*keep_cols, *xcols, *cols).mapInArrow(part, schema)
+
+
+# -- per-row building blocks ---------------------------------------------------
+
+def xdot(X: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Row-wise x·v for per-row coefficient vectors v (rows × p)."""
+    return (X * v).sum(axis=1)
+
+
+def sigmoid(eta: np.ndarray) -> np.ndarray:
+    return 1.0 / (1.0 + np.exp(-eta))
+
+
+def gram(s: np.ndarray, X: np.ndarray) -> np.ndarray:
+    """Per-row s·x xᵀ (rows × p × p)."""
+    return s[:, None, None] * X[:, :, None] * X[:, None, :]
+
+
+def wx(s: np.ndarray, X: np.ndarray) -> np.ndarray:
+    """Per-row s·x (rows × p)."""
+    return s[:, None] * X
+
+
+def _finite_or_none(solver, *args) -> np.ndarray | None:
+    try:
+        out = solver(*args)
+    except np.linalg.LinAlgError:
+        return None
+    return out if np.all(np.isfinite(out)) else None
 
 
 def solve_safe(A: np.ndarray, b: np.ndarray) -> np.ndarray | None:
-    try:
-        out = np.linalg.solve(A, b)
-    except np.linalg.LinAlgError:
-        return None
-    if not np.all(np.isfinite(out)):
-        return None
-    return out
+    return _finite_or_none(np.linalg.solve, A, b)
 
 
 def inv_safe(A: np.ndarray) -> np.ndarray | None:
-    try:
-        out = np.linalg.inv(A)
-    except np.linalg.LinAlgError:
-        return None
-    if not np.all(np.isfinite(out)):
-        return None
-    return out
+    return _finite_or_none(np.linalg.inv, A)
+
+
+def _irls_terms(X, c, k):
+    eta = xdot(X, k["gma"])
+    mu = sigmoid(eta)
+    s = c["w"] * mu * (1 - mu)
+    z = eta + (c["d"] - mu) / np.maximum(mu * (1 - mu), 1e-12)
+    return {"H": gram(s, X), "r": wx(s, X) * z[:, None]}
 
 
 def irls_logit(
     cell_df: DataFrame,
     xcols: list[str],
-    spark: SparkSession,
+    spark: SparkSession,  # noqa: ARG001 - kept for callers; passes need no session
     active_cids: list[int],
     max_iter: int = 25,
     tol: float = 1e-8,
     init: dict[int, np.ndarray] | None = None,
 ) -> dict[int, np.ndarray | None]:
     """Weighted logistic regression of d on X per cell, all cells
-    simultaneously: each IRLS iteration is one aggregation pass over the
-    (cached) cell table; the p×p solves happen on the driver. Converged
-    cells leave the broadcast join, so late iterations aggregate only
-    the stragglers.
+    simultaneously: each IRLS iteration is one ``cell_sums`` pass (one
+    Spark job) over the (cached) cell table with the coefficients in
+    the closure; the p×p solves happen on the driver. Converged cells
+    leave the pass, so late iterations read only the stragglers' rows.
 
     ``init`` warm-starts the intercept (e.g. logit of the cell's
     treatment share) — the fixed point is unchanged, it just converges
@@ -142,23 +222,13 @@ def irls_logit(
     for _ in range(max_iter):
         if not active:
             break
-        bdf = consts_df(
-            spark,
-            {cid: {"gma": list(beta[cid])} for cid in active if beta[cid] is not None},
-            [],
-            ["gma"],
-        )
-        it = cell_df.join(F.broadcast(bdf), "cid")
-        eta = dot(xcols, "gma")
-        mu = sigmoid(eta)
-        s = F.col("w") * mu * (1 - mu)
-        z = eta + (F.col("d") - mu) / F.greatest(mu * (1 - mu), F.lit(1e-12))
-        stats = it.groupBy("cid").agg(*gram_aggs("h", s, xcols, z)).collect()
+        consts = consts_df({cid: {"gma": beta[cid]} for cid in active})
+        sums = cell_sums(cell_df, xcols, ["d", "w"], _irls_terms, consts)
+        if not sums:  # no rows left in any active cell
+            break
         next_active = set()
-        for row in stats:
-            cid = row["cid"]
-            H, r = unpack_gram(row, "h", p)
-            new = solve_safe(H, r)
+        for cid in active:
+            new = solve_safe(sums["H"][cid], sums["r"][cid])
             if new is None:
                 beta[cid] = None
                 continue

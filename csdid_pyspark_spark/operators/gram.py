@@ -1,7 +1,8 @@
 """Distributed second-moment (Gram) accumulation over an embedding
 column — the primitive behind PCA/whitening over a vector corpus.
 
-The scale shape mirrors the estimator's Gram kernels (did/linalg.py):
+The scale shape mirrors the estimator's per-cell passes (did/linalg.py,
+which sum per cell and per partition instead):
 each Arrow batch emits ONE partial row (count, Σx, ΣxxT), so data
 leaving the executors is O(batches · p²) floats regardless of corpus
 rows — at 100 TB the driver receives a few thousand 64×64 partials,

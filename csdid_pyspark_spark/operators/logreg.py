@@ -3,7 +3,8 @@ aggregations — the training half of a quality-classifier pipeline
 (fastText-style doc filters are trained exactly like this at corpus
 scale).
 
-Same scale shape as the DiD estimator kernels (did/linalg.py): each
+Same scale shape as the DiD estimator's IRLS (did/linalg.py, where an
+iteration is one NumPy mapInArrow pass): here each
 IRLS iteration is ONE map-side-combine aggregation producing the
 p×p weighted Gram matrix and the p-vector X'Wz — O(p²) driver traffic
 per iteration, independent of row count — and the p×p solve is driver

@@ -1190,7 +1190,7 @@ ORACLES["did_attgt_unbalanced"] = DID_ATTGT_UNBAL_SQL
 
 def did_attgt_dr_covariate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DR estimator with unit covariate x = (id % 7) - 3: per-cell
-    IRLS propensity fit (did/linalg.py — Gram aggregations per
+    IRLS propensity fit (did/linalg.py — one per-cell pass per
     iteration, driver sees p×p scalars), weighted outcome regression,
     and the Sant'Anna–Zhao DR influence function with both correction
     terms live."""

@@ -37,8 +37,10 @@ after the stream drains.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,11 +62,17 @@ QUERIES: dict = {}
 ORACLES: dict = {}
 
 
-def _drain_to_table(sdf: DataFrame, output_mode: str, timeout: int = 300) -> DataFrame:
-    """Run a streaming frame to completion into a memory sink; return
-    the sink table. availableNow processes everything the source has
-    and stops — the batch-bounded way to execute the true streaming
-    operator graph (state store, watermark bookkeeping and all).
+# spark.sql.shuffle.partitions is session-global: drains that overlap
+# must not interleave their override and restore
+_SHUFFLE_OVERRIDE = threading.Lock()
+
+
+def _run_stream(sdf: DataFrame, output_mode: str, timeout: int = 300):
+    """Run a streaming frame to completion into a fresh memory sink and
+    return ``(finished query, sink name)``. availableNow processes
+    everything the source has and stops — the batch-bounded way to
+    execute the true streaming operator graph (state store, watermark
+    bookkeeping and all).
 
     State-store sizing: a stateful streaming query fixes its state
     partition count from ``spark.sql.shuffle.partitions`` AT START and
@@ -75,36 +83,41 @@ def _drain_to_table(sdf: DataFrame, output_mode: str, timeout: int = 300) -> Dat
     stateful stage per micro-batch of pure launch overhead. The count
     is env-parameterised (``SPARK_GRAFT_STREAM_SHUFFLE``, default 8
     locally); a production deployment sizes it to its expected key
-    cardinality / throughput and sets the var (or conf) accordingly —
-    the batch session conf is restored after the drain, so nothing
-    else sees the override."""
-    import os
-
+    cardinality / throughput and sets the var (or conf) accordingly.
+    The override holds a module lock until the drain ends and the
+    session value is restored, so concurrent drains each see it and
+    nothing outlives them."""
     spark = sdf.sparkSession
     n_state = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"sg_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination returns False on timeout WITHOUT raising — a
-        # partially-drained sink would then be hash-compared as if
-        # complete (misreported as a correctness divergence) while the
-        # query leaks into the shared session. Stop it and fail loudly.
-        if not q.awaitTermination(timeout):
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain {name!r} did not finish within {timeout}s"
+    with _SHUFFLE_OVERRIDE:
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return sdf.sparkSession.table(name)
+            # awaitTermination returns False on timeout WITHOUT raising — a
+            # partially-drained sink would then be hash-compared as if
+            # complete (misreported as a correctness divergence) while the
+            # query leaks into the shared session. Stop it and fail loudly.
+            if not q.awaitTermination(timeout):
+                q.stop()
+                raise TimeoutError(
+                    f"streaming drain {name!r} did not finish within {timeout}s"
+                )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return q, name
+
+
+def _drain_to_table(sdf: DataFrame, output_mode: str, timeout: int = 300) -> DataFrame:
+    """Drain a streaming frame (``_run_stream``); return the sink table."""
+    return sdf.sparkSession.table(_run_stream(sdf, output_mode, timeout)[1])
 
 
 # ---------------------------------------------------------------------------
@@ -599,27 +612,7 @@ def _psi_append_core(
             F.col("count").alias("c"),
         )
     )
-    import os
-
-    name = f"sg_{uuid.uuid4().hex[:12]}"
-    # same env-gated state-partition sizing as _drain_to_table (this
-    # drain keeps its own start() because it must read lastProgress)
-    n_state = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-        q = (
-            cur_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"streaming drain {name!r} did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    q, name = _run_stream(cur_stream, "append")
     prog = _json.loads(q.lastProgress.json) if q.lastProgress else {}
     ops = prog.get("stateOperators") or [{}]
     state_info = {

@@ -156,6 +156,87 @@ def test_uncovered_aggte_bootstrap_runs_one_moment_pass(spark, monkeypatch):
         plain.unpersist()
 
 
+def test_irls_runs_one_spark_job_per_iteration(spark, monkeypatch):
+    """Each IRLS iteration is one pass over the cell table: the
+    coefficients travel with the task, so no constants table, broadcast
+    or shuffle adds jobs. Iterations are counted as calls of the helper
+    that packs a pass's per-cell constants."""
+    import pandas as pd
+
+    from csdid_pyspark_spark.did import linalg
+
+    rng = np.random.default_rng(3)
+    x = rng.normal(size=600)
+    d = (rng.random(600) < 1 / (1 + np.exp(-0.8 * x))).astype(float)
+    cell = spark.createDataFrame(pd.DataFrame(
+        {"cid": np.arange(600) % 3, "d": d, "w": 1.0, "_x0": 1.0, "_x1": x}
+    )).cache()
+    cell.count()
+    iters = []
+    real = linalg.consts_df
+    monkeypatch.setattr(linalg, "consts_df", lambda *a, **k: iters.append(1) or real(*a, **k))
+    try:
+        out = {}
+        jobs = _jobs_started(
+            spark, lambda: out.update(linalg.irls_logit(cell, ["_x0", "_x1"], spark, [0, 1, 2]))
+        )
+    finally:
+        cell.unpersist()
+    assert all(out[c] is not None for c in (0, 1, 2))
+    assert len(iters) >= 3
+    assert jobs == len(iters)
+
+
+def test_dr_panel_kernel_passes_read_cell_cache_without_exchange(spark, monkeypatch):
+    """Every kernel pass of a DR panel fit (pass 1, each IRLS iteration,
+    the propensity pass and the influence-function pass) reads the
+    cached cell table directly: no shuffle and no broadcast between the
+    cache and the pass."""
+    from csdid_pyspark_spark.did import ATTgt, attgt
+    from tests.test_did_parity import make_panel_dgp
+
+    df_cls = type(spark.range(1))
+    plans, inside = [], []
+
+    def plan_of(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for action in ("collect", "toArrow"):
+        orig = getattr(df_cls, action)
+
+        def recorded(self, *a, _orig=orig, **k):
+            if inside:
+                plans.append(plan_of(self))
+            return _orig(self, *a, **k)
+        monkeypatch.setattr(df_cls, action, recorded)
+    real = attgt.estimate_panel
+
+    def kernels(*a, **k):
+        inside.append(1)
+        try:
+            ests, if_raw = real(*a, **k)
+        finally:
+            inside.clear()
+        plans.append(plan_of(if_raw))
+        return ests, if_raw
+    monkeypatch.setattr(attgt, "estimate_panel", kernels)
+
+    pdf = make_panel_dgp(n_units=120, seed=5)
+    est = ATTgt(spark.createDataFrame(pdf), "Y", "period", "id", "G", xfmla="Y ~ x1",
+                allow_unbalanced_panel=False)
+    try:
+        est.fit("dr")
+    finally:
+        est.unpersist()
+    assert len(plans) >= 4, plans
+    for plan in plans:
+        # the text after the first InMemoryRelation replays the cached
+        # table's own lineage; the live pass is the segment before it
+        head = plan.split("InMemoryRelation", 1)[0]
+        assert "InMemoryTableScan" in head, plan
+        assert "Exchange" not in head, plan
+
+
 def test_q4_semi_join_with_nonequi_condition(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q4_late_shipping")
     assert "LeftSemi" in plan

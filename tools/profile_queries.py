@@ -8,7 +8,8 @@ read/write bytes. This separates "few big stages doing real work" from
 that decides what to optimize at bench scale (guide §1.1).
 
 Usage: python tools/profile_queries.py [query ...]   (default: all headline)
-Writes plans/r12/profile.json and prints a sorted table.
+Writes profile.json next to the event logs it parses (EVDIR, which it
+recreates on each run) and prints a sorted table.
 """
 
 from __future__ import annotations
@@ -152,15 +153,10 @@ def main() -> None:
         for k in ("task_time_s", "shuffle_read_mb", "shuffle_write_mb", "gc_s"):
             p[k] = round(p[k], 3)
 
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-        "profile.json",
-    )
-    os.makedirs(os.path.dirname(out), exist_ok=True)
+    out = os.path.join(EVDIR, "profile.json")
     with open(out, "w") as f:
         json.dump(prof, f, indent=1)
+    print(f"profile written to {out}")
 
     rows = sorted(prof.items(), key=lambda kv: -(kv[1]["wall_s"] or 0))
     hdr = f"{'query':32s} {'wall':>6s} {'jobs':>4s} {'stg':>4s} {'tasks':>5s} {'tasktime':>8s} {'shr MB':>7s} {'shw MB':>7s}"
