@@ -26,18 +26,14 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-# terms(X, cols, consts) → {name: per-row array (rows, *shape)}: X is the
-# rows × p covariate matrix, cols the named columns, consts the pass's
-# per-cell constants gathered to each row.
-Terms = Callable[[np.ndarray, dict, dict], dict]
-
 _BLOB = "layout string, sums binary"
 
 
 def consts_df(per_cell: dict[int, dict[str, float | np.ndarray]]) -> dict[str, np.ndarray]:
     """Pack one pass's per-cell constants into dense arrays indexed by
     cell id (zero rows for cells the pass skips), plus the ``live`` mask
-    of the cells it reads."""
+    of the cells it reads. perfbench/tracing.py counts calls of this
+    name inside ``irls_logit`` as IRLS iterations: one call per pass."""
     ncell = max(per_cell, default=-1) + 1
     out = {"live": np.zeros(ncell, bool)}
     for cid, named in per_cell.items():
@@ -62,7 +58,7 @@ def _batch(rb: pa.RecordBatch, xcols: list[str], cols: list[str], consts: dict |
     def col(c):
         return rb.column(c).to_numpy(zero_copy_only=False).astype(float)[keep]
 
-    X = np.column_stack([col(c) for c in xcols]) if xcols else np.empty((len(cid), 0))
+    X = np.column_stack([col(c) for c in xcols])
     per_row = {k: v[cid] for k, v in (consts or {}).items() if k != "live"}
     return keep, cid, X, {c: col(c) for c in cols}, per_row
 
@@ -71,22 +67,27 @@ def cell_sums(
     cell_df: DataFrame,
     xcols: list[str],
     cols: list[str],
-    terms: Terms,
+    terms: Callable[[np.ndarray, dict, dict], dict],
     consts: dict[str, np.ndarray] | None = None,
 ) -> dict[str, np.ndarray]:
-    """Σ over each cell's rows of every term, in one Spark job: name →
-    (cells, *shape) array, row c holding cell c's sums (zeros where the
-    cell has no rows). With ``consts`` only live cells' rows are read."""
+    """Σ over each cell's rows of every term of ``terms(X, cols, consts)``
+    → {name: per-row array (rows, *shape)}, where X is the rows × p
+    covariate matrix, cols the named columns and consts the pass's
+    per-cell constants gathered to each row; with ``consts`` only live
+    cells' rows count. One Spark job; returns name → (cells, *shape)
+    array, row c holding cell c's sums (zeros where it has no rows)."""
 
     def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         layout, acc = [], np.zeros((0, 0))
         for rb in batches:
             _, cid, X, named, per_row = _batch(rb, xcols, cols, consts)
+            if not len(cid):
+                continue
             with np.errstate(over="ignore"):
                 out = terms(X, named, per_row)
             layout = [(k, v.shape[1:]) for k, v in out.items()]
             T = np.concatenate([v.reshape(len(cid), -1) for v in out.values()], axis=1)
-            m, k = int(cid.max(initial=-1)) + 1, T.shape[1]
+            m, k = int(cid.max()) + 1, T.shape[1]
             if m > len(acc) or k != acc.shape[1]:  # k is fixed once a batch is seen
                 acc = np.vstack([acc.reshape(-1, k), np.zeros((m - len(acc), k))])
             at = (cid[:, None] * k + np.arange(k)).ravel()
@@ -95,6 +96,8 @@ def cell_sums(
             {"layout": [json.dumps([acc.shape, layout])], "sums": [acc.tobytes()]}
         )
 
+    if consts is not None and not consts["live"].any():
+        return {}
     blobs = cell_df.select("cid", *xcols, *cols).mapInArrow(part, _BLOB).toArrow()
     ncell = len(consts["live"]) if consts is not None else 0
     parts = []
@@ -131,7 +134,9 @@ def cell_rows(
 
     def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            keep, _, X, named, per_row = _batch(rb, xcols, cols, consts)
+            keep, cid, X, named, per_row = _batch(rb, xcols, cols, consts)
+            if not len(cid):
+                continue
             with np.errstate(over="ignore"):
                 inf = value(X, named, per_row)
             kept = rb.filter(pa.array(keep))
@@ -201,7 +206,8 @@ def irls_logit(
     simultaneously: each IRLS iteration is one ``cell_sums`` pass (one
     Spark job) over the (cached) cell table with the coefficients in
     the closure; the p×p solves happen on the driver. Converged cells
-    leave the pass, so late iterations read only the stragglers' rows.
+    leave the pass: late iterations do per-row math only for the
+    stragglers' rows.
 
     ``init`` warm-starts the intercept (e.g. logit of the cell's
     treatment share) — the fixed point is unchanged, it just converges

@@ -120,3 +120,19 @@ def test_singular_outcome_design_cell_is_skipped(spark):
     assert len(skipped) == 2 and skipped["att"].isna().all()
     assert np.isfinite(table[~based_in_1]["att"]).all()
     assert warnings_ == ["singular outcome-regression design"] * 2
+
+
+def test_fit_with_every_cell_skipped_returns_nan_table(spark):
+    """x1 separates every cohort from the never-treated units, so every
+    cell's propensity logit fails and no cell reaches the final passes:
+    the fit still returns the full table, all NaN, with each reason."""
+    pdf = _two_cohort_panel(lambda i, g, t: (1.0 if g else -1.0) + 0.01 * (i % 9))
+    est = ATTgt(spark.createDataFrame(pdf), "Y", "period", "id", "G", xfmla="Y ~ x1",
+                allow_unbalanced_panel=False)
+    try:
+        table = est.fit(est_method="dr")
+        warnings_ = est.fit_result.warnings_
+    finally:
+        est.unpersist()
+    assert len(table) == 6 and table["att"].isna().all()
+    assert warnings_ == ["propensity-score logit did not converge"] * 6
