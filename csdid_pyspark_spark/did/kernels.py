@@ -142,7 +142,7 @@ def estimate_panel(
     scaling to the unit universe happens in attgt."""
     p = len(xcols)
     s1 = cell_sums(cell_df, xcols, PANEL_COLS, _panel_pass1)
-    n_of = s1.get("n", np.zeros(0))
+    n_of = s1["n"]
     cids = [int(c) for c in np.flatnonzero(n_of)]
     pass1 = _by_cell(s1, cids)
 
@@ -354,7 +354,7 @@ def estimate_rc(
     ATTgt.py:424-432)."""
     p = len(xcols)
     s1 = cell_sums(cell_df, xcols, RC_COLS, _rc_pass1)
-    n_of = s1.get("n", np.zeros(0))
+    n_of = s1["n"]
     cids = [int(c) for c in np.flatnonzero(n_of)]
     pass1 = _by_cell(s1, cids)
 

@@ -18,16 +18,12 @@ of sums. This replaces the reference's collect-to-NumPy pattern
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StructField, StructType
-
-_BLOB = "layout string, sums binary"
-
 
 def consts_df(per_cell: dict[int, dict[str, float | np.ndarray]]) -> dict[str, np.ndarray]:
     """Pack one pass's per-cell constants into dense arrays indexed by
@@ -63,6 +59,13 @@ def _batch(rb: pa.RecordBatch, xcols: list[str], cols: list[str], consts: dict |
     return keep, cid, X, {c: col(c) for c in cols}, per_row
 
 
+def _layout(terms, p: int, cols: list[str], consts: dict | None) -> list[tuple[str, tuple]]:
+    """Names and per-row shapes of a pass's terms, from one call on zero rows."""
+    k = {n: v[:0] for n, v in (consts or {}).items() if n != "live"}
+    out = terms(np.zeros((0, p)), {c: np.zeros(0) for c in cols}, k)
+    return [(n, v.shape[1:]) for n, v in out.items()]
+
+
 def cell_sums(
     cell_df: DataFrame,
     xcols: list[str],
@@ -75,40 +78,33 @@ def cell_sums(
     covariate matrix, cols the named columns and consts the pass's
     per-cell constants gathered to each row; with ``consts`` only live
     cells' rows count. One Spark job; returns name → (cells, *shape)
-    array, row c holding cell c's sums (zeros where it has no rows)."""
+    array, row c holding cell c's sums (zeros where it has no rows), or
+    {} without a job when no cell is live."""
+    if consts is not None and not consts["live"].any():
+        return {}
+    layout = _layout(terms, len(xcols), cols, consts)
+    width = sum(int(np.prod(shape)) for _, shape in layout)
 
     def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        layout, acc = [], np.zeros((0, 0))
+        acc = np.zeros((0, width))
         for rb in batches:
             _, cid, X, named, per_row = _batch(rb, xcols, cols, consts)
             if not len(cid):
                 continue
             with np.errstate(over="ignore"):
                 out = terms(X, named, per_row)
-            layout = [(k, v.shape[1:]) for k, v in out.items()]
             T = np.concatenate([v.reshape(len(cid), -1) for v in out.values()], axis=1)
-            m, k = int(cid.max()) + 1, T.shape[1]
-            if m > len(acc) or k != acc.shape[1]:  # k is fixed once a batch is seen
-                acc = np.vstack([acc.reshape(-1, k), np.zeros((m - len(acc), k))])
-            at = (cid[:, None] * k + np.arange(k)).ravel()
-            acc[:m] += np.bincount(at, weights=T.ravel(), minlength=m * k).reshape(m, k)
-        yield pa.RecordBatch.from_pydict(
-            {"layout": [json.dumps([acc.shape, layout])], "sums": [acc.tobytes()]}
-        )
+            m = int(cid.max()) + 1
+            if m > len(acc):
+                acc = np.vstack([acc, np.zeros((m - len(acc), width))])
+            at = (cid[:, None] * width + np.arange(width)).ravel()
+            acc[:m] += np.bincount(at, weights=T.ravel(), minlength=m * width).reshape(m, width)
+        yield pa.RecordBatch.from_pydict({"sums": [acc.tobytes()]})
 
-    if consts is not None and not consts["live"].any():
-        return {}
-    blobs = cell_df.select("cid", *xcols, *cols).mapInArrow(part, _BLOB).toArrow()
-    ncell = len(consts["live"]) if consts is not None else 0
-    parts = []
-    for spec, sums in zip(blobs["layout"].to_pylist(), blobs["sums"].to_pylist()):
-        shape, layout = json.loads(spec)
-        if shape[0]:
-            parts.append(np.frombuffer(sums, np.float64).reshape(shape))
-            ncell = max(ncell, shape[0])
-    if not parts:
-        return {}
-    total = np.zeros((ncell, parts[0].shape[1]))
+    blobs = cell_df.select("cid", *xcols, *cols).mapInArrow(part, "sums binary").toArrow()
+    parts = [np.frombuffer(b, np.float64).reshape(-1, width) for b in blobs["sums"].to_pylist()]
+    ncell = max([len(consts["live"]) if consts is not None else 0, *map(len, parts)])
+    total = np.zeros((ncell, width))
     for s in parts:
         total[: len(s)] += s
     out, at = {}, 0
@@ -230,8 +226,6 @@ def irls_logit(
             break
         consts = consts_df({cid: {"gma": beta[cid]} for cid in active})
         sums = cell_sums(cell_df, xcols, ["d", "w"], _irls_terms, consts)
-        if not sums:  # no rows left in any active cell
-            break
         next_active = set()
         for cid in active:
             new = solve_safe(sums["H"][cid], sums["r"][cid])

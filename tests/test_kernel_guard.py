@@ -7,7 +7,10 @@ dr on the panel (not-yet-treated controls) and on repeated cross
 sections, at the same tolerances (ATT abs 1e-8, SE rel 1e-6). It also
 pins the two ways a cell is skipped inside the kernels: a propensity
 logit that does not converge (perfect separation) and a singular
-outcome-regression design.
+outcome-regression design. Two more tests check that a pass's sums do
+not depend on which partition holds a live cell's rows: a last
+partition with no live row adds nothing to ``cell_sums`` or to an IRLS
+iteration.
 """
 
 from __future__ import annotations
@@ -136,3 +139,75 @@ def test_fit_with_every_cell_skipped_returns_nan_table(spark):
         est.unpersist()
     assert len(table) == 6 and table["att"].isna().all()
     assert warnings_ == ["propensity-score logit did not converge"] * 6
+
+
+def _logit_rows(cid, n, slope, seed):
+    rng = np.random.default_rng(seed)
+    x = rng.normal(size=n)
+    d = (rng.random(n) < 1 / (1 + np.exp(-slope * x))).astype(float)
+    return pd.DataFrame({"cid": cid, "d": d, "w": 1.0 + (np.arange(n) % 3), "dy": x + d,
+                         "_x0": 1.0, "_x1": x})
+
+
+def _partitions(spark, *pdfs):
+    """A cached cell table whose i-th partition holds exactly pdfs[i]."""
+    rows = [[tuple(r) for r in p.astype(float).itertuples(index=False)] for p in pdfs]
+    rdd = spark.sparkContext.parallelize(rows, len(rows)).flatMap(list)
+    out = spark.createDataFrame(rdd, "cid double, d double, w double, dy double, _x0 double, _x1 double")
+    out = out.cache()
+    out.count()
+    return out
+
+
+def test_cell_sums_independent_of_where_live_rows_sit(spark):
+    """A partition with no row of a live cell adds nothing, wherever it
+    sits: the sums of a table whose last partition is empty, or holds
+    only rows of cells the pass does not read, equal those of the same
+    rows in one partition."""
+    from csdid_pyspark_spark.did.kernels import PANEL_COLS, _panel_pass1
+    from csdid_pyspark_spark.did.linalg import _irls_terms, cell_sums, consts_df
+
+    a = pd.concat([_logit_rows(0, 80, 1.0, 1), _logit_rows(1, 60, 0.5, 2)])
+    b = _logit_rows(1, 70, 0.5, 3)
+    split = _partitions(spark, a, b)
+    empty_last = _partitions(spark, a, a.iloc[:0])
+    whole = split.coalesce(1)
+    xcols = ["_x0", "_x1"]
+    try:
+        assert split.rdd.getNumPartitions() == 2
+        consts = consts_df({0: {"gma": np.array([0.2, -0.4])}})
+        got = cell_sums(split, xcols, ["d", "w"], _irls_terms, consts)
+        want = cell_sums(whole, xcols, ["d", "w"], _irls_terms, consts)
+        assert set(got) == {"H", "r"}
+        for k in want:
+            np.testing.assert_allclose(got[k][0], want[k][0], rtol=1e-12)
+        assert got["H"][0][0, 0] > 0
+        got1 = cell_sums(empty_last, xcols, PANEL_COLS, _panel_pass1)
+        want1 = cell_sums(empty_last.coalesce(1), xcols, PANEL_COLS, _panel_pass1)
+        for k in want1:
+            np.testing.assert_allclose(got1[k], want1[k], rtol=1e-12)
+        assert list(got1["n"]) == [80, 60]
+    finally:
+        split.unpersist()
+        empty_last.unpersist()
+
+
+def test_irls_straggler_absent_from_last_partition(spark):
+    """Cell 1 starts at its MLE and leaves after one iteration; cell 0
+    keeps iterating with no row in the table's last partition. Its
+    coefficients equal a one-partition fit's."""
+    from csdid_pyspark_spark.did.linalg import irls_logit
+
+    a = pd.concat([_logit_rows(0, 150, 1.5, 4), _logit_rows(1, 80, 0.5, 5)])
+    b = _logit_rows(1, 90, 0.5, 6)
+    split = _partitions(spark, a, b)
+    xcols = ["_x0", "_x1"]
+    try:
+        whole = irls_logit(split.coalesce(1), xcols, spark, [0, 1])
+        assert whole[0] is not None and whole[1] is not None
+        got = irls_logit(split, xcols, spark, [0, 1], init={1: whole[1]})
+    finally:
+        split.unpersist()
+    assert got[0] is not None and got[1] is not None
+    np.testing.assert_allclose(got[0], whole[0], rtol=1e-10)
+    np.testing.assert_allclose(got[1], whole[1], rtol=1e-10)
