@@ -108,9 +108,11 @@ def attach_cache(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Record the persisted intermediates ``result`` depends on, so the
     caller can release them after its final action via
     :func:`release_cache` (or :func:`cache_scope`). Appends — an
-    operator composing another attaching operator (e.g. MinHash LSH
-    wrapping ``jaccard_for_candidates``) accumulates every persist in
-    the chain on the outermost result. One-shot query runs may skip
+    operator composing another attaching operator (e.g. a query
+    deriving its result from a dedup operator's output, via
+    :func:`carry_cache`) accumulates every persist in the chain on the
+    outermost result. Every operator attaches through this function, so
+    the attachment is always a list. One-shot query runs may skip
     release and let session teardown reclaim; long-lived service loops
     must release or each call leaks executor storage memory."""
     existing = list(getattr(result, "_two_phase_cache", None) or [])
@@ -142,8 +144,6 @@ def release_cache(df: DataFrame) -> None:
     cached = getattr(df, "_two_phase_cache", None)
     if not cached:
         return
-    if isinstance(cached, DataFrame):  # pre-list attachments
-        cached = [cached]
     for c in cached:
         c.unpersist()
     df._two_phase_cache = []  # type: ignore[attr-defined]

@@ -80,6 +80,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csdid_pyspark_spark.cache import attach_cache
+
 
 def _bjs_core(
     panel: DataFrame,
@@ -355,8 +357,7 @@ def bjs_imputation_frame(
     )
     # caller releases the per-unit cache after the final action
     # (release_cache convention shared by the two-phase operators)
-    result._two_phase_cache = [c["um"]]  # type: ignore[attr-defined]
-    return result
+    return attach_cache(result, c["um"])
 
 
 def bjs_imputation_se_frame(
@@ -552,5 +553,4 @@ def bjs_imputation_se_frame(
         )
         .orderBy("e")
     )
-    result._two_phase_cache = [c["um"], pr]  # type: ignore[attr-defined]
-    return result
+    return attach_cache(result, c["um"], pr)

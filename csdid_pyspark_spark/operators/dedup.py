@@ -4,19 +4,27 @@ Four tiers, all shuffle-planned for 100 TB corpora:
 
 * exact        — hash-groupBy on a normalized fingerprint. One shuffle
                  on a short fixed-width key (md5), map-side partial agg.
-* shingle/Jaccard — postings-list self-join on 3-gram shingles; the
-                 classic candidate-pair pattern (shuffle keyed by
-                 shingle, then by pair). Exact Jaccard, SQL-checkable.
+* shingle/Jaccard — postings-list self-join on word n-gram shingles
+                 (Jaccard, containment; delta ⋈ corpus for incremental
+                 dedup): shuffle keyed by shingle, then by pair. Exact,
+                 SQL-checkable.
 * MinHash+LSH  — signature → band-bucket join; candidate generation is
                  linear in corpus size, verification only on bucket
-                 collisions. Built-ins only (md5-based hash family).
+                 collisions. Built-ins only (xxhash64 hash family).
 * SimHash      — 64-bit fingerprint via per-token hashes; near-dup =
                  identical fingerprint (or banded prefix).
+
+Each shared step is written once: ``_shingles`` is the one shingle
+expression (``shingle_table`` explodes it, ``_shingle_arrays`` keeps it
+as a per-doc array); ``_drop_hot`` is the ``max_df`` cap; ``_verify`` is
+the one exact-Jaccard verifier of LSH candidates, here and in
+``mllib_lsh``; ``_score_pairs`` is the tail every pair operator ends in
+(pairs ⋈ both sides' sizes → score → threshold → round → attach_cache).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from csdid_pyspark_spark.cache import attach_cache
@@ -85,10 +93,7 @@ def shingle_table(
                 f"first (e.g. exact_dedup) — duplicate ids would silently "
                 f"inflate shingle-set sizes and every similarity built on them."
             )
-    from csdid_pyspark_spark.operators.fanout import widen_fanout
-
     carry = list(carry_cols or [])
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
     # the shingle explode fans out ~tokens-per-doc rows per input row
     # and pipelines into this stage: widen a physically small input to
     # core count first (no-op at real scale — fanout.py). Callers that
@@ -96,16 +101,8 @@ def shingle_table(
     # the downstream shingle-keyed shuffle re-spreads both sides
     # anyway, so paying the repartition twice buys nothing
     # (dedup_incremental's +39% round-6 regression).
-    df = df.select(F.col(id_col), *[F.col(c) for c in carry], toks.alias("tokens"))
-    if widen:
-        df = widen_fanout(df)
-    parts = " || ' ' || ".join(f"tokens[i + {j}]" for j in range(n))
-    shingles = F.expr(
-        f"CASE WHEN size(tokens) >= {n} "
-        f"THEN array_distinct(transform(sequence(0, size(tokens) - {n}), i -> {parts})) "
-        f"ELSE array() END"
-    )
-    return df.select(id_col, *carry, F.explode(shingles).alias("shingle"))
+    toks, shingles = _shingles(df, text_col, id_col, n, carry, widen)
+    return toks.select(id_col, *carry, F.explode(shingles).alias("shingle"))
 
 
 def _shingle_arrays(
@@ -116,25 +113,39 @@ def _shingle_arrays(
     widen: bool = True,
 ) -> DataFrame:
     """(id, sh_arr): the per-doc DISTINCT shingle ARRAY — the map-side
-    half of ``shingle_table``, exposed so signature computations can
-    run as NARROW array expressions over it (array_min over a
-    transform) instead of paying the postings explode + a grouped
-    aggregation back to one row per doc. Same shingle set, same
-    contract (one row per id; docs shorter than n tokens get an empty
-    array rather than disappearing)."""
+    half of ``shingle_table``, exposed so signature computations and
+    the verifier can run as NARROW array expressions over it (array_min
+    over a transform, array_intersect) instead of paying the postings
+    explode + a grouped aggregation back to one row per doc. Same
+    shingle set, same contract (one row per id; docs shorter than n
+    tokens get an empty array rather than disappearing)."""
+    toks, shingles = _shingles(df, text_col, id_col, n, [], widen)
+    return toks.select(id_col, shingles.alias("sh_arr"))
+
+
+def _shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int, carry: list[str], widen: bool
+) -> tuple[DataFrame, Column]:
+    """The one shingle expression: ``df`` tokenized to (id, *carry,
+    tokens), widened when asked, and the Column of each doc's distinct
+    word n-grams over it (0-based subscripts; empty below n tokens).
+    ``shingle_table`` explodes the Column and ``_shingle_arrays``
+    aliases it. They share the Column, not a frame: an explode of a
+    shared ``_shingle_arrays`` frame lets Spark infer a
+    ``size(sh_arr) > 0`` filter and push it below the widening
+    exchange, which computes every array twice."""
     from csdid_pyspark_spark.operators.fanout import widen_fanout
 
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    out = df.select(F.col(id_col), toks.alias("tokens"))
+    out = df.select(F.col(id_col), *[F.col(c) for c in carry], toks.alias("tokens"))
     if widen:
         out = widen_fanout(out)
     parts = " || ' ' || ".join(f"tokens[i + {j}]" for j in range(n))
-    shingles = F.expr(
+    return out, F.expr(
         f"CASE WHEN size(tokens) >= {n} "
         f"THEN array_distinct(transform(sequence(0, size(tokens) - {n}), i -> {parts})) "
         f"ELSE array() END"
     )
-    return out.select(id_col, shingles.alias("sh_arr"))
 
 
 # Above this corpus size an UNCAPPED postings self-join (max_df=None,
@@ -161,6 +172,89 @@ def _guard_exact_allpairs(df: DataFrame, limit: int | None, what: str, alternati
             f"Use {alternative} for production-scale runs, or pass "
             f"exact_limit=None to accept the cost."
         )
+
+
+def _hot_shingles(sh: DataFrame, max_df: int) -> DataFrame:
+    """Shingles whose document frequency in the postings ``sh`` exceeds
+    ``max_df``: the boilerplate that would fan a postings join out
+    quadratically."""
+    counts = sh.groupBy("shingle").agg(F.count("*").alias("df_sh"))
+    return counts.filter(F.col("df_sh") > max_df).select("shingle")
+
+
+def _drop_hot(sh: DataFrame, max_df: int | None, df_of: DataFrame | None = None) -> DataFrame:
+    """The df cap: ``sh`` minus the hot shingles of ``df_of`` (default
+    ``sh`` itself), as a broadcast anti-join. ``max_df=None`` = no cap."""
+    if max_df is None:
+        return sh
+    hot = _hot_shingles(sh if df_of is None else df_of, max_df)
+    return sh.join(F.broadcast(hot), "shingle", "left_anti")
+
+
+def _jaccard(n_inter: Column, n_a: Column, n_b: Column) -> Column:
+    """|A ∩ B| / |A ∪ B| from the set sizes."""
+    return n_inter / (n_a + n_b - n_inter)
+
+
+def _score_pairs(
+    pairs: DataFrame, keys: tuple[str, str], side_a: DataFrame, side_b: DataFrame, name: str,
+    score: Column, threshold: float, cached: list[DataFrame], extra: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The scoring tail every pair operator shares: ``pairs`` ⋈
+    ``side_a`` on ``keys[0]`` ⋈ ``side_b`` on ``keys[1]`` (each side
+    carries that doc's set size or shingle array), ``score`` kept when
+    ≥ ``threshold`` and rounded to 6 places, then ``extra`` columns.
+    ``cached`` are the persists the result depends on (attach_cache)."""
+    ka, kb = keys
+    return attach_cache(
+        pairs.join(side_a, ka)
+        .join(side_b, kb)
+        .withColumn(name, score)
+        .filter(F.col(name) >= threshold)
+        .select(ka, kb, F.round(name, 6).alias(name), *extra),
+        *cached,
+    )
+
+
+def _self_join(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_df: int | None,
+    block_col: str | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The postings self-join under :func:`jaccard_pairs` and
+    :func:`containment_pairs`: (id_a, id_b, n_inter) for id_a < id_b
+    sharing ≥1 shingle (and ``block_col``), each side's set size as
+    (id_a, n_a) and (id_b, n_b), and the persisted postings."""
+    # r11 note: a variant that carried n_sh = size(array_distinct(...))
+    # through the posting rows (removing the sizes groupBy and both
+    # pair-scale size joins; 17 -> 7 exchanges) measured 2-2.5x SLOWER
+    # at sf0.1 in interleaved same-window A/B (5.4-6.2 s vs 2.3-3.1 s
+    # solo medians, control query flat): the extra per-row ints ride
+    # the candidate-pair hash aggregation — the one structure that is
+    # quadratic in bucket df — and widening its rows/buffers costs far
+    # more than the removed doc-scale pass and two broadcast-sized
+    # joins ever saved. Reverted on that measurement.
+    carry = [block_col] if block_col else None
+    sh = _drop_hot(shingle_table(df, text_col, id_col, n, carry_cols=carry), max_df)
+    # the postings feed sizes AND both sides of the self-join: persist
+    # once so the explode runs once, not three times. n_sh is the
+    # POST-cap per-doc posting count (the oracle counts it after the
+    # hot anti-join too).
+    sh = sh.persist()
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    a, b = sh.alias("a"), sh.alias("b")
+    cond = (F.col("a.shingle") == F.col("b.shingle")) & (
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
+    if block_col:
+        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
+    inter = (
+        a.join(b, cond)
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count("*").alias("n_inter"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    return inter, sa, sb, sh
 
 
 def jaccard_pairs(
@@ -203,51 +297,9 @@ def jaccard_pairs(
             df, exact_limit, "jaccard_pairs(max_df=None, block_col=None)",
             "max_df/block_col or minhash_lsh_pairs",
         )
-    # r11 note: a variant that carried n_sh = size(array_distinct(...))
-    # through the posting rows (removing the sizes groupBy and both
-    # pair-scale size joins; 17 -> 7 exchanges) measured 2-2.5x SLOWER
-    # at sf0.1 in interleaved same-window A/B (5.4-6.2 s vs 2.3-3.1 s
-    # solo medians, control query flat): the extra per-row ints ride
-    # the candidate-pair hash aggregation — the one structure that is
-    # quadratic in bucket df — and widening its rows/buffers costs far
-    # more than the removed doc-scale pass and two broadcast-sized
-    # joins ever saved. Reverted per guide §1 (measure decides).
-    carry = [block_col] if block_col else None
-    sh = shingle_table(df, text_col, id_col, n, carry_cols=carry)
-    if max_df is not None:
-        hot = sh.groupBy("shingle").agg(F.count("*").alias("df_sh")).filter(
-            F.col("df_sh") > max_df
-        )
-        sh = sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
-    # the postings feed sizes AND both sides of the self-join: persist
-    # once (the same postings-persisted-once policy as the LSH path) so
-    # the explode+distinct shuffle runs once, not three times. n_sh here
-    # is the POST-cap per-doc posting count (the oracle counts it after
-    # the hot anti-join too), so the free map-side size used by the
-    # exact branch above does not apply.
-    sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    )
-    if block_col:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    inter = (
-        a.join(b, cond)
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return attach_cache(
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")),
-        sh,
-    )
+    inter, sa, sb, sh = _self_join(df, text_col, id_col, n, max_df, block_col)
+    jac = _jaccard(F.col("n_inter"), F.col("n_a"), F.col("n_b"))
+    return _score_pairs(inter, ("id_a", "id_b"), sa, sb, "jaccard", jac, threshold, [sh])
 
 
 def containment_pairs(
@@ -275,89 +327,40 @@ def containment_pairs(
             df, exact_limit, "containment_pairs(max_df=None)",
             "max_df or minhash_lsh_pairs",
         )
-    sh = shingle_table(df, text_col, id_col, n)
-    if max_df is not None:
-        hot = sh.groupBy("shingle").agg(F.count("*").alias("df_sh")).filter(
-            F.col("df_sh") > max_df
-        )
-        sh = sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
-    sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    cols = ["id_a", "id_b", F.round("containment", 6).alias("containment")]
-    if with_sizes:
-        cols += [F.col("n_a").cast("bigint").alias("n_a"), F.col("n_b").cast("bigint").alias("n_b")]
-    return attach_cache(
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("containment", F.col("n_inter") / F.least("n_a", "n_b"))
-        .filter(F.col("containment") >= threshold)
-        .select(*cols),
-        sh,
+    inter, sa, sb, sh = _self_join(df, text_col, id_col, n, max_df)
+    extra = tuple(F.col(c).cast("bigint").alias(c) for c in ("n_a", "n_b")) if with_sizes else ()
+    score = F.col("n_inter") / F.least("n_a", "n_b")
+    return _score_pairs(
+        inter, ("id_a", "id_b"), sa, sb, "containment", score, threshold, [sh], extra
     )
 
 
-def jaccard_for_candidates(
-    sh: DataFrame,
-    cand: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
+def _delta_pairs(
+    sh_d: DataFrame, sh_c: DataFrame, sizes_c: DataFrame, id_col: str, threshold: float,
+    cached: list[DataFrame],
 ) -> DataFrame:
-    """Exact shingle Jaccard restricted to a candidate pair list.
-
-    This is the verification half of every LSH dedup path: ``cand``
-    holds (id_a, id_b) with id_a < id_b, ``sh`` is the (id, shingle)
-    postings table. Postings are first semi-joined down to candidate
-    docs, then intersections come from joining the PAIR LIST to each
-    side's postings — never a postings self-join — so the cost is
-    O(|candidates| x shingles-per-doc) regardless of corpus size.
-    (A self-join over even the candidate docs' postings would re-pay
-    quadratic cost on hot shingles; the pair-list join cannot.)
-    """
-    # Both intermediates below are bounded by the CANDIDATE set (the
-    # whole point of LSH pruning), so persisting them is cheap at any
-    # corpus size — and essential: each is consumed by 2-3 downstream
-    # joins, and without a cache Spark would re-derive the full
-    # postings lineage once per consumer. Deliberately a PLAIN persist,
-    # not persist_rightsized: each is consumed only 2-3 times, and the
-    # right-sizing count would force an extra eager materialization of
-    # the expensive banding lineage (measured +1-2 s at sf0.1 for no
-    # downstream saving).
-    cand = cand.persist()
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias(id_col)
-    ).distinct()
-    sh_c = sh.join(cand_ids, id_col, "left_semi").persist()
-    sizes = sh_c.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sh_a = sh_c.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh_c.select(F.col(id_col).alias("id_b"), "shingle")
+    """delta ⋈ corpus scoring shared by :func:`jaccard_pairs_between`
+    and :func:`jaccard_pairs_against_index`: ``sh_d`` the persisted,
+    df-capped delta postings, ``sh_c`` the corpus postings, ``sizes_c``
+    the corpus (id, n_c) denominators. Only corpus postings sharing a
+    shingle with the delta can reach an intersection, so the corpus
+    side is semi-pruned first; no explicit broadcast — a big delta must
+    shuffle, AQE picks broadcast when the delta's shingle set is small."""
+    sizes_d = sh_d.groupBy(id_col).agg(F.count("*").alias("n_d"))
+    sh_c = sh_c.join(sh_d.select("shingle").distinct(), "shingle", "left_semi")
+    d, c = sh_d.alias("d"), sh_c.alias("c")
     inter = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
+        d.join(c, F.col("d.shingle") == F.col("c.shingle"))
+        .groupBy(
+            F.col(f"d.{id_col}").alias("delta_id"),
+            F.col(f"c.{id_col}").alias("corpus_id"),
+        )
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return attach_cache(
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")),
-        cand, sh_c,
-    )
+    sd = sizes_d.select(F.col(id_col).alias("delta_id"), "n_d")
+    sc = sizes_c.select(F.col(id_col).alias("corpus_id"), "n_c")
+    jac = _jaccard(F.col("n_inter"), F.col("n_d"), F.col("n_c"))
+    return _score_pairs(inter, ("delta_id", "corpus_id"), sd, sc, "jaccard", jac, threshold, cached)
 
 
 def jaccard_pairs_between(
@@ -399,46 +402,11 @@ def jaccard_pairs_between(
     # the intersection join — persist once instead of re-running the
     # corpus-wide explode+distinct (the dominant cost) three times
     sh_c_cached = shingle_table(corpus, text_col, id_col, n).persist()
-    sh_c = sh_c_cached
-    if max_df is not None:
-        hot = (
-            sh_c_cached.groupBy("shingle")
-            .agg(F.count("*").alias("df_sh"))
-            .filter(F.col("df_sh") > max_df)
-            .select("shingle")
-        )
-        sh_d = sh_d.join(F.broadcast(hot), "shingle", "left_anti")
-        sh_c = sh_c_cached.join(F.broadcast(hot), "shingle", "left_anti")
     # postings feed sizes AND the intersection join on each side
-    sh_d = sh_d.persist()
-    sizes_d = sh_d.groupBy(id_col).agg(F.count("*").alias("n_d"))
+    sh_d = _drop_hot(sh_d, max_df, sh_c_cached).persist()
+    sh_c = _drop_hot(sh_c_cached, max_df)
     sizes_c = sh_c.groupBy(id_col).agg(F.count("*").alias("n_c"))
-    # only corpus postings sharing a shingle with the delta can reach an
-    # intersection; no explicit broadcast — a big delta must shuffle,
-    # AQE picks broadcast when the delta's shingle set is small
-    sh_c_pruned = sh_c.join(sh_d.select("shingle").distinct(), "shingle", "left_semi")
-    d, c = sh_d.alias("d"), sh_c_pruned.alias("c")
-    inter = (
-        d.join(c, F.col("d.shingle") == F.col("c.shingle"))
-        .groupBy(
-            F.col(f"d.{id_col}").alias("delta_id"),
-            F.col(f"c.{id_col}").alias("corpus_id"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sd = sizes_d.select(F.col(id_col).alias("delta_id"), "n_d")
-    sc = sizes_c.select(F.col(id_col).alias("corpus_id"), "n_c")
-    return attach_cache(
-        inter.join(sd, "delta_id")
-        .join(sc, "corpus_id")
-        .withColumn(
-            "jaccard", F.col("n_inter") / (F.col("n_d") + F.col("n_c") - F.col("n_inter"))
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("delta_id", "corpus_id", F.round("jaccard", 6).alias("jaccard")),
-        sh_d,
-        sh_c_cached,
-    )
+    return _delta_pairs(sh_d, sh_c, sizes_c, id_col, threshold, [sh_d, sh_c_cached])
 
 
 def build_postings_index(
@@ -475,15 +443,7 @@ def build_postings_index(
 
     sh_c = shingle_table(corpus, text_col, id_col, n)
     spark = corpus.sparkSession
-    if max_df is not None:
-        hot = (
-            sh_c.groupBy("shingle")
-            .agg(F.count("*").alias("df_sh"))
-            .filter(F.col("df_sh") > max_df)
-            .select("shingle")
-        )
-    else:
-        hot = sh_c.select("shingle").limit(0)
+    hot = sh_c.select("shingle").limit(0) if max_df is None else _hot_shingles(sh_c, max_df)
     hot.coalesce(1).write.mode("overwrite").parquet(f"{path}/hot")
     hot_r = F.broadcast(spark.read.parquet(f"{path}/hot"))
     sh_c = sh_c.join(hot_r, "shingle", "left_anti")
@@ -521,34 +481,8 @@ def jaccard_pairs_against_index(
     sh_d = shingle_table(delta, text_col, id_col, n, widen=False)
     hot = F.broadcast(spark.read.parquet(f"{path}/hot"))
     sh_d = sh_d.join(hot, "shingle", "left_anti").persist()
-    sizes_d = sh_d.groupBy(id_col).agg(F.count("*").alias("n_d"))
-    sh_c = spark.table(table).join(
-        sh_d.select("shingle").distinct(), "shingle", "left_semi"
-    )
-    d, c = sh_d.alias("d"), sh_c.alias("c")
-    inter = (
-        d.join(c, F.col("d.shingle") == F.col("c.shingle"))
-        .groupBy(
-            F.col(f"d.{id_col}").alias("delta_id"),
-            F.col(f"c.{id_col}").alias("corpus_id"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sd = sizes_d.select(F.col(id_col).alias("delta_id"), "n_d")
-    sc = spark.read.parquet(f"{path}/sizes").select(
-        F.col(id_col).alias("corpus_id"), "n_c"
-    )
-    return attach_cache(
-        inter.join(sd, "delta_id")
-        .join(sc, "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_d") + F.col("n_c") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("delta_id", "corpus_id", F.round("jaccard", 6).alias("jaccard")),
-        sh_d,
-    )
+    sizes_c = spark.read.parquet(f"{path}/sizes")
+    return _delta_pairs(sh_d, spark.table(table), sizes_c, id_col, threshold, [sh_d])
 
 
 def _hash64(col, seed: int):
@@ -613,17 +547,14 @@ def minhash_lsh_pairs(
     (band, bucket) — in-bucket pairs are generated from the sorted
     per-bucket id array, so the candidate stage pays ONE shuffle, not
     a two-sided self-join plus a distinct). Candidates are then
-    re-scored with exact shingle Jaccard RESTRICTED to the candidate
-    list — a map-side array_intersect over the two docs' cached
-    shingle arrays (bit-identical to the postings-join form: the
-    arrays are distinct, so |intersect| and the union-size identity
-    give the same integers into the same division) — so the output is
-    exact on candidates while every stage stays linear-ish in corpus
-    size — LSH prunes the pair space AND the verification join, which
-    is what makes this run at 100 TB where the all-pairs join cannot."""
+    re-scored with exact shingle Jaccard by :func:`_verify` (map-side,
+    over the cached shingle arrays), so the output is exact on
+    candidates while every stage stays linear-ish in corpus size — LSH
+    prunes the pair space AND the verification join, which is what
+    makes this run at 100 TB where the all-pairs join cannot."""
     rows = num_hashes // bands
     # the per-doc shingle ARRAY feeds BOTH the signature computation
-    # and (exploded) the exact-Jaccard verification below; uncached,
+    # and the exact-Jaccard verification; uncached,
     # the tokenize + shingle construction (the single most expensive
     # stage of this pipeline) would run once per consumer. Signatures
     # are MAP-SIDE array_min expressions over the cached arrays — the
@@ -687,30 +618,23 @@ def minhash_lsh_pairs(
             ).alias("id_b"),
         )
     )
-    cand = pairs.distinct()
-    # exact-Jaccard verification, map-side: each candidate pair pulls
-    # its two cached shingle arrays; |A ∩ B| via array_intersect (the
-    # arrays are distinct) and the same n_a + n_b - n_inter division
-    # the postings form used — bit-identical jaccard values
-    pa = arr.select(
-        F.col(id_col).alias("id_a"),
-        F.col("sh_arr").alias("arr_a"),
-    )
-    pb = arr.select(
-        F.col(id_col).alias("id_b"),
-        F.col("sh_arr").alias("arr_b"),
-    )
+    return _verify(arr, pairs.distinct(), id_col, threshold)
+
+
+def _verify(arr: DataFrame, cand: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """The one exact-Jaccard verifier of the LSH paths: each candidate
+    (id_a, id_b) pulls its two shingle arrays from the persisted
+    (id, sh_arr) frame ``arr`` (:func:`_shingle_arrays`); |A ∩ B| is
+    the size of their array_intersect (the arrays are distinct) and the
+    score is the postings form's n_inter / (n_a + n_b - n_inter), so the
+    values are bit-identical to it. Map-side: cost O(|candidates| ×
+    shingles-per-doc) with no postings explode or self-join. Attaches
+    ``arr`` to the result."""
+    pa = arr.select(F.col(id_col).alias("id_a"), F.col("sh_arr").alias("arr_a"))
+    pb = arr.select(F.col(id_col).alias("id_b"), F.col("sh_arr").alias("arr_b"))
     n_inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    n_a, n_b = F.size("arr_a"), F.size("arr_b")
-    jac = n_inter / (n_a + n_b - n_inter)
-    return attach_cache(
-        cand.join(pa, "id_a")
-        .join(pb, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")),
-        arr,
-    )
+    jac = _jaccard(n_inter, F.size("arr_a"), F.size("arr_b"))
+    return _score_pairs(cand, ("id_a", "id_b"), pa, pb, "jaccard", jac, threshold, [arr])
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32) -> DataFrame:

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csdid_pyspark_spark.cache import attach_cache
+
 _SUMMARY_SCHEMA = "item bigint, est bigint"
 
 
@@ -126,6 +128,5 @@ def heavy_hitters(df: DataFrame, col: str, k: int) -> DataFrame:
     )
     # same lifecycle contract as operators/packing.py: the sketch pass is
     # persisted (it feeds both the candidate broadcast and the total);
-    # release with packing.release_cache(out) after the final action.
-    out._two_phase_cache = summaries  # type: ignore[attr-defined]
-    return out
+    # release with release_cache(out) after the final action.
+    return attach_cache(out, summaries)

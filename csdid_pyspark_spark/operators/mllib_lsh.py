@@ -4,8 +4,11 @@ BucketedRandomProjectionLSH ``approxNearestNeighbors`` for ANN.
 
 These wrap ``pyspark.ml`` estimators as alternatives to the pure-SQL
 implementations in operators/dedup.py and operators/similarity.py —
-same inputs/outputs, different engine path (JVM LSH models instead of
-hash-expression pipelines). Tests cross-check the two backends.
+same inputs/outputs, different candidate engine (JVM LSH models instead
+of hash-expression pipelines). The MinHash variant shares everything
+else with ``dedup.minhash_lsh_pairs``: the per-doc shingle arrays
+(``dedup._shingle_arrays``) and the exact map-side verifier
+(``dedup._verify``). Tests cross-check the two backends.
 """
 
 from __future__ import annotations
@@ -18,23 +21,7 @@ from pyspark.ml.linalg import Vectors
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csdid_pyspark_spark.operators.dedup import jaccard_for_candidates, shingle_table
-
-
-def _shingle_vectors(df: DataFrame, text_col: str, id_col: str, n: int, num_features: int) -> DataFrame:
-    """Doc → sparse binary shingle-presence vector via HashingTF."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    parts = " || ' ' || ".join(f"tokens[i + {j}]" for j in range(n))
-    shingles = F.expr(
-        f"CASE WHEN size(tokens) >= {n} "
-        f"THEN transform(sequence(0, size(tokens) - {n}), i -> {parts}) "
-        f"ELSE array() END"
-    )
-    sh = df.select(F.col(id_col), toks.alias("tokens")).select(
-        id_col, shingles.alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True)
-    return tf.transform(sh).select(id_col, "features")
+from csdid_pyspark_spark.operators.dedup import _shingle_arrays, _verify
 
 
 def minhash_lsh_pairs_mllib(
@@ -48,9 +35,16 @@ def minhash_lsh_pairs_mllib(
     seed: int = 42,
 ) -> DataFrame:
     """Near-dup pairs via MLlib MinHashLSH approxSimilarityJoin,
-    re-verified with exact shingle Jaccard (HashingTF buckets make the
-    model's own Jaccard approximate). Columns: id_a < id_b, jaccard."""
-    feats = _shingle_vectors(df, text_col, id_col, n, num_features)
+    re-verified with exact shingle Jaccard by ``dedup._verify`` (HashingTF
+    buckets make the model's own Jaccard approximate). One persisted
+    (id, sh_arr) frame feeds both HashingTF (binary, so the distinct
+    arrays give the same vectors as the raw shingle lists) and the
+    verifier; it is attached to the result for ``release_cache``.
+    Columns: id_a < id_b, jaccard."""
+    arr = _shingle_arrays(df, text_col, id_col, n).persist()
+    tf = HashingTF(inputCol="sh_arr", outputCol="features", numFeatures=num_features, binary=True)
+    # MinHashLSH rejects all-zero vectors: leave out docs without shingles
+    feats = tf.transform(arr.filter(F.size("sh_arr") > 0)).select(id_col, "features")
     mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
     model = mh.fit(feats)
     # approxSimilarityJoin threshold is a Jaccard *distance* bound
@@ -63,8 +57,7 @@ def minhash_lsh_pairs_mllib(
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
-    sh = shingle_table(df, text_col, id_col, n)
-    return jaccard_for_candidates(sh, cand, id_col, threshold)
+    return _verify(arr, cand, id_col, threshold)
 
 
 def ann_topk_mllib(

@@ -4167,8 +4167,9 @@ def _equidepth_lazy(spark: SparkSession, sf_dir: str):
             ).alias("mass"),
         )
     )
-    out._two_phase_cache = ranked._two_phase_cache  # type: ignore[attr-defined]
-    return out
+    from csdid_pyspark_spark.cache import carry_cache
+
+    return carry_cache(out, ranked)
 
 
 def events_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5061,8 +5062,9 @@ def _epoch_shuffle_lazy(spark: SparkSession, sf_dir: str):
             F.max("rn").cast("bigint").alias("rn_last"),
         )
     )
-    out._two_phase_cache = ranked._two_phase_cache  # type: ignore[attr-defined]
-    return out
+    from csdid_pyspark_spark.cache import carry_cache
+
+    return carry_cache(out, ranked)
 
 
 PACK_EPOCH_SQL = """

@@ -32,12 +32,27 @@ def test_exact_dedup_survivors(spark):
 
 
 def test_minhash_lsh_recall(spark):
+    """Both LSH backends (hash-expression and MLlib) verify candidates
+    exactly: every pair they return carries jaccard_pairs' value for
+    that pair, and banding recall stays above each backend's bound."""
+    from csdid_pyspark_spark.cache import release_cache
+    from csdid_pyspark_spark.operators import mllib_lsh
+
     docs = load_table(spark, SF, "documents")
-    exact = {(r["id_a"], r["id_b"]) for r in dedup.jaccard_pairs(docs, threshold=0.5).collect()}
-    lsh = {(r["id_a"], r["id_b"]) for r in dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()}
+    exact_df = dedup.jaccard_pairs(docs, threshold=0.5)
+    exact = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact_df.collect()}
+    release_cache(exact_df)
     assert exact, "testdata should contain near-duplicate pairs"
-    assert lsh <= exact  # LSH output is exact-verified, so no false positives
-    assert len(lsh) / len(exact) >= 0.8  # banding recall
+    for op, min_recall in (
+        (dedup.minhash_lsh_pairs, 0.8),
+        (mllib_lsh.minhash_lsh_pairs_mllib, 0.7),
+    ):
+        out = op(docs, threshold=0.5)
+        lsh = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+        release_cache(out)
+        assert lsh.keys() <= exact.keys(), op.__name__  # no false positives
+        assert lsh == {p: exact[p] for p in lsh}, op.__name__  # exact values
+        assert len(lsh) / len(exact) >= min_recall, op.__name__  # banding recall
 
 
 def test_minhash_hot_bucket_streams_and_cap_guards(spark):
@@ -1121,9 +1136,15 @@ def test_misra_gries_heavy_hitters_exact_and_bounded(spark):
     ).count()
     assert summ.agg(F.max("count")).collect()[0][0] <= k + 1
 
+    def n_cached():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    base = n_cached()
     hh = heavy_hitters(df, "tok", k)
     got = {(r["tok"], r["freq"]) for r in hh.collect()}
+    assert n_cached() > base  # the summaries persist
     release_cache(hh)
+    assert n_cached() == base
     n = len(items)
     exact = {
         (r["tok"], r["freq"])

@@ -104,7 +104,7 @@ def test_dedup_attach_release_cache_lifecycle(spark):
     loops), and composed operators accumulate every persist in the
     chain."""
     from csdid_pyspark_spark.cache import release_cache
-    from csdid_pyspark_spark.operators import dedup
+    from csdid_pyspark_spark.operators import dedup, mllib_lsh
 
     rows = [(i, "tok%d a b c d e f" % (i % 3)) for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
@@ -118,19 +118,23 @@ def test_dedup_attach_release_cache_lifecycle(spark):
         not (c.storageLevel.useMemory or c.storageLevel.useDisk) for c in cached
     )
 
-    # LSH holds exactly ONE persist since the r9 map-side rewrite: the
-    # per-doc shingle-array frame (signatures are narrow expressions
-    # over it, verification is a map-side array_intersect) — and it
+    # each LSH backend holds exactly ONE persist: the per-doc
+    # shingle-array frame (signatures or HashingTF vectors are built
+    # from it, and the shared verifier intersects its arrays) — and it
     # must be released by the same protocol
-    out2 = dedup.minhash_lsh_pairs(df, num_hashes=8, bands=4, threshold=0.3)
-    out2.collect()
-    cached2 = list(getattr(out2, "_two_phase_cache"))
-    assert len(cached2) == 1
-    assert all(c.storageLevel.useMemory or c.storageLevel.useDisk for c in cached2)
-    release_cache(out2)
-    assert all(
-        not (c.storageLevel.useMemory or c.storageLevel.useDisk) for c in cached2
-    )
+    for lsh in (
+        lambda d: dedup.minhash_lsh_pairs(d, num_hashes=8, bands=4, threshold=0.3),
+        lambda d: mllib_lsh.minhash_lsh_pairs_mllib(d, threshold=0.3),
+    ):
+        out2 = lsh(df)
+        out2.collect()
+        cached2 = list(getattr(out2, "_two_phase_cache"))
+        assert len(cached2) == 1
+        assert all(c.storageLevel.useMemory or c.storageLevel.useDisk for c in cached2)
+        release_cache(out2)
+        assert all(
+            not (c.storageLevel.useMemory or c.storageLevel.useDisk) for c in cached2
+        )
 
 
 def test_quantile_histogram_error_bounded_by_bin_width(spark, sf_dir):

@@ -5,6 +5,8 @@ fail before any benchmark notices."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -458,6 +460,34 @@ def test_attgt_if_table_cached_and_se_pass_reads_cache(spark):
     assert "InMemoryTableScan" in head, plan
     assert "Exchange" not in head, plan
     assert "Join" not in head, plan
+
+
+def test_dedup_shingles_built_once_above_widening_exchange(spark):
+    """The postings (jaccard_pairs) and the shingle arrays
+    (minhash_lsh_pairs) must each build the shingle expression once,
+    after the widen_fanout round-robin exchange. Exploding a shared
+    shingle-array frame instead lets Spark infer a size(...) > 0 filter
+    from the explode and push it below that exchange, so every array is
+    computed twice, once on the un-widened input."""
+    from csdid_pyspark_spark.cache import release_cache
+    from csdid_pyspark_spark.operators import dedup
+    from csdid_pyspark_spark.sources.tables import load_table
+    from tests.conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    for out in (dedup.jaccard_pairs(docs), dedup.minhash_lsh_pairs(docs)):
+        cached = list(out._two_phase_cache)
+        assert len(cached) == 1
+        # the optimized plan of the persisted frame: InMemoryRelation
+        # over the physical plan that computes the shingles (once that
+        # cache is materialized, AQE prints it as a final plan followed
+        # by the initial one; read only the first)
+        plan = cached[0]._jdf.queryExecution().optimizedPlan().toString()
+        plan = plan.split("== Initial Plan ==", 1)[0]
+        release_cache(out)
+        assert plan.count("array_distinct(transform(sequence") == 1, plan
+        below = plan.split("RoundRobinPartitioning", 1)[1]
+        assert not re.search(r"- (\*\(\d+\) )?Filter ", below), plan
 
 
 def test_incremental_dedup_caps_and_prunes_corpus_side(spark, sf_dir):

@@ -145,6 +145,7 @@ def main() -> None:
         # tempfile honors TMPDIR, so match any prefix — a hardcoded
         # /tmp would let a random temp path churn the snapshot doc
         plan = re.sub(r"\S*spark_graft_ivfpq_\w+", "<ivfpq-index>", plan)
+        plan = re.sub(r"\S*spark_graft_postings_\w+", "<postings-index>", plan)
         lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
