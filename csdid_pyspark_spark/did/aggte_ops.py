@@ -37,8 +37,9 @@ moments C = Σ_u z_u z_uᵀ and the draw sums S of the fit (mboot.py)
 
 — all on the driver, without Spark. The fit's pg are its cohort
 columns' totals over n. A bootstrap the fit's draws do not cover
-(the fit ran without one, or with other biters) re-runs the same
-moment pass once and keeps its draws for later requests.
+(the fit ran without one, or with other biters) re-runs the fit's
+moment pass once — on a panel, over the still-cached unit table — and
+keeps its draws for later requests.
 """
 
 from __future__ import annotations
@@ -239,8 +240,12 @@ def compute_aggte(
 
     # ----- step 2, driver only: every key's SE and bootstrap from the moments
     if bstrap and mom.S.shape[0] != biters:  # not covered by the fit's draws
-        z_df = attgt._moment_table(fr.if_df, fr.cohort_keys)
-        mom = fr.moments = mboot(z_df, "key", "uh", "inf", n, biters, alp, attgt.seed).moments
+        if fr.if_panel is not None:  # the fused pass over the still-cached unit table
+            mom = attgt._panel_moments(fr.if_panel, biters)
+        else:
+            z_df = attgt._moment_table(fr.if_df, fr.cohort_keys)
+            mom = mboot(z_df, "key", "uh", "inf", n, biters, alp, attgt.seed).moments
+        fr.moments = mom
     keys = list(specs)
     theta = np.zeros((len(mom.keys), len(keys)))
     for j, (_, th, be) in enumerate(specs.values()):

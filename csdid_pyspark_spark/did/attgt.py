@@ -3,12 +3,17 @@ effects, Spark-native.
 
 API mirrors the reference (``ATTgt(data, yname, tname, idname, gname,
 ...).fit(est_method, base_period, bstrap)`` — reference ATTgt.py:22-52,
-233) but the execution model is one declarative plan: cached cell
-table → per-cell pass kernels (did/linalg.py) → influence functions as
-rows → one pass of per-unit moments (mboot.py) from which the SEs, the seeded
-bootstrap, every aggregation and the pre-test follow on the driver. No
-per-cell Spark actions, no dense n×(G·T) driver matrix (the reference's
-scalability cliff, SURVEY.md §4).
+233) but the execution model is one declarative plan. A balanced panel
+is fitted over one persisted unit table (one row per unit, did/cells.py)
+that every per-cell kernel pass expands in NumPy (did/linalg.py); the
+influence functions are formed and folded into the per-unit moments in
+one more pass over it (``panel_moments``), and the table stays cached so
+a later bootstrap re-runs only that pass. Repeated cross sections (and
+custom kernels) use a cached cell table, influence functions as rows and
+one pass of per-unit moments over them (did/mboot.py). From the moments
+the SEs, the seeded bootstrap, every aggregation and the pre-test follow
+on the driver. No per-cell Spark actions, no dense n×(G·T) driver matrix
+(the reference's scalability cliff, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -22,9 +27,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from csdid_pyspark_spark.cache import persist_rightsized
 from csdid_pyspark_spark.did import cells as cells_mod
-from csdid_pyspark_spark.did.kernels import estimate_custom, estimate_panel, estimate_rc
-from csdid_pyspark_spark.did.mboot import Moments, mboot, sigma_crit, unit_moments
+from csdid_pyspark_spark.did.kernels import (
+    PanelIF,
+    estimate_custom,
+    estimate_panel,
+    estimate_rc,
+    panel_moments,
+)
+from csdid_pyspark_spark.did.mboot import Moments, boot_result, mboot, sigma_crit, unit_moments
 from csdid_pyspark_spark.did.preprocess import CL, G, ID, T, W, DidError, PanelData, preprocess_did
 from csdid_pyspark_spark.did.stats import chi2_sf, norm_ppf
 
@@ -38,12 +50,18 @@ MOMENT_MAX_COLS = 2048
 EST_METHODS = ("dr", "ipw", "reg")
 
 
+def _cohort_keys(glist: list[float]) -> dict[float, int]:
+    """The moment key of each cohort's weight column (cells use keys ≥ 0)."""
+    return {g: -2 - j for j, g in enumerate(glist)}
+
+
 @dataclass
 class FitResult:
     table: pd.DataFrame  # g, t, post, att, se, lower, upper, sig
     crit_val: float
-    if_df: DataFrame  # (cid, unit-hash uh, inf_sc) scaled to the unit universe
-    moments: Moments  # of the IF table's cells and the cohort weight columns
+    if_df: DataFrame | None  # RC / custom kernel: (cid, unit-hash uh, inf_sc) rows
+    if_panel: PanelIF | None  # built-in panel kernels: the IF constants per cell
+    moments: Moments  # of the fit's IF cells and the cohort weight columns
     cohort_keys: dict[float, int]  # cohort g → its weight column's key
     cell_map: pd.DataFrame  # cid, g, t, post
     n: int
@@ -102,6 +120,23 @@ class ATTgt:
         )
         self.fit_result: FitResult | None = None
         self.summary_aggte: dict = {}
+        self._units: DataFrame | None = None
+
+    def _unit_table(self) -> DataFrame:
+        """The persisted unit table of a panel, built on first use and
+        kept until ``unpersist``: every fit and re-bootstrap reads it."""
+        if self._units is None:
+            self._units, _ = persist_rightsized(
+                cells_mod.build_unit_table(self.pdata),
+                known_rows=self.pdata.n * len(self.pdata.tlist),
+            )
+        return self._units
+
+    def _panel_moments(self, fit: PanelIF, biters: int) -> Moments:
+        """The moment pass of a panel fit over the unit table (one Spark
+        job); a bootstrap the fit did not draw re-runs it."""
+        return panel_moments(self._unit_table(), fit, self.pdata.covariates, self.pdata.n,
+                             _cohort_keys(self.pdata.glist), biters, self.seed)
 
     # ------------------------------------------------------------------
     def fit(
@@ -128,68 +163,26 @@ class ATTgt:
                 f"granularity? Coarsen the time/cohort grid, or raise "
                 f"csdid_pyspark_spark.did.attgt.MOMENT_MAX_COLS to accept the cost."
             )
-        sdf = cells_mod.spec_df(self.spark, specs)
-        from csdid_pyspark_spark.cache import persist_rightsized
-
-        # driver-known upper bound on cell-table rows (each inference
-        # unit appears at most once per active cell) — sizes the cache
-        # partition count with zero extra passes (cache.py)
-        cell_bound = max(1, pdata.n * max(1, active_cells))
-        if pdata.panel:
-            cell_df, _ = persist_rightsized(
-                cells_mod.build_cell_table_panel(
-                    pdata, sdf, self.control_group, self.anticipation
-                ),
-                known_rows=cell_bound,
-            )
-            if callable(est_method):
-                ests, if_raw = estimate_custom(cell_df, pdata.covariates, est_method, self.spark, rc=False)
-            else:
-                ests, if_raw = estimate_panel(cell_df, pdata.covariates, est_method, self.spark)
-            uh = F.xxhash64("uid")
-        else:
-            cell_df, _ = persist_rightsized(
-                cells_mod.build_cell_table_rc(
-                    pdata,
-                    sdf,
-                    self.control_group,
-                    self.anticipation,
-                    ref_preslice=self.rc_slice == "reference",
-                ),
-                known_rows=cell_bound,
-            )
-            if callable(est_method):
-                ests, if_raw = estimate_custom(cell_df, pdata.covariates, est_method, self.spark, rc=True)
-            else:
-                ests, if_raw = estimate_rc(cell_df, pdata.covariates, est_method, self.spark)
-            uh = F.xxhash64("uid", "ut")
-
         n = pdata.n
+        cohort_keys = _cohort_keys(pdata.glist)
+        if_df = if_panel = None
+        layout = cells_mod.PanelLayout.of(
+            specs, pdata.tlist, self.control_group, self.anticipation
+        ) if pdata.panel else None
+        if layout is not None and not callable(est_method):
+            ests, if_panel = estimate_panel(self._unit_table(), pdata.covariates, est_method,
+                                            self.spark, layout)
+            mom = self._panel_moments(if_panel, self.biters if bstrap else 0)
+            mb = boot_result(mom.S, mom.keys, mom.clusters or n, self.alp) if bstrap else None
+        else:
+            cell_df, ests, if_df = self._fit_cell_table(specs, est_method, active_cells, layout)
+            # one pass over the IF table and the unit weights: the SEs here,
+            # and every aggregation and the pre-test later, come from it
+            z = self._moment_table(if_df, cohort_keys)
+            mb = mboot(z, "key", "uh", "inf", n, self.biters, self.alp, self.seed) if bstrap else None
+            mom = mb.moments if bstrap else unit_moments(z, "key", "uh", "inf", 0, self.seed)
+            cell_df.unpersist()
         est_by_cid = {e.cid: e for e in ests}
-        # scale per-cell IF into the length-n universe: ×(n/n1), zeros
-        # implicit for units outside the cell (reference ATTgt.py:374-378);
-        # the per-cell factors are a literal array indexed by cid
-        scale = [0.0] * (max((e.cid for e in ests), default=0) + 1)
-        for e in ests:
-            if not e.skipped and e.n1:
-                scale[e.cid] = n / e.n1
-        # exact driver-known row count: one IF row per (cell, unit)
-        if_rows = int(sum(e.n1 for e in ests if not e.skipped)) or 1
-        if_df, _ = persist_rightsized(
-            if_raw.select(
-                "cid",
-                uh.alias("uh"),
-                (F.col("inf") * F.lit(scale)[F.col("cid")]).alias("inf_sc"),
-            ),
-            known_rows=if_rows,
-        )
-
-        # one pass over the IF table and the unit weights: the SEs here,
-        # and every aggregation and the pre-test later, come from it
-        cohort_keys = {g: -2 - j for j, g in enumerate(pdata.glist)}
-        z = self._moment_table(if_df, cohort_keys)
-        mb = mboot(z, "key", "uh", "inf", n, self.biters, self.alp, self.seed) if bstrap else None
-        mom = mb.moments if bstrap else unit_moments(z, "key", "uh", "inf", 0, self.seed)
         cids = [e.cid for e in ests if not e.skipped and e.cid in mom.pos]
         crit_val = float(norm_ppf(1 - self.alp / 2))
         if bstrap:
@@ -226,6 +219,7 @@ class ATTgt:
             table=table,
             crit_val=crit_val,
             if_df=if_df,
+            if_panel=if_panel,
             moments=mom,
             cohort_keys=cohort_keys,
             cell_map=cell_map,
@@ -236,8 +230,58 @@ class ATTgt:
             alp=self.alp,
             warnings_=[e.message for e in ests if e.skipped],
         )
-        cell_df.unpersist()
         return table
+
+    # ------------------------------------------------------------------
+    def _fit_cell_table(self, specs, est_method, active_cells: int, layout) -> tuple:
+        """Estimate every cell over a cached cell table: repeated cross
+        sections, or a custom kernel on a panel (whose cell table is
+        the unit table expanded by ``layout``). Returns the cell table,
+        to release once the IF rows are materialized, the estimates and
+        the persisted IF rows (cid, unit hash uh, inf_sc) scaled to the
+        unit universe."""
+        pdata = self.pdata
+        # driver-known upper bound on cell-table rows (each inference
+        # unit appears at most once per active cell) — sizes the cache
+        # partition count with zero extra passes (cache.py)
+        cell_bound = max(1, pdata.n * max(1, active_cells))
+        if layout is not None:
+            cells = layout.cell_rows(self._unit_table(), pdata.covariates)
+            uh = F.xxhash64("uid")
+        else:
+            cells = cells_mod.build_cell_table_rc(
+                pdata,
+                cells_mod.spec_df(self.spark, specs),
+                self.control_group,
+                self.anticipation,
+                ref_preslice=self.rc_slice == "reference",
+            )
+            uh = F.xxhash64("uid", "ut")
+        cell_df, _ = persist_rightsized(cells, known_rows=cell_bound)
+        if callable(est_method):
+            ests, if_raw = estimate_custom(cell_df, pdata.covariates, est_method, self.spark,
+                                           rc=not pdata.panel)
+        else:
+            ests, if_raw = estimate_rc(cell_df, pdata.covariates, est_method, self.spark)
+
+        # scale per-cell IF into the length-n universe: ×(n/n1), zeros
+        # implicit for units outside the cell (reference ATTgt.py:374-378);
+        # the per-cell factors are a literal array indexed by cid
+        scale = [0.0] * (max((e.cid for e in ests), default=0) + 1)
+        for e in ests:
+            if not e.skipped and e.n1:
+                scale[e.cid] = pdata.n / e.n1
+        # exact driver-known row count: one IF row per (cell, unit)
+        if_rows = int(sum(e.n1 for e in ests if not e.skipped)) or 1
+        if_df, _ = persist_rightsized(
+            if_raw.select(
+                "cid",
+                uh.alias("uh"),
+                (F.col("inf") * F.lit(scale)[F.col("cid")]).alias("inf_sc"),
+            ),
+            known_rows=if_rows,
+        )
+        return cell_df, ests, if_df
 
     # ------------------------------------------------------------------
     def _moment_table(self, if_df: DataFrame, cohort_keys: dict[float, int]) -> DataFrame:
@@ -262,19 +306,17 @@ class ATTgt:
 
     # ------------------------------------------------------------------
     def unpersist(self) -> None:
-        """Release cached state (preprocessed panel + IF table). Call
-        when done with an estimator in a long-lived session — fit
-        results (the driver-side tables) stay valid; only re-running
-        aggte/bootstrap would recompute lineage."""
-        try:
-            self.pdata.df.unpersist()
-        except Exception:
-            pass
+        """Release cached state (preprocessed panel, unit table, IF
+        table). Call when done with an estimator in a long-lived session
+        — fit results (the driver-side tables) stay valid; only
+        re-running aggte/bootstrap would recompute lineage."""
+        cached = [self.pdata.df, self._units]
         if self.fit_result is not None:
-            try:
-                self.fit_result.if_df.unpersist()
-            except Exception:
-                pass
+            cached.append(self.fit_result.if_df)
+        for df in cached:
+            if df is not None:
+                df.unpersist()
+        self._units = None
 
     # ------------------------------------------------------------------
     def summary(self) -> str:

@@ -4,17 +4,22 @@ panel and repeated cross-section).
 The reference delegates these to the external d2cml-ai/DRDID NumPy
 package after collecting every column to the driver (reference
 ATTgt.py:346-372, 424-432; SURVEY.md §2.6 K1-K3). Here every (g,t) cell
-is estimated at once by a fixed number of per-cell passes over the
-cached cell table (did/linalg.py): pass 1 sums each cell's counts,
-means and outcome-regression Grams; the propensity logit iterates
-(``irls_logit``, one pass per iteration); for ipw and dr a final pass
-sums the propensity-weighted terms and the logit's information matrix.
-Each pass is one ``mapInArrow`` job whose per-row terms are NumPy and
-whose per-cell constants ride in the closure, followed by
-O(|cells|·p³) driver-side solves. The influence-function pass is the
-same kind of ``mapInArrow``, emitting one value per row. Exact formula
-parity with ``tests/ref_drdid.py`` (same published math) is asserted in
-tests.
+is estimated at once by a fixed number of per-cell passes over one
+cached table (did/linalg.py) — the panel's unit table, expanded to its
+(unit, cell) rows in NumPy, or the RC cell table: pass 1 sums each
+cell's counts, means and outcome-regression Grams; the propensity logit
+iterates (``irls_logit``, one pass per iteration); for ipw and dr a
+final pass sums the propensity-weighted terms and the logit's
+information matrix. Each pass is one ``mapInArrow`` job whose per-row
+terms are NumPy and whose per-cell constants ride in the closure,
+followed by O(|cells|·p³) driver-side solves.
+
+The influence functions follow from the same constants. On the panel
+they are never materialized: ``panel_moments`` forms each unit's IF
+across cells (and its cohort weight) inside one pass over the unit
+table and folds it straight into the moments (did/mboot.py). On RC the
+IF pass emits one value per row (``cell_rows``). Exact formula parity
+with ``tests/ref_drdid.py`` (same published math) is asserted in tests.
 
 Data movement per fit: O(partitions · |cells| · p²) partial sums to the
 driver per pass; no shuffle, no broadcast, nothing that scales with the
@@ -27,9 +32,11 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csdid_pyspark_spark.did.cells import PanelLayout
 from csdid_pyspark_spark.did.linalg import (
     cell_rows,
     cell_sums,
@@ -42,6 +49,7 @@ from csdid_pyspark_spark.did.linalg import (
     wx,
     xdot,
 )
+from csdid_pyspark_spark.did.mboot import Moments, row_moments
 
 PS_CLAMP = 1.0 - 1e-16
 
@@ -129,19 +137,30 @@ def _panel_if(est_method):
     return inf
 
 
+@dataclass(frozen=True)
+class PanelIF:
+    """What forms a panel fit's influence functions: the cells' layout,
+    the method, and each live cell's IF constants (``consts_df``
+    packing, with ``n1``: the units in the cell)."""
+
+    layout: PanelLayout
+    est_method: str
+    consts: dict[str, np.ndarray]
+
+
 def estimate_panel(
-    cell_df: DataFrame,
+    units: DataFrame,
     xcols: list[str],
     est_method: str,
     spark: SparkSession,
-) -> tuple[list[CellEstimate], DataFrame]:
-    """Estimate every (g,t) cell of a panel cell table.
+    layout: PanelLayout,
+) -> tuple[list[CellEstimate], PanelIF]:
+    """Estimate every (g,t) cell of ``layout`` over a panel unit table.
 
-    Returns (per-cell estimates, influence-function DataFrame with
-    columns cid, uid, inf) — inf is the per-unit IF *within* the cell;
-    scaling to the unit universe happens in attgt."""
+    Returns (per-cell estimates, the constants of their influence
+    functions) — ``panel_moments`` forms the IFs from them."""
     p = len(xcols)
-    s1 = cell_sums(cell_df, xcols, PANEL_COLS, _panel_pass1)
+    s1 = cell_sums(units, xcols, PANEL_COLS, _panel_pass1, layout=layout)
     n_of = s1["n"]
     cids = [int(c) for c in np.flatnonzero(n_of)]
     pass1 = _by_cell(s1, cids)
@@ -173,7 +192,8 @@ def estimate_panel(
             for cid, r in pass1.items()
             if cid not in skipped
         }
-        gamma = irls_logit(cell_df, xcols, spark, [c for c in cids if c not in skipped], init=init)
+        gamma = irls_logit(units, xcols, spark, [c for c in cids if c not in skipped], init=init,
+                           layout=layout)
         for cid, gm in gamma.items():
             if gm is None and cid not in skipped:
                 skipped[cid] = "propensity-score logit did not converge"
@@ -199,9 +219,9 @@ def estimate_panel(
     else:
         # final pass with the coefficients in the closure
         live = [c for c in cids if c not in skipped]
-        passf = _by_cell(cell_sums(cell_df, xcols, PANEL_COLS, _panel_passf, consts_df(
+        passf = _by_cell(cell_sums(units, xcols, PANEL_COLS, _panel_passf, consts_df(
             {cid: {"beta": beta.get(cid, np.zeros(p)), "gma": gamma[cid]} for cid in live}
-        )), live)
+        ), layout), live)
         for cid in live:
             r1, rf = pass1[cid], passf[cid]
             n, sw_t, m1 = r1["n"], r1["sw_t"], r1["m1"]
@@ -236,8 +256,51 @@ def estimate_panel(
                 "a_ps": a_ps,
             }
 
-    if_df = cell_rows(cell_df, xcols, PANEL_COLS, _panel_if(est_method), consts_df(consts), ["uid"])
-    return _results(cids, n_of, skipped, consts), if_df
+    for cid, k in consts.items():
+        k["n1"] = n_of[cid]
+    return _results(cids, n_of, skipped, consts), PanelIF(layout, est_method, consts_df(consts))
+
+
+def panel_moments(
+    units: DataFrame,
+    fit: PanelIF,
+    xcols: list[str],
+    n: int,
+    cohort_keys: dict[float, int],
+    biters: int,
+    seed: int,
+) -> Moments:
+    """The moments (did/mboot.py) of a panel fit, in one pass over the
+    unit table: each unit's z_u holds its IF in every live cell, scaled
+    to the universe of n units by n/n1 (reference ATTgt.py:374-378),
+    and its weight w_u under its cohort's key (-1 for units of cohorts
+    that are not aggregated) — the key set of the RC path's (key, unit,
+    value) table. Signs per unit, or per cluster when the table has
+    ``cl``/``cl_w``."""
+    inf_of = _panel_if(fit.est_method)
+    live = np.flatnonzero(fit.consts["live"])
+    per_cell = {k: v for k, v in fit.consts.items() if k != "live"}
+    gs = np.array(sorted(cohort_keys), float)
+    gkeys = np.array([cohort_keys[g] for g in gs], np.int64)
+    clustered = "cl" in units.columns
+
+    def z_blocks(rb: pa.RecordBatch, max_units: int):
+        for u, ui, cid, X, named in fit.layout.blocks(rb, xcols, live, max_units):
+            at = np.searchsorted(gs, u["g"]).clip(max=len(gs) - 1)
+            ukey = np.where(gs[at] == u["g"], gkeys[at], -1)
+            keys = np.union1d(live, ukey)
+            Z = np.zeros((len(ukey), len(keys)))
+            Z[np.arange(len(ukey)), np.searchsorted(keys, ukey)] = u["w"]
+            if len(cid):  # no cell may be live: the weights still count
+                k = {name: v[cid] for name, v in per_cell.items()}
+                with np.errstate(over="ignore"):
+                    Z[ui, np.searchsorted(keys, cid)] = inf_of(X, named, k) * (n / k["n1"])
+            sh, a = (u["cl"], u["cl_w"]) if clustered else (u["uh"], np.ones(len(ukey)))
+            yield keys, Z, sh, a
+
+    cols = [*fit.layout.columns(xcols), *(["cl", "cl_w"] if clustered else [])]
+    return row_moments(units.select(*cols), z_blocks, len(live) + len(gs) + 1, biters, seed,
+                       clustered)
 
 
 # ---------------------------------------------------------------------------

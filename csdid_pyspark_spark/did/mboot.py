@@ -1,28 +1,35 @@
-"""Per-unit moments of an influence-function table, and the seeded
+"""Per-unit moments of a fit's influence functions, and the seeded
 multiplier bootstrap built on them.
 
 Every SE, bootstrap draw and covariance computed after a fit is a
-linear or quadratic form of the IF table. Unit u contributes a vector
-z_u over the table's keys (its value per key, zero where it has no
-row), and one ``mapInArrow`` pass over the table, partitioned and
-sorted by unit hash, accumulates
+linear or quadratic form of the influence functions. Unit u contributes
+a vector z_u over the fit's keys (its IF per cell, its weight under its
+cohort's key, zero elsewhere), and one ``mapInArrow`` pass accumulates
 
     C    = Σ_u z_u z_uᵀ            (the Gram: every analytic SE)
     t    = Σ_u z_u                 (column totals)
     S[b] = Σ_u s_ub · a_u · z_u    (bootstrap draw sums, b < biters)
 
-with units processed in blocks by dense GEMMs, so a task holds
-O(block·M + M² + biters·M) for M keys. The sign s_ub is a seeded
-splitmix64 hash of (unit, draw), drawn once per unit, so results are
-reproducible whatever the partitioning (the reference draws unseeded
-Rademacher weights on the driver with joblib, reference mboot.py:17-61;
-its own notebooks report different SEs per run, SURVEY.md §4). A table
-that also carries each unit's cluster — columns ``cl`` (cluster hash)
-and ``cl_w`` (1/cluster size) on at least one of the unit's rows —
-draws one sign per cluster and applies it with weight a_u = 1/n_cl
-(a_u = 1 otherwise). The per-partition sums are added on one executor
-and a single (M² + M + biters·M)-value blob reaches the driver: never
-O(n).
+with units processed in blocks by dense GEMMs (``_Sums.add_block``), so
+a task holds O(block·M + M² + biters·M) for M keys. The sign s_ub is a
+seeded splitmix64 hash of (unit, draw), drawn once per unit, so results
+are reproducible whatever the partitioning (the reference draws
+unseeded Rademacher weights on the driver with joblib, reference
+mboot.py:17-61; its own notebooks report different SEs per run,
+SURVEY.md §4). A unit that carries its cluster — ``cl`` (cluster hash)
+and ``cl_w`` (1/cluster size) — takes its cluster's sign with weight
+a_u = 1/n_cl (a_u = 1 otherwise). Two passes share that block method:
+
+- ``row_moments`` reads a table holding each unit in one row (the
+  panel's unit table): a caller-supplied function forms each batch's
+  dense z_u blocks, so the panel's influence functions are never
+  materialized, and no shuffle is needed. The driver adds one blob per
+  task, at most 64 MiB of them (one blob at least) whatever the
+  partition count: never O(n).
+- ``unit_moments`` reads a (key, unit hash, value) table (the RC
+  influence-function rows), repartitioned and sorted by unit hash; the
+  per-partition sums are added on one executor and a single
+  (M² + M + biters·M)-value blob reaches the driver.
 
 Quantile semantics match the reference exactly (inverted-CDF for both
 the IQR-based sigma and the sup-t critical value, mboot.py:128-137).
@@ -30,7 +37,7 @@ the IQR-based sigma and the sup-t critical value, mboot.py:128-137).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -43,6 +50,8 @@ from csdid_pyspark_spark.did.stats import norm_ppf
 _BLOB = "keys binary, vals binary"
 # doubles in one dense block of units × keys (or units × draws): 8 MiB
 _BLOCK_VALUES = 1 << 20
+# bytes of per-task sums one unit-table moment pass sends to the driver
+_DRIVER_BYTES = 64 << 20
 
 
 def _splitmix_sign(uh: np.ndarray, b, seed: int) -> np.ndarray:
@@ -115,7 +124,27 @@ class _Sums:
         return (k, v[: m * m].reshape(m, m), v[m * m : m * m + m],
                 v[m * m + m : -1].reshape(biters, m), v[-1])
 
-    def add_units(self, k, uh, v, cl, cl_ok, cl_w, biters: int, seed: int) -> None:
+    def add_block(self, keys: np.ndarray, Z: np.ndarray, sh: np.ndarray, a: np.ndarray,
+                  seed: int) -> None:
+        """Fold a dense block of units into the sums: Z holds one row
+        per unit over the sorted ``keys``, sh each unit's sign hash (its
+        own, or its cluster's) and a its weight."""
+        at = self.cols(keys)
+        if len(at) < len(self.keys):
+            full = np.zeros((len(Z), len(self.keys)))
+            full[:, at] = Z
+            Z = full
+        self.C += Z.T @ Z
+        self.total += Z.sum(axis=0)
+        self.groups += a.sum()
+        biters = self.S.shape[0]
+        step = max(1, _BLOCK_VALUES // max(1, biters))
+        draws = np.arange(biters)
+        for u0 in range(0, len(Z) if biters else 0, step):
+            signs = _splitmix_sign(sh[u0 : u0 + step, None], draws[None, :], seed)
+            self.S += (signs * a[u0 : u0 + step, None]).T @ Z[u0 : u0 + step]
+
+    def add_units(self, k, uh, v, cl, cl_ok, cl_w, seed: int) -> None:
         """Fold rows sorted by unit hash, holding every row of their
         units, into the sums, one block of units at a time."""
         if not len(uh):
@@ -127,19 +156,13 @@ class _Sums:
         # per-unit sign hash and weight: the unit's own, or its cluster's
         sh, a = uh[first].copy(), np.ones(len(first))
         sh[unit[cl_ok]], a[unit[cl_ok]] = cl[cl_ok], cl_w[cl_ok]
-        self.groups += a.sum()
-        step = max(1, _BLOCK_VALUES // max(m, biters))
-        draws = np.arange(biters)
+        step = max(1, _BLOCK_VALUES // max(m, self.S.shape[0]))
         for u0 in range(0, len(first), step):
             u1 = min(u0 + step, len(first))
             r0, r1 = first[u0], first[u1] if u1 < len(first) else len(uh)
             Z = np.bincount((unit[r0:r1] - u0) * m + col[r0:r1], weights=v[r0:r1],
                             minlength=(u1 - u0) * m).reshape(u1 - u0, m)
-            self.C += Z.T @ Z
-            self.total += Z.sum(axis=0)
-            if biters:
-                signs = _splitmix_sign(sh[u0:u1, None], draws[None, :], seed)
-                self.S += (signs * a[u0:u1, None]).T @ Z
+            self.add_block(self.keys, Z, sh[u0:u1], a[u0:u1], seed)
 
 
 def _columns(rb: pa.RecordBatch) -> list[np.ndarray]:
@@ -174,10 +197,10 @@ def unit_moments(
                 continue
             # the last unit may continue in the next batch: hold it back
             cut = np.searchsorted(cols[1], cols[1][-1])
-            sums.add_units(*[c[:cut] for c in cols], biters, seed)
+            sums.add_units(*[c[:cut] for c in cols], seed)
             held = [c[cut:] for c in cols]
         if held is not None:
-            sums.add_units(*held, biters, seed)
+            sums.add_units(*held, seed)
         yield sums.blob()
 
     def reduce(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -190,6 +213,40 @@ def unit_moments(
     out = df.mapInArrow(partial, _BLOB).repartition(1).mapInArrow(reduce, _BLOB).toArrow()
     *sums, groups = _Sums.unblob(out["keys"][0].as_py(), out["vals"][0].as_py(), biters)
     return Moments(*sums, round(groups) if clustered else None)
+
+
+def row_moments(
+    units: DataFrame,
+    z_blocks: Callable[[pa.RecordBatch, int], Iterator[tuple]],
+    width: int,
+    biters: int,
+    seed: int,
+    clustered: bool,
+) -> Moments:
+    """C, t and S (module docstring) of a table holding each unit in one
+    row, in one ``mapInArrow`` pass with no shuffle: ``z_blocks(batch,
+    max_units)`` turns an Arrow batch into dense blocks (sorted keys, Z,
+    sign hash, weight) of at most ``max_units`` units' z_u over at most
+    ``width`` keys, and each task folds them through the same block
+    method as ``unit_moments``. The table is read in at most as many
+    tasks as keep the blobs reaching the driver under ``_DRIVER_BYTES``
+    (one blob at least), whatever its partitioning."""
+    blob = 8 * (width * width + width + biters * width + 1)
+    tasks = max(1, _DRIVER_BYTES // blob)
+    max_units = max(1, _BLOCK_VALUES // max(1, width))
+
+    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sums = _Sums(biters)
+        for rb in batches:
+            for keys, Z, sh, a in z_blocks(rb, max_units):
+                sums.add_block(keys, Z, sh, a, seed)
+        yield sums.blob()
+
+    out = units.coalesce(tasks).mapInArrow(part, _BLOB).toArrow()
+    sums = _Sums(biters)
+    for keys, vals in zip(out["keys"].to_pylist(), out["vals"].to_pylist()):
+        sums.add(*_Sums.unblob(keys, vals, biters))
+    return Moments(sums.keys, sums.C, sums.total, sums.S, round(sums.groups) if clustered else None)
 
 
 @dataclass

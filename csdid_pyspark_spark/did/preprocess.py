@@ -3,7 +3,8 @@
 Implements the semantics of the reference's ``_preprocess_did``
 (reference ATTgt.py:57-230, SURVEY.md §3.E1) with the §2.8 defects
 fixed by design: proper exceptions, real balanced-panel enforcement,
-and deterministic row identity for repeated cross-sections.
+a repeated (id, t) key on panel data rejected (as R ``did`` does), and
+deterministic row identity for repeated cross-sections.
 
 Everything stays a lazy DataFrame; the only collected state is the
 tiny period/cohort lists and scalar counts.
@@ -12,10 +13,12 @@ tiny period/cohort lists and scalar counts.
 from __future__ import annotations
 
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from csdid_pyspark_spark.functions.formula import INTERCEPT, parse_formula
 
@@ -147,8 +150,6 @@ def preprocess_did(
     # Spark jobs. The balance scan is optimistic: it is only valid if no
     # period/cohort refilter fires below (the common case); otherwise it
     # is recomputed on the filtered frame.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _unit_stats(frame: DataFrame):
         per_unit = frame.groupBy(ID).agg(
             F.countDistinct(T).alias("np"), F.count(F.lit(1)).alias("cnt")
@@ -158,17 +159,21 @@ def preprocess_did(
             F.sum("cnt").alias("n_obs"),
             F.min("np").alias("min_np"),
             F.max("cnt").alias("max_cnt"),
+            F.max(F.col("cnt") - F.col("np")).alias("max_dup"),
         ).first()
 
+    # Spark job groups and tags are thread-local: carry this thread's
+    # into the pool's threads
+    carry = inheritable_thread_target(df.sparkSession)
     with ThreadPoolExecutor(2) as pool:
         # period AND cohort structure from one |T|x|G|-cell grouped scan
         # (both marginals derived driver-side — cells are tiny)
-        fut_tg = pool.submit(
+        fut_tg = pool.submit(carry(
             lambda: df.groupBy(T, G)
             .agg(F.count(F.lit(1)).alias("c"), F.sum(nullable.cast("long")).alias("nn"))
             .collect()
-        )
-        fut_u = pool.submit(_unit_stats, df_dropped)
+        ))
+        fut_u = pool.submit(carry(_unit_stats), df_dropped)
         per_tg = fut_tg.result()
         unit_stats_opt = fut_u.result()
     df = df_dropped
@@ -241,6 +246,14 @@ def preprocess_did(
     else:
         per_unit, stats = unit_stats_opt
     n_units, n_obs = stats["n_units"], stats["n_obs"]
+    if panel and stats["max_dup"]:
+        # R did stops here too ("The value of idname must be the unique
+        # (by tname)"); a fit would silently switch estimators
+        dup = df.groupBy(ID, T).count().filter(F.col("count") > 1).first()
+        raise DidError(
+            f"panel data repeats (id, t) = ({dup[ID]!r}, {dup[T]!r}): {idname!r} must be "
+            f"unique within each {tname!r}; pass panel=False for repeated cross sections"
+        )
     if panel:
         balanced = (
             stats["min_np"] == len(tlist)

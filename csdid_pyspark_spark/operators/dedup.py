@@ -492,24 +492,6 @@ def _hash64(col, seed: int):
     return F.xxhash64(F.lit(seed), col)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """MinHash signature per doc: for each of `num_hashes` seeded hash
-    functions, the min hash over the doc's shingle set. Computed
-    MAP-SIDE over the per-doc shingle array (array_min over a
-    transform) — NO postings explode, no grouped aggregation; values
-    are bit-identical to the old min-over-postings form (same distinct
-    shingle set, same xxhash64(seed, shingle))."""
-    return _minhash_sig_from_arrays(
-        _shingle_arrays(df, text_col, id_col, n), id_col, num_hashes
-    )
-
-
 def _minhash_sig_from_arrays(
     arr: DataFrame, id_col: str, num_hashes: int
 ) -> DataFrame:

@@ -165,13 +165,6 @@ def sample_frames(
     return assets.mapInPandas(run, FRAME_SCHEMA)
 
 
-def size_partitioned(assets: DataFrame, target_mb: int = 128) -> DataFrame:
-    """Repartition by payload volume, not row count — media rows are
-    wildly variable-sized, so row-count partitioning creates stragglers
-    at scale. Uses range partitioning on cumulative-size-friendly key."""
-    return assets.repartitionByRange(F.col("n_bytes").desc(), F.col("asset_id"))
-
-
 CHUNK_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),

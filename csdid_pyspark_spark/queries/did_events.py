@@ -188,8 +188,8 @@ FROM wide WHERE period = 2
 # Fitted-estimator cache, same lifetime policy as _PANEL_CACHE: a fit is
 # a pure deterministic function of (dataset, control group, est_method),
 # and several queries consume the same fit (the ATT(g,t) table feeds every
-# aggte type). Cached estimators keep their preprocessed panel + IF table
-# persisted for the session — both are O(cells) small.
+# aggte type). Cached estimators keep their preprocessed panel and unit
+# table persisted for the session — both are the size of the panel.
 _FIT_CACHE: dict[tuple[str, str, str, str], object] = {}
 
 

@@ -130,24 +130,18 @@ def test_aggte_and_pretrend_run_no_spark_job_after_bootstrapped_fit(spark):
         est.unpersist()
 
 
-def test_uncovered_aggte_bootstrap_runs_one_moment_pass(spark, monkeypatch):
+def test_uncovered_aggte_bootstrap_runs_one_moment_pass(spark):
     """After a fit without bootstrap, a bootstrapped aggregation re-runs
-    the moment pass exactly once, keeps its draws for the next request,
-    and equals the bootstrapped fit's aggregation."""
-    from csdid_pyspark_spark.did import mboot as mboot_mod
-
-    passes = []
-    real = mboot_mod.unit_moments
-    monkeypatch.setattr(mboot_mod, "unit_moments",
-                        lambda *a, **k: passes.append(1) or real(*a, **k))
+    the moment pass exactly once (one Spark job over the still-cached
+    unit table), keeps its draws for the next request, and equals the
+    bootstrapped fit's aggregation."""
     boot, plain = _did_fit(spark, bstrap=True), _did_fit(spark, bstrap=False)
     try:
-        passes.clear()
-        got = plain.compute_aggte("dynamic", bstrap=True, cband=True)
-        assert len(passes) == 1
-        plain.compute_aggte("group", bstrap=True, cband=True)
-        assert len(passes) == 1
-        want = boot.compute_aggte("dynamic")
+        out = {}
+        assert _jobs_started(spark, lambda: out.update(
+            got=plain.compute_aggte("dynamic", bstrap=True, cband=True))) == 1
+        assert _jobs_started(spark, lambda: plain.compute_aggte("group", bstrap=True, cband=True)) == 0
+        got, want = out["got"], boot.compute_aggte("dynamic")
         np.testing.assert_allclose(
             [got.overall_att, got.overall_se, got.crit_val_egt, *got.att_egt, *got.se_egt],
             [want.overall_att, want.overall_se, want.crit_val_egt, *want.att_egt, *want.se_egt],
@@ -189,45 +183,32 @@ def test_irls_runs_one_spark_job_per_iteration(spark, monkeypatch):
     assert jobs == len(iters)
 
 
-def test_dr_panel_kernel_passes_read_cell_cache_without_exchange(spark, monkeypatch):
-    """Every kernel pass of a DR panel fit (pass 1, each IRLS iteration,
-    the propensity pass and the influence-function pass) reads the
-    cached cell table directly: no shuffle and no broadcast between the
-    cache and the pass."""
-    from csdid_pyspark_spark.did import ATTgt, attgt
+def _dr_panel(spark, **kw):
+    from csdid_pyspark_spark.did import ATTgt
     from tests.test_did_parity import make_panel_dgp
 
+    return ATTgt(spark.createDataFrame(make_panel_dgp(n_units=120, seed=5)), "Y", "period", "id",
+                 "G", xfmla="Y ~ x1", allow_unbalanced_panel=False, biters=99, **kw)
+
+
+def test_dr_panel_passes_read_unit_table_cache_without_exchange(spark, monkeypatch):
+    """Every pass of a bootstrapped DR panel fit (pass 1, each IRLS
+    iteration, the propensity pass and the moment pass) maps over the
+    cached unit table directly: no shuffle and no broadcast between the
+    cache and the pass."""
     df_cls = type(spark.range(1))
-    plans, inside = [], []
+    plans = []
+    orig = df_cls.toArrow
 
-    def plan_of(df):
-        return df._jdf.queryExecution().executedPlan().toString()
+    def recorded(self, *a, **k):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *a, **k)
+    monkeypatch.setattr(df_cls, "toArrow", recorded)
 
-    for action in ("collect", "toArrow"):
-        orig = getattr(df_cls, action)
-
-        def recorded(self, *a, _orig=orig, **k):
-            if inside:
-                plans.append(plan_of(self))
-            return _orig(self, *a, **k)
-        monkeypatch.setattr(df_cls, action, recorded)
-    real = attgt.estimate_panel
-
-    def kernels(*a, **k):
-        inside.append(1)
-        try:
-            ests, if_raw = real(*a, **k)
-        finally:
-            inside.clear()
-        plans.append(plan_of(if_raw))
-        return ests, if_raw
-    monkeypatch.setattr(attgt, "estimate_panel", kernels)
-
-    pdf = make_panel_dgp(n_units=120, seed=5)
-    est = ATTgt(spark.createDataFrame(pdf), "Y", "period", "id", "G", xfmla="Y ~ x1",
-                allow_unbalanced_panel=False)
+    est = _dr_panel(spark)
     try:
-        est.fit("dr")
+        plans.clear()
+        est.fit("dr", bstrap=True)
     finally:
         est.unpersist()
     assert len(plans) >= 4, plans
@@ -237,6 +218,104 @@ def test_dr_panel_kernel_passes_read_cell_cache_without_exchange(spark, monkeypa
         head = plan.split("InMemoryRelation", 1)[0]
         assert "InMemoryTableScan" in head, plan
         assert "Exchange" not in head, plan
+        assert "PythonMapInArrow" in head or "MapInArrow" in head, plan
+
+
+def test_dr_rc_passes_filter_live_cells_on_the_cache(spark, monkeypatch):
+    """On a repeated-cross-section fit, the passes that read only some
+    cells (each IRLS iteration, the propensity pass) drop the other
+    cells' rows on the Spark side, before the Arrow conversion, with no
+    shuffle or broadcast between the cached cell table and the pass."""
+    from csdid_pyspark_spark.did import attgt
+
+    df_cls = type(spark.range(1))
+    plans, inside = [], []
+    orig, real = df_cls.toArrow, attgt.estimate_rc
+
+    def recorded(self, *a, **k):
+        if inside:
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *a, **k)
+
+    def kernels(*a, **k):
+        inside.append(1)
+        try:
+            return real(*a, **k)
+        finally:
+            inside.clear()
+    monkeypatch.setattr(df_cls, "toArrow", recorded)
+    monkeypatch.setattr(attgt, "estimate_rc", kernels)
+
+    est = _dr_panel(spark, panel=False)
+    try:
+        plans.clear()
+        est.fit("dr")
+    finally:
+        est.unpersist()
+    heads = [plan.split("InMemoryRelation", 1)[0] for plan in plans]
+    assert len(heads) >= 3, plans
+    for head in heads:
+        assert "InMemoryTableScan" in head, head
+        assert "Exchange" not in head, head
+    assert sum(" IN (" in head for head in heads) >= 2, heads
+
+
+def test_bootstrapped_dr_panel_fit_job_count(spark, monkeypatch):
+    """A bootstrapped DR panel fit starts at most 5 Spark jobs besides
+    its IRLS iterations: the unit table's shuffle, pass 1, the
+    propensity pass and the fused IF + moment pass."""
+    from csdid_pyspark_spark.did import kernels, linalg
+
+    inside, iters = [], []
+    real_irls, real_consts = kernels.irls_logit, linalg.consts_df
+
+    def irls(*a, **k):
+        inside.append(1)
+        try:
+            return real_irls(*a, **k)
+        finally:
+            inside.clear()
+
+    def consts(*a, **k):
+        if inside:
+            iters.append(1)
+        return real_consts(*a, **k)
+    monkeypatch.setattr(kernels, "irls_logit", irls)
+    monkeypatch.setattr(linalg, "consts_df", consts)
+    est = _dr_panel(spark)
+    try:
+        jobs = _jobs_started(spark, lambda: est.fit("dr", bstrap=True))
+    finally:
+        est.unpersist()
+    assert iters, "the DR fit runs its propensity logit"
+    assert jobs <= 5 + len(iters), (jobs, len(iters))
+
+
+def test_unpersist_releases_every_cache_of_a_fit(spark):
+    """Construction, a bootstrapped panel fit, a re-bootstrapped
+    aggregation and ``unpersist()`` leave the persisted RDDs as they
+    were before construction."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    est = _dr_panel(spark)
+    est.fit("dr", bstrap=True)
+    est.compute_aggte("dynamic", bstrap=True, biters=49)
+    est.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_preprocess_jobs_carry_the_callers_job_group(spark):
+    """The concurrent preprocessing scans run in worker threads, yet
+    their Spark jobs belong to the job group of the thread that
+    constructs the estimator."""
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "estimator construction")
+    try:
+        est = _dr_panel(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    est.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup("g")) >= 2
 
 
 def test_q4_semi_join_with_nonequi_condition(spark, sf_dir):
@@ -414,38 +493,34 @@ def _synth_panel(spark, n_units=150, periods=(1, 2, 3, 4)):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["id", "t", "g", "y"]))
 
 
-def test_attgt_cell_spec_join_broadcast_one_shuffle(spark):
-    """The cell table is the estimator's backbone: the tiny cell-spec
-    frame must join BROADCAST (a SortMergeJoin here would shuffle the
-    full panel once per fit at 100 TB), and the only exchange in the
-    whole cell-table plan is the one (cid, id) reduction."""
+def test_attgt_unit_table_one_shuffle_no_join(spark):
+    """The unit table is the panel estimator's backbone: one row per
+    unit from exactly one (id) reduction of the panel, with no join
+    (cells are expanded in NumPy, not joined) and no single-partition
+    exchange."""
     from csdid_pyspark_spark.did import ATTgt
-    from csdid_pyspark_spark.did import cells as cells_mod
 
     est = ATTgt(_synth_panel(spark), "y", "t", "id", "g", allow_unbalanced_panel=False)
-    pdata = est.pdata
-    specs = cells_mod.build_cell_specs(pdata.tlist, pdata.glist, "varying", 0)
-    sdf = cells_mod.spec_df(spark, specs)
-    cell = cells_mod.build_cell_table_panel(pdata, sdf, "nevertreated", 0)
-    plan = cell._jdf.queryExecution().executedPlan().toString()
-    est.unpersist()
-    assert "SortMergeJoin" not in plan, plan
-    assert "ShuffledHashJoin" not in plan, plan
-    # disjunctive non-equi spec condition -> broadcast nested loop over
-    # the |specs|-row build side (tiny by construction), never a shuffle
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
-    assert plan.count("Exchange hashpartitioning") <= 1, plan
-    assert "Exchange SinglePartition" not in plan, plan
+    try:
+        units = est._unit_table()
+        plan = units._jdf.queryExecution().executedPlan().toString()
+        assert units.count() == 150
+    finally:
+        est.unpersist()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Join" not in plan, plan
+    assert "SinglePartition" not in plan, plan
 
 
 def test_attgt_if_table_cached_and_se_pass_reads_cache(spark):
-    """fit() persists the influence-function table; the moment pass that
-    yields the SEs (and re-runs for a bootstrap the fit's draws do not
-    cover) must re-read that InMemoryRelation, not re-derive the kernel
-    lineage. Gated on the plan of the pass's input table."""
+    """A repeated-cross-section fit persists its influence-function
+    table; the moment pass that yields the SEs (and re-runs for a
+    bootstrap the fit's draws do not cover) must re-read that
+    InMemoryRelation, not re-derive the kernel lineage. Gated on the
+    plan of the pass's input table."""
     from csdid_pyspark_spark.did import ATTgt
 
-    est = ATTgt(_synth_panel(spark), "y", "t", "id", "g", allow_unbalanced_panel=False)
+    est = ATTgt(_synth_panel(spark), "y", "t", "id", "g", panel=False)
     est.fit("reg")
     if_df = est.fit_result.if_df
     assert if_df.storageLevel.useMemory, "IF table must be persisted after fit()"
