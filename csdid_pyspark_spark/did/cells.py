@@ -30,6 +30,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from csdid_pyspark_spark.did.preprocess import CL, G, ID, T, W, Y, PanelData
 
@@ -204,8 +205,8 @@ class PanelLayout:
         """The cell table of these cells as rows (cid, uid, d, w, dy,
         y1, y0, x…), for kernels that need each cell's rows together."""
         names = ["d", "w", "dy", "y1", "y0"]
-        schema = f"cid int, uid {units.schema['uid'].dataType.simpleString()}, " + ", ".join(
-            f"{c} double" for c in (*names, *xcols))
+        schema = StructType([StructField("cid", IntegerType()), units.schema["uid"],
+                             *[StructField(c, DoubleType()) for c in (*names, *xcols)]])
 
         def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for rb in batches:

@@ -116,13 +116,21 @@ class _Sums:
         vals = np.concatenate([self.C.ravel(), self.total, self.S.ravel(), [self.groups]])
         return pa.RecordBatch.from_pydict({"keys": [self.keys.tobytes()], "vals": [vals.tobytes()]})
 
-    @staticmethod
-    def unblob(keys: bytes, vals: bytes, biters: int) -> tuple:
-        k = np.frombuffer(keys, np.int64).copy()
-        v = np.frombuffer(vals, np.float64).copy()
-        m = len(k)
-        return (k, v[: m * m].reshape(m, m), v[m * m : m * m + m],
-                v[m * m + m : -1].reshape(biters, m), v[-1])
+    def add_blobs(self, blobs: pa.Table | pa.RecordBatch) -> _Sums:
+        """Add every blob of ``blobs``, read in place from its Arrow
+        buffers."""
+        biters = self.S.shape[0]
+        for keys, vals in zip(blobs.column("keys"), blobs.column("vals")):
+            k = np.frombuffer(keys.as_buffer(), np.int64)
+            v = np.frombuffer(vals.as_buffer(), np.float64)
+            m = len(k)
+            self.add(k, v[: m * m].reshape(m, m), v[m * m : m * m + m],
+                     v[m * m + m : -1].reshape(biters, m), v[-1])
+        return self
+
+    def moments(self, clustered: bool) -> Moments:
+        return Moments(self.keys, self.C, self.total, self.S,
+                       round(self.groups) if clustered else None)
 
     def add_block(self, keys: np.ndarray, Z: np.ndarray, sh: np.ndarray, a: np.ndarray,
                   seed: int) -> None:
@@ -206,13 +214,11 @@ def unit_moments(
     def reduce(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sums = _Sums(biters)
         for rb in batches:
-            for keys, vals in zip(rb.column("keys").to_pylist(), rb.column("vals").to_pylist()):
-                sums.add(*_Sums.unblob(keys, vals, biters))
+            sums.add_blobs(rb)
         yield sums.blob()
 
     out = df.mapInArrow(partial, _BLOB).repartition(1).mapInArrow(reduce, _BLOB).toArrow()
-    *sums, groups = _Sums.unblob(out["keys"][0].as_py(), out["vals"][0].as_py(), biters)
-    return Moments(*sums, round(groups) if clustered else None)
+    return _Sums(biters).add_blobs(out).moments(clustered)
 
 
 def row_moments(
@@ -243,10 +249,7 @@ def row_moments(
         yield sums.blob()
 
     out = units.coalesce(tasks).mapInArrow(part, _BLOB).toArrow()
-    sums = _Sums(biters)
-    for keys, vals in zip(out["keys"].to_pylist(), out["vals"].to_pylist()):
-        sums.add(*_Sums.unblob(keys, vals, biters))
-    return Moments(sums.keys, sums.C, sums.total, sums.S, round(sums.groups) if clustered else None)
+    return _Sums(biters).add_blobs(out).moments(clustered)
 
 
 @dataclass
