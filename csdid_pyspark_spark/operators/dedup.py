@@ -20,10 +20,17 @@ as a per-doc array); ``_drop_hot`` is the ``max_df`` cap; ``_verify`` is
 the one exact-Jaccard verifier of LSH candidates, here and in
 ``mllib_lsh``; ``_score_pairs`` is the tail every pair operator ends in
 (pairs ⋈ both sides' sizes → score → threshold → round → attach_cache).
+
+Near-dup groups (``components``) are labelled local-then-global: one
+``mapInArrow`` solves each run of at most ``TARGET_ROWS_PER_PARTITION``
+cached edges in NumPy (root hooking + pointer jumping), and only labels
+that meet at a node shared by two runs go through min-label
+propagation, so a pair list that fits one run costs one pass.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -695,7 +702,70 @@ def winnow_fingerprints(
 
 
 class ComponentsNotConverged(RuntimeError):
-    """Label propagation ran out of rounds before a fixpoint."""
+    """The global phase of ``components`` ran out of rounds before a
+    fixpoint."""
+
+
+def _local_labels(s: np.ndarray, d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the edges (s[i], d[i]) in NumPy: returns
+    the distinct nodes, sorted, and each one's label, the smallest node
+    of its component. Root hooking plus pointer jumping: every round
+    hooks the larger root onto the smaller across each edge whose ends
+    still differ, then compresses every node to its root. Parents only
+    move down, so the smallest node of a component stays its root, and
+    each round merges at least one pair of roots; on chains and random
+    graphs it takes O(log n) rounds (a 65,536-edge chain in random id
+    order: 11), where neighbour-min propagation takes one round per hop
+    of the diameter."""
+    nodes, idx = np.unique(np.concatenate([s, d]), return_inverse=True)
+    a, b = idx[: len(s)], idx[len(s) :]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            return nodes, nodes[parent]
+        # an edge whose ends share a root keeps sharing it: drop it
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _label_chunks(cap: int):
+    """``mapInArrow`` body over (s, d) edge batches: labels each run of
+    at most ``cap`` edges of a partition with ``_local_labels`` and
+    emits one (node, comp) row per node of the run, so a task holds at
+    most ``cap`` edges however large its partition."""
+
+    def label(batches):
+        import pyarrow as pa
+
+        def solve(s, d):
+            nodes, comp = _local_labels(s, d)
+            return pa.RecordBatch.from_arrays([pa.array(nodes), pa.array(comp)], ["node", "comp"])
+
+        s = d = np.empty(0, dtype=np.int64)
+        for b in batches:
+            s = np.concatenate([s, b.column(0).to_numpy()])
+            d = np.concatenate([d, b.column(1).to_numpy()])
+            while len(s) >= cap:
+                yield solve(s[:cap], d[:cap])
+                s, d = s[cap:], d[cap:]
+        if len(s):
+            yield solve(s, d)
+
+    return label
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Release the blocks behind a ``localCheckpoint``: the checkpointed
+    RDD is not in the cache manager, so ``DataFrame.unpersist`` leaves
+    it to the context cleaner."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def components(
@@ -704,89 +774,125 @@ def components(
     id_b: str = "id_b",
     max_iter: int = 20,
 ) -> DataFrame:
-    """Connected components over a near-duplicate pair list by min-label
-    propagation: every node repeatedly adopts the smallest label among
-    itself and its neighbors until a fixpoint — O(graph diameter)
-    iterations, each one join + one min-aggregation (two shuffles).
-    Near-dup graphs are unions of small cliques/chains, so this
-    converges in a handful of rounds at any scale; for adversarially
-    deep graphs swap in large-star/small-star (Kiveris et al.) with the
-    same join primitives. Returns (node, comp) with comp = min node id
-    of the component; only nodes that appear in ``pairs`` are emitted
-    (singletons are their own trivial component). Raises
-    ``ComponentsNotConverged`` when ``max_iter`` rounds end without a
-    fixpoint, rather than returning unconverged labels.
+    """Connected components over a near-duplicate pair list, in two
+    phases (local, then global, as in REPOSE, ICDE 2021).
+
+    - Local: the pair list is cached right-sized (at most
+      ``cache.TARGET_ROWS_PER_PARTITION`` edges a partition) and one
+      ``mapInArrow`` labels each run of at most that many edges in
+      NumPy (``_local_labels``) with the smallest node of its local
+      component. A pair list that fits one run is solved here whole.
+    - Global: otherwise the (node, local label) rows are grouped by
+      node; a node carrying several labels links them. Only that
+      contracted label graph goes through min-label propagation, one
+      join + min-aggregation per round with each round's labels
+      checkpointed; the round's groupBy also carries each label's old
+      value, so the checkpointed rows say whether anything changed.
+
+    Returns (node, comp), both bigint, with comp = the smallest node id
+    of the component, materialised before return: releasing ``pairs``
+    afterwards is safe, and every intermediate the call cached is
+    released. Only nodes that appear in ``pairs`` are emitted
+    (singletons are their own trivial component); a pair with a null
+    end links nothing. Raises ``ComponentsNotConverged`` when
+    ``max_iter`` global rounds end without a fixpoint, rather than
+    returning unconverged labels.
     """
-    import math as _math
+    from csdid_pyspark_spark import cache
 
-    from csdid_pyspark_spark.cache import (
-        TARGET_ROWS_PER_PARTITION,
-        _shuffle_partitions,
-        persist_rightsized,
+    cap = cache.TARGET_ROWS_PER_PARTITION
+    edges, n_edges = cache.persist_rightsized(
+        pairs.select(F.col(id_a).cast("long").alias("s"), F.col(id_b).cast("long").alias("d"))
+        .where(F.col("s").isNotNull() & F.col("d").isNotNull()),
+        target_rows=cap,
+        measure=True,
     )
-
-    # both edge directions from ONE execution of the pair subtree: a
-    # unionByName of two projections embeds the (expensive) pair
-    # generation once per branch — the cache below only helps AFTER
-    # materialization, and materializing the union ran the subtree
-    # twice (guide §2.4). explode(array(struct,struct)) emits the same
-    # directed-edge multiset from a single pass.
-    both_dirs = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(id_a).alias("s"), F.col(id_b).alias("d")),
-                F.struct(F.col(id_b).alias("s"), F.col(id_a).alias("d")),
+    local = edges.mapInArrow(_label_chunks(cap), "node long, comp long")
+    cached, checkpoints = [edges], []
+    try:
+        if n_edges <= cap:
+            # one partition, one run: the local labels are the answer
+            labels = local
+        else:
+            # per node: the smallest label it carries, and all of them
+            by_node = (
+                local.groupBy("node")
+                .agg(F.min("comp").alias("root"), F.collect_set("comp").alias("held"))
+                .persist()
             )
-        ).alias("e")
-    ).select("e.s", "e.d")
-    # read once per propagation round: right-sized cache; the measured
-    # edge count also sizes every round's label checkpoint below, so a
-    # small graph doesn't pay 32-task overhead per round and a huge one
-    # keeps its parallelism
-    edges, n_edges = persist_rightsized(both_dirs.distinct(), measure=True)
-    # labels ≤ 2·edges nodes; cap at the shuffle width the groupBy
-    # produces anyway so a planet-scale graph never over-coalesces
-    shuffle_parts = _shuffle_partitions(pairs.sparkSession)
-    label_parts = min(
-        shuffle_parts, max(1, _math.ceil(n_edges / TARGET_ROWS_PER_PARTITION))
+            cached.append(by_node)
+            held = by_node.where(F.size("held") > 1).select(
+                F.explode(F.array_remove("held", F.col("root"))).alias("s"), "root"
+            )
+            links, n_links = cache.persist_rightsized(
+                held.select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col("s"), F.col("root").alias("d")),
+                            F.struct(F.col("root").alias("s"), F.col("s").alias("d")),
+                        )
+                    ).alias("e")
+                )
+                .select("e.s", "e.d")
+                .distinct(),
+                target_rows=cap,
+                measure=True,
+            )
+            cached.append(links)
+            glob = _propagate(links, n_links, cap, max_iter, checkpoints)
+            labels = by_node.join(glob, "root", "left").select(
+                "node", F.coalesce("comp", "root").alias("comp")
+            )
+        # the labels must outlive every cache above: truncate the lineage
+        out = labels.localCheckpoint(eager=True)
+    finally:
+        for df in cached:
+            df.unpersist()
+        for df in checkpoints:
+            _drop_checkpoint(df)
+    return out
+
+
+def _propagate(links: DataFrame, n_links: int, cap: int, max_iter: int, checkpoints: list) -> DataFrame:
+    """Min-label propagation over the contracted label graph ``links``
+    (s, d; both directions): returns (root, comp) for every label on a
+    link. Each round is one eager ``localCheckpoint``, appended to
+    ``checkpoints`` for the caller to release; a superseded round's is
+    released here. Raises ``ComponentsNotConverged`` after ``max_iter``
+    rounds that each still changed a label."""
+    import math
+
+    from csdid_pyspark_spark.cache import _shuffle_partitions
+
+    # start from each label's smallest neighbour: what a first round
+    # from the identity labels would give, without its join
+    labels = links.groupBy(F.col("s").alias("node")).agg(
+        F.least(F.first("s"), F.min("d")).alias("comp")
     )
-    # each round MUST truncate lineage: without a checkpoint the plan
-    # nests the whole history and grows exponentially (observed: JVM OOM
-    # from plan bloat at iteration ~8). localCheckpoint is the local-mode
-    # choice; on a real cluster prefer sc.setCheckpointDir + checkpoint()
-    # so a lost executor cannot drop the truncated blocks.
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .coalesce(label_parts)
-        .localCheckpoint(eager=True)
-    )
+    if not n_links:
+        return labels.select(F.col("node").alias("root"), "comp")
+    parts = min(_shuffle_partitions(links.sparkSession), max(1, math.ceil(n_links / cap)))
     for _ in range(max_iter):
-        nbr = edges.join(labels, edges["d"] == labels["node"]).select(
-            F.col("s").alias("node"), "comp"
+        nbr = links.join(labels, links["d"] == labels["node"]).select(
+            F.col("s").alias("node"), "comp", F.lit(None).cast("long").alias("was")
         )
+        # each label's own row carries its old value; the min over
+        # them is that value, so the checkpoint holds the change flag
         new = (
-            labels.unionByName(nbr)
+            labels.select("node", "comp", F.col("comp").alias("was"))
+            .unionByName(nbr)
             .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .coalesce(label_parts)
+            .agg(F.min("comp").alias("comp"), F.min("was").alias("was"))
+            .select("node", "comp", (F.col("comp") < F.col("was")).alias("changed"))
+            .coalesce(parts)
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new.select("node", F.col("comp").alias("nc"))
-            .join(labels.select("node", F.col("comp").alias("oc")), "node")
-            .filter(F.col("nc") != F.col("oc"))
-            .limit(1)
-            .count()
-        )
+        if checkpoints:
+            _drop_checkpoint(checkpoints.pop())
+        checkpoints.append(new)
         labels = new
-        if not changed:
-            break
-    else:
-        edges.unpersist()
-        raise ComponentsNotConverged(
-            f"label propagation did not reach a fixpoint in max_iter={max_iter} rounds"
-        )
-    edges.unpersist()
-    return labels.select("node", "comp")
+        if new.where("changed").isEmpty():
+            return labels.select(F.col("node").alias("root"), "comp")
+    raise ComponentsNotConverged(
+        f"label propagation did not reach a fixpoint in max_iter={max_iter} rounds"
+    )

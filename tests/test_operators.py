@@ -293,15 +293,127 @@ def test_components_chain_and_cliques(spark):
     assert got[300] == 300 and got[301] == 300
 
 
-def test_components_raises_when_rounds_run_out(spark):
-    """A chain longer than max_iter cannot reach its fixpoint in time:
-    components raises instead of returning unconverged labels. The same
-    chain converges with the default max_iter."""
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(8)], "id_a long, id_b long")
+def _spread_pairs(spark, monkeypatch, pairs, slices=8, cap=4):
+    """``pairs`` as a frame of ``slices`` contiguous partitions, with the
+    edge cache's rows-per-partition target patched down to ``cap`` so
+    that components' local phase sees many runs and its global phase
+    runs."""
+    from csdid_pyspark_spark import cache
+
+    monkeypatch.setattr(cache, "TARGET_ROWS_PER_PARTITION", cap)
+    return spark.sparkContext.parallelize(pairs, slices).toDF("id_a long, id_b long")
+
+
+def _round_jobs(spark, monkeypatch, fn):
+    """Run ``fn`` in a fresh job group; return the group's job count at
+    each ``localCheckpoint`` (one per global round, then the labels)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"components-{uuid.uuid4().hex}"
+    df_cls = type(spark.range(1))
+    real, marks = df_cls.localCheckpoint, []
+
+    def checkpoint(self, *a, **k):
+        out = real(self, *a, **k)
+        marks.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return out
+    monkeypatch.setattr(df_cls, "localCheckpoint", checkpoint)
+    sc.setJobGroup(group, "components")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return marks
+
+
+def test_components_global_rounds_read_the_change_flag(spark, monkeypatch):
+    """A chain and two cliques spread over more edge runs than one
+    partition holds: the global phase merges the local labels into the
+    smallest ids, and each of its rounds starts at most 4 Spark jobs
+    (the join and aggregation stages, the checkpoint, the read of the
+    checkpointed change flag); no join with the previous labels."""
+    chain = [(i, i + 1) for i in range(100, 120)]
+    cliques = [(a, b) for lo in (200, 300) for a in range(lo, lo + 5) for b in range(a + 1, lo + 5)]
+    pairs = _spread_pairs(spark, monkeypatch, chain + cliques)
+    got = {}
+    marks = _round_jobs(
+        spark, monkeypatch,
+        lambda: got.update((r["node"], r["comp"]) for r in dedup.components(pairs).collect()),
+    )
+    want = {**dict.fromkeys(range(100, 121), 100), **dict.fromkeys(range(200, 205), 200),
+            **dict.fromkeys(range(300, 305), 300)}
+    assert got == want
+    rounds = [b - a for a, b in zip(marks, marks[1:-1])]
+    assert len(rounds) >= 2, marks
+    assert max(rounds) <= 4, marks
+
+
+def test_components_release_every_cache_but_the_labels(spark, monkeypatch):
+    """After a call that runs at least 2 global rounds, only the returned
+    labels stay persisted: the edge cache, the per-node local labels,
+    the contracted links and every superseded round are released."""
+    jsc = spark.sparkContext._jsc
+    pairs = _spread_pairs(spark, monkeypatch, [(i, i + 1) for i in range(40)])
+    base = jsc.getPersistentRDDs().size()
+    out = {}
+    marks = _round_jobs(spark, monkeypatch, lambda: out.update(labels=dedup.components(pairs)))
+    assert len(marks) >= 3, marks
+    assert jsc.getPersistentRDDs().size() <= base + 1
+    assert {r["comp"] for r in out["labels"].collect()} == {0}
+
+
+def test_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """A chain spread over more edge runs than max_iter global rounds can
+    merge: components raises, releasing what it cached, instead of
+    returning unconverged labels. The same chain converges with the
+    default max_iter."""
+    jsc = spark.sparkContext._jsc
+    pairs = _spread_pairs(spark, monkeypatch, [(i, i + 1) for i in range(40)])
+    base = jsc.getPersistentRDDs().size()
     with pytest.raises(dedup.ComponentsNotConverged, match="max_iter=3"):
         dedup.components(pairs, max_iter=3)
+    # at most: earlier tests' labels may be collected meanwhile
+    assert jsc.getPersistentRDDs().size() <= base
     got = {r["node"]: r["comp"] for r in dedup.components(pairs).collect()}
-    assert got == dict.fromkeys(range(9), 0)
+    assert got == dict.fromkeys(range(41), 0)
+
+
+def _union_find(s, d):
+    parent = {}
+
+    def root(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+    for a, b in zip(s.tolist(), d.tolist()):
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in parent}
+
+
+def test_local_labels_match_union_find():
+    """The local phase's NumPy labelling equals a plain union-find on
+    seeded random graphs (repeated edges and self-loops included), and
+    a 65,536-edge chain in random id order, the largest run a task
+    labels, finishes within a second."""
+    import time
+
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    for _ in range(40):
+        n, m = rng.integers(1, 400, size=2)
+        s, d = rng.integers(0, n, m) * 3 - 50, rng.integers(0, n, m) * 3 - 50
+        nodes, comp = dedup._local_labels(s, d)
+        assert dict(zip(nodes.tolist(), comp.tolist())) == _union_find(s, d)
+    ids = rng.permutation(65_537).astype(np.int64) * 7 + 1
+    t0 = time.perf_counter()
+    nodes, comp = dedup._local_labels(ids[:-1], ids[1:])
+    assert time.perf_counter() - t0 < 1.0
+    assert len(nodes) == 65_537 and (comp == 1).all()
 
 
 def test_jaccard_max_df_cap(spark):

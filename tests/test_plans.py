@@ -565,6 +565,40 @@ def test_dedup_shingles_built_once_above_widening_exchange(spark):
         assert not re.search(r"- (\*\(\d+\) )?Filter ", below), plan
 
 
+def test_components_solves_a_small_pair_list_in_its_local_pass(spark, monkeypatch):
+    """Over an already materialised pair list of at most 65,536 edges,
+    components runs no global round: its one checkpoint is the labels,
+    mapped straight from the edge cache (no exchange between the
+    InMemoryTableScan and the mapInArrow), and the whole call starts at
+    most 6 Spark jobs: the edge cache's count and its compaction's
+    (2–3 jobs each under AQE) and the labels' checkpoint."""
+    from csdid_pyspark_spark.operators import dedup
+
+    chain = [(i, i + 1) for i in range(100, 110)]
+    clique = [(a, b) for a in range(200, 204) for b in range(a + 1, 204)]
+    pairs = spark.createDataFrame(chain + clique, "id_a long, id_b long").cache()
+    pairs.count()
+    df_cls = type(pairs)
+    real, plans = df_cls.localCheckpoint, []
+
+    def checkpoint(self, *a, **k):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *a, **k)
+    monkeypatch.setattr(df_cls, "localCheckpoint", checkpoint)
+    out = {}
+    try:
+        jobs = _jobs_started(spark, lambda: out.update(labels=dedup.components(pairs)))
+    finally:
+        pairs.unpersist()
+    assert jobs <= 6, jobs
+    assert len(plans) == 1, plans
+    head = plans[0].split("InMemoryRelation", 1)[0]
+    assert "InMemoryTableScan" in head, head
+    assert "MapInArrow" in head, head
+    assert "Exchange" not in head, head
+    assert out["labels"].count() == 15
+
+
 def test_incremental_dedup_caps_and_prunes_corpus_side(spark, sf_dir):
     """Incremental dedup's physical plan must show (a) the broadcast
     hot-shingle anti-join (corpus-side df cap) and (b) the semi-join
