@@ -38,8 +38,8 @@ moments C = Σ_u z_u z_uᵀ and the draw sums S of the fit (mboot.py)
 — all on the driver, without Spark. The fit's pg are its cohort
 columns' totals over n. A bootstrap the fit's draws do not cover
 (the fit ran without one, or with other biters) re-runs the fit's
-moment pass once — on a panel, over the still-cached unit table — and
-keeps its draws for later requests.
+moment pass once — for the built-in kernels, over the still-cached
+unit table — and keeps its draws for later requests.
 """
 
 from __future__ import annotations
@@ -240,9 +240,9 @@ def compute_aggte(
 
     # ----- step 2, driver only: every key's SE and bootstrap from the moments
     if bstrap and mom.S.shape[0] != biters:  # not covered by the fit's draws
-        if fr.if_panel is not None:  # the fused pass over the still-cached unit table
-            mom = attgt._panel_moments(fr.if_panel, biters)
-        else:
+        if fr.if_cells is not None:  # the fused pass over the still-cached unit table
+            mom = attgt._fit_moments(fr.if_cells, biters)
+        else:  # a custom kernel's IF rows
             z_df = attgt._moment_table(fr.if_df, fr.cohort_keys)
             mom = mboot(z_df, "key", "uh", "inf", n, biters, alp, attgt.seed).moments
         fr.moments = mom

@@ -3,17 +3,19 @@ effects, Spark-native.
 
 API mirrors the reference (``ATTgt(data, yname, tname, idname, gname,
 ...).fit(est_method, base_period, bstrap)`` — reference ATTgt.py:22-52,
-233) but the execution model is one declarative plan. A balanced panel
-is fitted over one persisted unit table (one row per unit, did/cells.py)
-that every per-cell kernel pass expands in NumPy (did/linalg.py); the
-influence functions are formed and folded into the per-unit moments in
-one more pass over it (``panel_moments``), and the table stays cached so
-a later bootstrap re-runs only that pass. Repeated cross sections (and
-custom kernels) use a cached cell table, influence functions as rows and
-one pass of per-unit moments over them (did/mboot.py). From the moments
-the SEs, the seeded bootstrap, every aggregation and the pre-test follow
-on the driver. No per-cell Spark actions, no dense n×(G·T) driver matrix
-(the reference's scalability cliff, SURVEY.md §4).
+233) but the execution model is one declarative plan. A fit reads one
+persisted unit table (did/cells.py) holding one row per inference unit:
+a balanced panel's units, or a repeated cross section's observations.
+Every per-cell kernel pass expands it in NumPy (did/linalg.py); the
+influence functions are formed and folded into the per-unit moments
+(did/mboot.py) in one more pass over it (``cell_moments``), and the
+table stays cached so a later bootstrap re-runs only that pass. Custom
+(callable) kernels read each cell's expanded rows together, emit
+influence functions as rows, and take one moment pass over those rows
+and the unit weights. From the moments the SEs, the seeded bootstrap,
+every aggregation and the pre-test follow on the driver. No per-cell
+Spark actions, no dense n×(G·T) driver matrix (the reference's
+scalability cliff, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -24,20 +26,19 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from csdid_pyspark_spark.cache import persist_rightsized
 from csdid_pyspark_spark.did import cells as cells_mod
 from csdid_pyspark_spark.did.kernels import (
-    PanelIF,
+    CellIF,
+    cell_moments,
     estimate_custom,
     estimate_panel,
     estimate_rc,
-    panel_moments,
 )
 from csdid_pyspark_spark.did.mboot import Moments, boot_result, mboot, sigma_crit, unit_moments
-from csdid_pyspark_spark.did.preprocess import CL, G, ID, T, W, DidError, PanelData, preprocess_did
+from csdid_pyspark_spark.did.preprocess import DidError, PanelData, preprocess_did
 from csdid_pyspark_spark.did.stats import chi2_sf, norm_ppf
 
 # Upper bound on the moment pass's width M = cells + cohorts + 1: a task
@@ -59,8 +60,8 @@ def _cohort_keys(glist: list[float]) -> dict[float, int]:
 class FitResult:
     table: pd.DataFrame  # g, t, post, att, se, lower, upper, sig
     crit_val: float
-    if_df: DataFrame | None  # RC / custom kernel: (cid, unit-hash uh, inf_sc) rows
-    if_panel: PanelIF | None  # built-in panel kernels: the IF constants per cell
+    if_df: DataFrame | None  # custom kernel: (cid, unit-hash uh, inf_sc) rows
+    if_cells: CellIF | None  # built-in kernels: the IF constants per cell
     moments: Moments  # of the fit's IF cells and the cohort weight columns
     cohort_keys: dict[float, int]  # cohort g → its weight column's key
     cell_map: pd.DataFrame  # cid, g, t, post
@@ -102,7 +103,6 @@ class ATTgt:
         self.anticipation = anticipation
         self.control_group = control_group
         self.clustervars = clustervars
-        self.spark = data.sparkSession
         self.pdata: PanelData = preprocess_did(
             data,
             yname,
@@ -123,20 +123,22 @@ class ATTgt:
         self._units: DataFrame | None = None
 
     def _unit_table(self) -> DataFrame:
-        """The persisted unit table of a panel, built on first use and
-        kept until ``unpersist``: every fit and re-bootstrap reads it."""
+        """The persisted unit table (one row per inference unit), built
+        on first use and kept until ``unpersist``: every fit and
+        re-bootstrap reads it."""
+        pdata = self.pdata
         if self._units is None:
             self._units, _ = persist_rightsized(
-                cells_mod.build_unit_table(self.pdata),
-                known_rows=self.pdata.n * len(self.pdata.tlist),
+                cells_mod.build_unit_table(pdata),
+                known_rows=pdata.n * (len(pdata.tlist) if pdata.panel else 1),
             )
         return self._units
 
-    def _panel_moments(self, fit: PanelIF, biters: int) -> Moments:
-        """The moment pass of a panel fit over the unit table (one Spark
-        job); a bootstrap the fit did not draw re-runs it."""
-        return panel_moments(self._unit_table(), fit, self.pdata.covariates, self.pdata.n,
-                             _cohort_keys(self.pdata.glist), biters, self.seed)
+    def _fit_moments(self, fit: CellIF, biters: int) -> Moments:
+        """The moment pass of a built-in fit over the unit table (one
+        Spark job); a bootstrap the fit did not draw re-runs it."""
+        return cell_moments(self._unit_table(), fit, self.pdata.covariates, self.pdata.n,
+                            _cohort_keys(self.pdata.glist), biters, self.seed)
 
     # ------------------------------------------------------------------
     def fit(
@@ -165,23 +167,18 @@ class ATTgt:
             )
         n = pdata.n
         cohort_keys = _cohort_keys(pdata.glist)
-        if_df = if_panel = None
-        layout = cells_mod.PanelLayout.of(
-            specs, pdata.tlist, self.control_group, self.anticipation
-        ) if pdata.panel else None
-        if layout is not None and not callable(est_method):
-            ests, if_panel = estimate_panel(self._unit_table(), pdata.covariates, est_method,
-                                            self.spark, layout)
-            mom = self._panel_moments(if_panel, self.biters if bstrap else 0)
-            mb = boot_result(mom.S, mom.keys, mom.clusters or n, self.alp) if bstrap else None
+        if_df = if_cells = None
+        layout = cells_mod.CellLayout.of(specs, pdata.tlist, self.control_group, self.anticipation,
+                                         rc=not pdata.panel, ref_slice=self.rc_slice == "reference")
+        if callable(est_method):
+            ests, if_df, mom, mb = self._fit_custom(est_method, layout, active_cells, bstrap)
         else:
-            cell_df, ests, if_df = self._fit_cell_table(specs, est_method, active_cells, layout)
-            # one pass over the IF table and the unit weights: the SEs here,
-            # and every aggregation and the pre-test later, come from it
-            z = self._moment_table(if_df, cohort_keys)
-            mb = mboot(z, "key", "uh", "inf", n, self.biters, self.alp, self.seed) if bstrap else None
-            mom = mb.moments if bstrap else unit_moments(z, "key", "uh", "inf", 0, self.seed)
-            cell_df.unpersist()
+            estimate = estimate_panel if pdata.panel else estimate_rc
+            ests, if_cells = estimate(self._unit_table(), pdata.covariates, est_method, layout)
+            # the SEs here, and every aggregation and the pre-test later,
+            # come from this one pass
+            mom = self._fit_moments(if_cells, self.biters if bstrap else 0)
+            mb = boot_result(mom.S, mom.keys, mom.clusters or n, self.alp) if bstrap else None
         est_by_cid = {e.cid: e for e in ests}
         cids = [e.cid for e in ests if not e.skipped and e.cid in mom.pos]
         crit_val = float(norm_ppf(1 - self.alp / 2))
@@ -219,7 +216,7 @@ class ATTgt:
             table=table,
             crit_val=crit_val,
             if_df=if_df,
-            if_panel=if_panel,
+            if_cells=if_cells,
             moments=mom,
             cohort_keys=cohort_keys,
             cell_map=cell_map,
@@ -233,37 +230,18 @@ class ATTgt:
         return table
 
     # ------------------------------------------------------------------
-    def _fit_cell_table(self, specs, est_method, active_cells: int, layout) -> tuple:
-        """Estimate every cell over a cached cell table: repeated cross
-        sections, or a custom kernel on a panel (whose cell table is
-        the unit table expanded by ``layout``). Returns the cell table,
-        to release once the IF rows are materialized, the estimates and
-        the persisted IF rows (cid, unit hash uh, inf_sc) scaled to the
-        unit universe."""
+    def _fit_custom(self, fn, layout, active_cells: int, bstrap: bool) -> tuple:
+        """Run a custom kernel over every cell's rows (cached while it
+        runs) and take the moment pass over its IF rows. Returns the
+        estimates, the persisted IF rows (cid, unit hash uh, inf_sc)
+        scaled to the unit universe, the moments and the bootstrap."""
         pdata = self.pdata
-        # driver-known upper bound on cell-table rows (each inference
-        # unit appears at most once per active cell) — sizes the cache
+        # driver-known upper bound on the rows (each inference unit
+        # appears at most once per active cell) — sizes the cache
         # partition count with zero extra passes (cache.py)
-        cell_bound = max(1, pdata.n * max(1, active_cells))
-        if layout is not None:
-            cells = layout.cell_rows(self._unit_table(), pdata.covariates)
-            uh = F.xxhash64("uid")
-        else:
-            cells = cells_mod.build_cell_table_rc(
-                pdata,
-                cells_mod.spec_df(self.spark, specs),
-                self.control_group,
-                self.anticipation,
-                ref_preslice=self.rc_slice == "reference",
-            )
-            uh = F.xxhash64("uid", "ut")
-        cell_df, _ = persist_rightsized(cells, known_rows=cell_bound)
-        if callable(est_method):
-            ests, if_raw = estimate_custom(cell_df, pdata.covariates, est_method, self.spark,
-                                           rc=not pdata.panel)
-        else:
-            ests, if_raw = estimate_rc(cell_df, pdata.covariates, est_method, self.spark)
-
+        cell_df, _ = persist_rightsized(layout.cell_rows(self._unit_table(), pdata.covariates),
+                                        known_rows=max(1, pdata.n * max(1, active_cells)))
+        ests, if_raw = estimate_custom(cell_df, pdata.covariates, fn, rc=not pdata.panel)
         # scale per-cell IF into the length-n universe: ×(n/n1), zeros
         # implicit for units outside the cell (reference ATTgt.py:374-378);
         # the per-cell factors are a literal array indexed by cid
@@ -274,42 +252,38 @@ class ATTgt:
         # exact driver-known row count: one IF row per (cell, unit)
         if_rows = int(sum(e.n1 for e in ests if not e.skipped)) or 1
         if_df, _ = persist_rightsized(
-            if_raw.select(
-                "cid",
-                uh.alias("uh"),
-                (F.col("inf") * F.lit(scale)[F.col("cid")]).alias("inf_sc"),
-            ),
+            if_raw.select("cid", "uh", (F.col("inf") * F.lit(scale)[F.col("cid")]).alias("inf_sc")),
             known_rows=if_rows,
         )
-        return cell_df, ests, if_df
+        z = self._moment_table(if_df, _cohort_keys(pdata.glist))
+        if bstrap:
+            mb = mboot(z, "key", "uh", "inf", pdata.n, self.biters, self.alp, self.seed)
+            mom = mb.moments
+        else:
+            mb, mom = None, unit_moments(z, "key", "uh", "inf", 0, self.seed)
+        cell_df.unpersist()
+        return ests, if_df, mom, mb
 
     # ------------------------------------------------------------------
     def _moment_table(self, if_df: DataFrame, cohort_keys: dict[float, int]) -> DataFrame:
-        """The moment pass's input: the IF table (key = cid) unioned with
-        one row per inference unit — panel: id (first-period slice,
-        reference ATTgt.py:591-593); RC: observation row — holding its
-        weight w_u under its cohort's key (-1 for cohorts that are not
-        aggregated), aligned with the IF table's unit hashes. Clustered,
-        that row also carries the cluster's hash and 1/size."""
-        pdata = self.pdata
-        units, uh = (pdata.df.filter(F.col(T) == pdata.tlist[0]), F.xxhash64(ID)) \
-            if pdata.panel else (pdata.df, F.xxhash64(ID, T))
+        """The moment pass's input for a custom kernel: its IF rows (key
+        = cid) unioned with one row per inference unit of the unit table
+        holding its weight w_u under its cohort's key (-1 for cohorts
+        that are not aggregated), and, clustered, its cluster's hash and
+        1/size."""
         by_cohort = F.create_map(*[F.lit(x) for g, k in cohort_keys.items() for x in (g, k)])
-        key = F.coalesce(by_cohort[F.col(G)], F.lit(-1))
-        cluster = [
-            F.xxhash64(CL).alias("cl"),
-            (1.0 / F.count(F.lit(1)).over(Window.partitionBy(CL))).alias("cl_w"),
-        ] if pdata.has_cluster else []
+        key = F.coalesce(by_cohort[F.col("g")], F.lit(-1))
+        cluster = ["cl", "cl_w"] if self.pdata.has_cluster else []
         return if_df.select(F.col("cid").alias("key"), "uh", F.col("inf_sc").alias("inf")) \
-            .unionByName(units.select(key.alias("key"), uh.alias("uh"), F.col(W).alias("inf"),
-                                      *cluster), allowMissingColumns=True)
+            .unionByName(self._unit_table().select(key.alias("key"), "uh", F.col("w").alias("inf"),
+                                                   *cluster), allowMissingColumns=True)
 
     # ------------------------------------------------------------------
     def unpersist(self) -> None:
-        """Release cached state (preprocessed panel, unit table, IF
-        table). Call when done with an estimator in a long-lived session
-        — fit results (the driver-side tables) stay valid; only
-        re-running aggte/bootstrap would recompute lineage."""
+        """Release cached state (preprocessed panel, unit table, a custom
+        kernel's IF table). Call when done with an estimator in a
+        long-lived session — fit results (the driver-side tables) stay
+        valid; only re-running aggte/bootstrap would recompute lineage."""
         cached = [self.pdata.df, self._units]
         if self.fit_result is not None:
             cached.append(self.fit_result.if_df)

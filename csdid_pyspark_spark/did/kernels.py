@@ -4,22 +4,24 @@ panel and repeated cross-section).
 The reference delegates these to the external d2cml-ai/DRDID NumPy
 package after collecting every column to the driver (reference
 ATTgt.py:346-372, 424-432; SURVEY.md §2.6 K1-K3). Here every (g,t) cell
-is estimated at once by a fixed number of per-cell passes over one
-cached table (did/linalg.py) — the panel's unit table, expanded to its
-(unit, cell) rows in NumPy, or the RC cell table: pass 1 sums each
-cell's counts, means and outcome-regression Grams; the propensity logit
-iterates (``irls_logit``, one pass per iteration); for ipw and dr a
-final pass sums the propensity-weighted terms and the logit's
-information matrix. Each pass is one ``mapInArrow`` job whose per-row
-terms are NumPy and whose per-cell constants ride in the closure,
-followed by O(|cells|·p³) driver-side solves.
+is estimated at once by a fixed number of per-cell passes over the
+fit's cached unit table (did/linalg.py), whose rows — a panel's units
+or a repeated cross section's observations — its ``CellLayout``
+expands to (unit, cell) rows in NumPy: pass 1 sums each cell's counts,
+means and outcome-regression Grams; the propensity logit iterates
+(``irls_logit``, one pass per iteration); for ipw and dr a final pass
+sums the propensity-weighted terms and the logit's information matrix.
+Each pass is one ``mapInArrow`` job whose per-row terms are NumPy and
+whose per-cell constants ride in the closure, followed by
+O(|cells|·p³) driver-side solves.
 
-The influence functions follow from the same constants. On the panel
-they are never materialized: ``panel_moments`` forms each unit's IF
-across cells (and its cohort weight) inside one pass over the unit
-table and folds it straight into the moments (did/mboot.py). On RC the
-IF pass emits one value per row (``cell_rows``). Exact formula parity
-with ``tests/ref_drdid.py`` (same published math) is asserted in tests.
+The influence functions follow from the same constants and are never
+materialized: ``cell_moments`` forms each unit's IF across cells (and
+its cohort weight) inside one more pass over the unit table and folds
+it straight into the moments (did/mboot.py). Custom (callable) kernels
+are the exception: they read each cell's rows together and emit IF
+rows. Exact formula parity with ``tests/ref_drdid.py`` (same published
+math) is asserted in tests.
 
 Data movement per fit: O(partitions · |cells| · p²) partial sums to the
 driver per pass; no shuffle, no broadcast, nothing that scales with the
@@ -33,12 +35,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csdid_pyspark_spark.did.cells import PanelLayout
+from csdid_pyspark_spark.did.cells import CellLayout
 from csdid_pyspark_spark.did.linalg import (
-    cell_rows,
     cell_sums,
     consts_df,
     gram,
@@ -68,24 +69,36 @@ def _by_cell(sums: dict[str, np.ndarray], cids: list[int]) -> dict[int, dict[str
     return {cid: {k: v[cid] for k, v in sums.items()} for cid in cids}
 
 
-def _results(cids, n_of, skipped, consts) -> list[CellEstimate]:
-    return [
+def _ps(X, k):
+    return np.minimum(sigmoid(xdot(X, k["gma"])), PS_CLAMP)
+
+
+@dataclass(frozen=True)
+class CellIF:
+    """What forms a fit's influence functions: the cells' layout, the
+    method, and each live cell's IF constants (``consts_df`` packing,
+    with ``n1``: the units in the cell)."""
+
+    layout: CellLayout
+    est_method: str
+    consts: dict[str, np.ndarray]
+
+
+def _fit(cids, n_of, skipped, consts, layout, est_method) -> tuple[list[CellEstimate], CellIF]:
+    """The per-cell estimates of a fit and what forms its IFs."""
+    for cid, k in consts.items():
+        k["n1"] = n_of[cid]
+    ests = [
         CellEstimate(cid, math.nan, float(n_of[cid]), True, skipped[cid]) if cid in skipped
         else CellEstimate(cid, float(consts[cid]["att"]), float(n_of[cid]), False)
         for cid in cids
     ]
-
-
-def _ps(X, k):
-    return np.minimum(sigmoid(xdot(X, k["gma"])), PS_CLAMP)
+    return ests, CellIF(layout, est_method, consts_df(consts))
 
 
 # ---------------------------------------------------------------------------
 # Panel kernels
 # ---------------------------------------------------------------------------
-
-PANEL_COLS = ["d", "w", "dy"]
-
 
 def _panel_pass1(X, c, k):
     d, w, dy = c["d"], c["w"], c["dy"]
@@ -137,30 +150,18 @@ def _panel_if(est_method):
     return inf
 
 
-@dataclass(frozen=True)
-class PanelIF:
-    """What forms a panel fit's influence functions: the cells' layout,
-    the method, and each live cell's IF constants (``consts_df``
-    packing, with ``n1``: the units in the cell)."""
-
-    layout: PanelLayout
-    est_method: str
-    consts: dict[str, np.ndarray]
-
-
 def estimate_panel(
     units: DataFrame,
     xcols: list[str],
     est_method: str,
-    spark: SparkSession,
-    layout: PanelLayout,
-) -> tuple[list[CellEstimate], PanelIF]:
+    layout: CellLayout,
+) -> tuple[list[CellEstimate], CellIF]:
     """Estimate every (g,t) cell of ``layout`` over a panel unit table.
 
     Returns (per-cell estimates, the constants of their influence
-    functions) — ``panel_moments`` forms the IFs from them."""
+    functions) — ``cell_moments`` forms the IFs from them."""
     p = len(xcols)
-    s1 = cell_sums(units, xcols, PANEL_COLS, _panel_pass1, layout=layout)
+    s1 = cell_sums(units, layout, xcols, _panel_pass1)
     n_of = s1["n"]
     cids = [int(c) for c in np.flatnonzero(n_of)]
     pass1 = _by_cell(s1, cids)
@@ -192,8 +193,7 @@ def estimate_panel(
             for cid, r in pass1.items()
             if cid not in skipped
         }
-        gamma = irls_logit(units, xcols, spark, [c for c in cids if c not in skipped], init=init,
-                           layout=layout)
+        gamma = irls_logit(units, layout, xcols, [c for c in cids if c not in skipped], init=init)
         for cid, gm in gamma.items():
             if gm is None and cid not in skipped:
                 skipped[cid] = "propensity-score logit did not converge"
@@ -219,9 +219,9 @@ def estimate_panel(
     else:
         # final pass with the coefficients in the closure
         live = [c for c in cids if c not in skipped]
-        passf = _by_cell(cell_sums(units, xcols, PANEL_COLS, _panel_passf, consts_df(
+        passf = _by_cell(cell_sums(units, layout, xcols, _panel_passf, consts_df(
             {cid: {"beta": beta.get(cid, np.zeros(p)), "gma": gamma[cid]} for cid in live}
-        ), layout), live)
+        )), live)
         for cid in live:
             r1, rf = pass1[cid], passf[cid]
             n, sw_t, m1 = r1["n"], r1["sw_t"], r1["m1"]
@@ -256,59 +256,12 @@ def estimate_panel(
                 "a_ps": a_ps,
             }
 
-    for cid, k in consts.items():
-        k["n1"] = n_of[cid]
-    return _results(cids, n_of, skipped, consts), PanelIF(layout, est_method, consts_df(consts))
-
-
-def panel_moments(
-    units: DataFrame,
-    fit: PanelIF,
-    xcols: list[str],
-    n: int,
-    cohort_keys: dict[float, int],
-    biters: int,
-    seed: int,
-) -> Moments:
-    """The moments (did/mboot.py) of a panel fit, in one pass over the
-    unit table: each unit's z_u holds its IF in every live cell, scaled
-    to the universe of n units by n/n1 (reference ATTgt.py:374-378),
-    and its weight w_u under its cohort's key (-1 for units of cohorts
-    that are not aggregated) — the key set of the RC path's (key, unit,
-    value) table. Signs per unit, or per cluster when the table has
-    ``cl``/``cl_w``."""
-    inf_of = _panel_if(fit.est_method)
-    live = np.flatnonzero(fit.consts["live"])
-    per_cell = {k: v for k, v in fit.consts.items() if k != "live"}
-    gs = np.array(sorted(cohort_keys), float)
-    gkeys = np.array([cohort_keys[g] for g in gs], np.int64)
-    clustered = "cl" in units.columns
-
-    def z_blocks(rb: pa.RecordBatch, max_units: int):
-        for u, ui, cid, X, named in fit.layout.blocks(rb, xcols, live, max_units):
-            at = np.searchsorted(gs, u["g"]).clip(max=len(gs) - 1)
-            ukey = np.where(gs[at] == u["g"], gkeys[at], -1)
-            keys = np.union1d(live, ukey)
-            Z = np.zeros((len(ukey), len(keys)))
-            Z[np.arange(len(ukey)), np.searchsorted(keys, ukey)] = u["w"]
-            if len(cid):  # no cell may be live: the weights still count
-                k = {name: v[cid] for name, v in per_cell.items()}
-                with np.errstate(over="ignore"):
-                    Z[ui, np.searchsorted(keys, cid)] = inf_of(X, named, k) * (n / k["n1"])
-            sh, a = (u["cl"], u["cl_w"]) if clustered else (u["uh"], np.ones(len(ukey)))
-            yield keys, Z, sh, a
-
-    cols = [*fit.layout.columns(xcols), *(["cl", "cl_w"] if clustered else [])]
-    return row_moments(units.select(*cols), z_blocks, len(live) + len(gs) + 1, biters, seed,
-                       clustered)
+    return _fit(cids, n_of, skipped, consts, layout, est_method)
 
 
 # ---------------------------------------------------------------------------
 # Repeated cross-section kernels
 # ---------------------------------------------------------------------------
-
-RC_COLS = ["d", "pst", "w", "y"]
-
 
 def _rc_weights(c):
     """Per-row treated (post, pre), control OLS (post, pre) and treated weights."""
@@ -406,17 +359,17 @@ def _rc_if(est_method):
 
 
 def estimate_rc(
-    cell_df: DataFrame,
+    obs: DataFrame,
     xcols: list[str],
     est_method: str,
-    spark: SparkSession,
-) -> tuple[list[CellEstimate], DataFrame]:
-    """Estimate every (g,t) cell of a repeated-cross-section cell table
-    (columns cid, uid, ut, d, pst, w, y, x…). Locally-efficient DR per
-    Sant'Anna & Zhao (2020) eq. 3.4 (the reference's drdid_rc path,
-    ATTgt.py:424-432)."""
+    layout: CellLayout,
+) -> tuple[list[CellEstimate], CellIF]:
+    """Estimate every (g,t) cell of ``layout`` over a repeated cross
+    section's unit table (one row per observation). Locally-efficient
+    DR per Sant'Anna & Zhao (2020) eq. 3.4 (the reference's drdid_rc
+    path, ATTgt.py:424-432). Returns what ``estimate_panel`` does."""
     p = len(xcols)
-    s1 = cell_sums(cell_df, xcols, RC_COLS, _rc_pass1)
+    s1 = cell_sums(obs, layout, xcols, _rc_pass1)
     n_of = s1["n"]
     cids = [int(c) for c in np.flatnonzero(n_of)]
     pass1 = _by_cell(s1, cids)
@@ -457,7 +410,7 @@ def estimate_rc(
             for cid, r in pass1.items()
             if cid not in skipped
         }
-        gamma = irls_logit(cell_df, xcols, spark, [c for c in cids if c not in skipped], init=init)
+        gamma = irls_logit(obs, layout, xcols, [c for c in cids if c not in skipped], init=init)
         for cid, gm in gamma.items():
             if gm is None and cid not in skipped:
                 skipped[cid] = "propensity-score logit did not converge"
@@ -493,7 +446,7 @@ def estimate_rc(
     else:
         live = [c for c in cids if c not in skipped]
         zero = np.zeros(p)
-        passf = _by_cell(cell_sums(cell_df, xcols, RC_COLS, _rc_passf, consts_df({
+        passf = _by_cell(cell_sums(obs, layout, xcols, _rc_passf, consts_df({
             cid: {
                 "bc0": beta[cid]["gc0"] if est_method == "dr" else zero,
                 "bc1": beta[cid]["gc1"] if est_method == "dr" else zero,
@@ -584,8 +537,53 @@ def estimate_rc(
                 "a_t1": xpxi[cid]["gt1"] @ v_t1,
             }
 
-    if_df = cell_rows(cell_df, xcols, RC_COLS, _rc_if(est_method), consts_df(consts), ["uid", "ut"])
-    return _results(cids, n_of, skipped, consts), if_df
+    return _fit(cids, n_of, skipped, consts, layout, est_method)
+
+
+# ---------------------------------------------------------------------------
+# The moment pass of either design
+# ---------------------------------------------------------------------------
+
+def cell_moments(
+    units: DataFrame,
+    fit: CellIF,
+    xcols: list[str],
+    n: int,
+    cohort_keys: dict[float, int],
+    biters: int,
+    seed: int,
+) -> Moments:
+    """The moments (did/mboot.py) of a fit, in one pass over its unit
+    table: each unit's z_u holds its IF in every live cell, scaled to
+    the universe of n units by n/n1 (reference ATTgt.py:374-378), and
+    its weight w_u under its cohort's key (-1 for units of cohorts that
+    are not aggregated). Signs per unit, or per cluster when the table
+    has ``cl``/``cl_w``."""
+    inf_of = (_rc_if if fit.layout.rc else _panel_if)(fit.est_method)
+    live = np.flatnonzero(fit.consts["live"])
+    per_cell = {k: v for k, v in fit.consts.items() if k != "live"}
+    gs = np.array(sorted(cohort_keys), float)
+    gkeys = np.array([cohort_keys[g] for g in gs], np.int64)
+    clustered = "cl" in units.columns
+
+    def z_blocks(rb: pa.RecordBatch, max_units: int):
+        for u, ui, cid, X, named in fit.layout.blocks(rb, xcols, live, max_units):
+            at = np.searchsorted(gs, u["g"]).clip(max=len(gs) - 1)
+            ukey = np.where(gs[at] == u["g"], gkeys[at], -1)
+            keys = np.union1d(live, ukey)
+            Z = np.zeros((len(ukey), len(keys)))
+            Z[np.arange(len(ukey)), np.searchsorted(keys, ukey)] = u["w"]
+            if len(cid):  # no cell may be live: the weights still count
+                k = {name: v[cid] for name, v in per_cell.items()}
+                with np.errstate(over="ignore"):
+                    Z[ui, np.searchsorted(keys, cid)] = inf_of(X, named, k) * (n / k["n1"])
+            sh, a = (u["cl"], u["cl_w"]) if clustered else (u["uh"], np.ones(len(ukey)))
+            yield keys, Z, sh, a
+
+    # every row carries its weight: the pass reads them all
+    cols = [*fit.layout.columns(xcols), *(["cl", "cl_w"] if clustered else [])]
+    return row_moments(units.select(*cols), z_blocks, len(live) + len(gs) + 1, biters, seed,
+                       clustered)
 
 
 # ---------------------------------------------------------------------------
@@ -600,25 +598,19 @@ def estimate_custom(
     cell_df: DataFrame,
     xcols: list[str],
     fn,
-    spark: SparkSession,
     rc: bool,
 ) -> tuple[list[CellEstimate], DataFrame]:
-    """Run a user-supplied NumPy kernel per (g,t) cell. Each cell's rows
-    arrive as one pandas group (Arrow-batched); cells execute in
-    parallel across the cluster. Scales while any single cell fits in
-    one task — the escape hatch for estimators the aggregation kernels
-    don't cover."""
+    """Run a user-supplied NumPy kernel per (g,t) cell over the rows of
+    ``CellLayout.cell_rows``. Each cell's rows arrive as one pandas
+    group (Arrow-batched); cells execute in parallel across the
+    cluster. Scales while any single cell fits in one task — the escape
+    hatch for estimators the aggregation kernels don't cover. Returns
+    the estimates and the IF rows (cid, uh, inf)."""
     import pandas as pd
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+    from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
-    uid_type = cell_df.schema["uid"].dataType
-    fields = [
-        StructField("cid", IntegerType()),
-        StructField("uid", uid_type),
-    ]
-    if rc:
-        fields.append(StructField("ut", cell_df.schema["ut"].dataType))
-    fields += [StructField("inf", DoubleType()), StructField("att", DoubleType())]
+    fields = [StructField("cid", IntegerType()), StructField("uh", LongType()),
+              StructField("inf", DoubleType()), StructField("att", DoubleType())]
     out_schema = StructType(fields)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -634,10 +626,7 @@ def estimate_custom(
                               i_weights=w, covariates=X)
         except Exception:
             return pd.DataFrame({f.name: [] for f in fields})
-        out = {"cid": pdf["cid"], "uid": pdf["uid"], "inf": inf, "att": float(att)}
-        if rc:
-            out["ut"] = pdf["ut"]
-        return pd.DataFrame(out)[[f.name for f in fields]]
+        return pd.DataFrame({"cid": pdf["cid"], "uh": pdf["uh"], "inf": inf, "att": float(att)})
 
     if_df = cell_df.groupBy("cid").applyInPandas(run, out_schema)
     stats = (
@@ -654,5 +643,4 @@ def estimate_custom(
             results.append(CellEstimate(cid, math.nan, 0.0, True, "custom kernel failed"))
         else:
             results.append(CellEstimate(cid, float(r["att"]), float(r["n1"]), False))
-    cols = ["cid", "uid"] + (["ut"] if rc else []) + ["inf"]
-    return results, if_df.select(*cols)
+    return results, if_df.select("cid", "uh", "inf")

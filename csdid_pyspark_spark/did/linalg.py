@@ -1,23 +1,21 @@
-"""Per-cell passes over a cached table: the panel unit table or a
-cell-form table.
+"""Per-cell passes over a fit's cached unit table (did/cells.py).
 
 Every regression and logit the estimator needs is a p×p problem per
 (g,t) cell with tiny p (intercept + covariates), so no design matrix is
 ever materialized. Each pass is ONE ``mapInArrow`` job: the pass's
 per-cell constants (coefficients, etas, means) travel in the closure as
-dense NumPy arrays indexed by cell id, each Arrow batch yields its
-(cell, row) rows — a panel unit table expanded in NumPy by its
-``PanelLayout`` (did/cells.py), or a cell-form table's own rows, of the
-live cells only (filtered on the Spark side) — whose per-row terms are
-NumPy summed per cell with ``bincount``, and each partition yields one
-cells × terms blob that the driver adds up, then solves every cell's
-p×p system at once. O(partitions · cells · p²) values reach the
-driver, never O(units), and there is no shuffle and no broadcast:
-kernel pass 1, every IRLS iteration and the final propensity pass are
-the same primitive (``cell_sums``). On a cell-form table,
-``cell_rows`` emits one value per row instead of sums. This replaces
-the reference's collect-to-NumPy pattern (reference ATTgt.py:346-351,
-utils.py:20-34).
+dense NumPy arrays indexed by cell id; each Arrow batch of the unit
+table is expanded by the fit's ``CellLayout`` to the (unit, cell) rows
+of the live cells only (on repeated cross sections, rows of periods no
+live cell uses are dropped on the Spark side first); their per-row
+terms are NumPy summed per cell with ``bincount``, and each partition
+yields one cells × terms blob that the driver adds up, then solves
+every cell's p×p system at once. O(partitions · cells · p²) values
+reach the driver, never O(units), and there is no shuffle and no
+broadcast: kernel pass 1, every IRLS iteration and the final propensity
+pass are the same primitive (``cell_sums``), on panels and repeated
+cross sections alike. This replaces the reference's collect-to-NumPy
+pattern (reference ATTgt.py:346-351, utils.py:20-34).
 """
 
 from __future__ import annotations
@@ -26,11 +24,9 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql import DataFrame
 
-from csdid_pyspark_spark.did.cells import PanelLayout
+from csdid_pyspark_spark.did.cells import CellLayout
 
 
 def consts_df(per_cell: dict[int, dict[str, float | np.ndarray]]) -> dict[str, np.ndarray]:
@@ -48,69 +44,38 @@ def consts_df(per_cell: dict[int, dict[str, float | np.ndarray]]) -> dict[str, n
     return out
 
 
-def _live_rows(df: DataFrame, consts: dict | None) -> DataFrame:
-    """A cell-form table's rows of the live cells, filtered before the
-    Arrow conversion."""
-    if consts is None:
-        return df
-    return df.filter(F.col("cid").isin([int(c) for c in np.flatnonzero(consts["live"])]))
-
-
-def _floats(rb: pa.RecordBatch, c: str) -> np.ndarray:
-    return rb.column(c).to_numpy(zero_copy_only=False).astype(float)
-
-
-def _reader(table: DataFrame, xcols, cols, consts, layout: PanelLayout | None):
-    """The frame a pass maps over, and a function from one of its Arrow
-    batches to blocks (cid, X, named columns) of live rows."""
-    if layout is not None:
-        live = layout.cells if consts is None else np.flatnonzero(consts["live"])
-
-        def unit_rows(rb):
-            for _, _, cid, X, named in layout.blocks(rb, xcols, live):
-                yield cid, X, {c: named[c] for c in cols}
-        return table.select(*layout.columns(xcols)), unit_rows
-
-    def rows(rb):
-        cid = rb.column("cid").to_numpy(zero_copy_only=False).astype(np.intp)
-        yield cid, np.column_stack([_floats(rb, c) for c in xcols]), {c: _floats(rb, c) for c in cols}
-    return _live_rows(table, consts).select("cid", *xcols, *cols), rows
-
-
-def _layout(terms, p: int, cols: list[str], consts: dict | None) -> list[tuple[str, tuple]]:
+def _term_shapes(terms, p: int, names: list[str], consts: dict | None) -> list[tuple[str, tuple]]:
     """Names and per-row shapes of a pass's terms, from one call on zero rows."""
     k = {n: v[:0] for n, v in (consts or {}).items() if n != "live"}
-    out = terms(np.zeros((0, p)), {c: np.zeros(0) for c in cols}, k)
+    out = terms(np.zeros((0, p)), {c: np.zeros(0) for c in names}, k)
     return [(n, v.shape[1:]) for n, v in out.items()]
 
 
 def cell_sums(
     table: DataFrame,
+    layout: CellLayout,
     xcols: list[str],
-    cols: list[str],
     terms: Callable[[np.ndarray, dict, dict], dict],
     consts: dict[str, np.ndarray] | None = None,
-    layout: PanelLayout | None = None,
 ) -> dict[str, np.ndarray]:
-    """Σ over each cell's rows of every term of ``terms(X, cols, consts)``
-    → {name: per-row array (rows, *shape)}, where X is the rows × p
-    covariate matrix, cols the named columns and consts the pass's
-    per-cell constants gathered to each row; with ``consts`` only live
-    cells' rows count. ``table`` is a unit table expanded by ``layout``,
-    or (no layout) a cell-form table with a ``cid`` column. One Spark
-    job; returns name → (cells, *shape) array, row c holding cell c's
-    sums (zeros where it has no rows), or {} without a job when no cell
-    is live."""
+    """Σ over each cell's rows of every term of ``terms(X, named,
+    consts)`` → {name: per-row array (rows, *shape)}, where X is the
+    rows × p covariate matrix, named the layout's named columns and
+    consts the pass's per-cell constants gathered to each row; with
+    ``consts`` only live cells' rows count. ``table`` is a unit table
+    expanded by ``layout``. One Spark job; returns name → (cells,
+    *shape) array, row c holding cell c's sums (zeros where it has no
+    rows), or {} without a job when no cell is live."""
     if consts is not None and not consts["live"].any():
         return {}
-    terms_layout = _layout(terms, len(xcols), cols, consts)
-    width = sum(int(np.prod(shape)) for _, shape in terms_layout)
-    df, rows = _reader(table, xcols, cols, consts, layout)
+    live = layout.cells if consts is None else np.flatnonzero(consts["live"])
+    shapes = _term_shapes(terms, len(xcols), layout.names, consts)
+    width = sum(int(np.prod(shape)) for _, shape in shapes)
 
     def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc = np.zeros((0, width))
         for rb in batches:
-            for cid, X, named in rows(rb):
+            for _, _, cid, X, named in layout.blocks(rb, xcols, live):
                 if not len(cid):
                     continue
                 per_row = {k: v[cid] for k, v in (consts or {}).items() if k != "live"}
@@ -124,48 +89,18 @@ def cell_sums(
                 acc[:m] += np.bincount(at, weights=T.ravel(), minlength=m * width).reshape(m, width)
         yield pa.RecordBatch.from_pydict({"sums": [acc.tobytes()]})
 
-    blobs = df.mapInArrow(part, "sums binary").toArrow()
+    blobs = layout.read(table, xcols, live).mapInArrow(part, "sums binary").toArrow()
     parts = [np.frombuffer(b, np.float64).reshape(-1, width) for b in blobs["sums"].to_pylist()]
     ncell = max([len(consts["live"]) if consts is not None else 0, *map(len, parts)])
     total = np.zeros((ncell, width))
     for s in parts:
         total[: len(s)] += s
     out, at = {}, 0
-    for name, shape in terms_layout:
+    for name, shape in shapes:
         size = int(np.prod(shape))
         out[name] = total[:, at : at + size].reshape(ncell, *shape)
         at += size
     return out
-
-
-def cell_rows(
-    cell_df: DataFrame,
-    xcols: list[str],
-    cols: list[str],
-    value: Callable[[np.ndarray, dict, dict], np.ndarray],
-    consts: dict[str, np.ndarray],
-    keep_cols: list[str],
-) -> DataFrame:
-    """One value per row of every live cell of a cell-form table, as
-    (cid, *keep_cols, inf): the lazy sibling of ``cell_sums`` that emits
-    rows instead of sums."""
-    keep_cols = ["cid", *keep_cols]
-    schema = StructType([cell_df.schema[c] for c in keep_cols] + [StructField("inf", DoubleType())])
-    _, rows = _reader(cell_df, xcols, cols, consts, None)
-
-    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            for cid, X, named in rows(rb):
-                if not len(cid):
-                    continue
-                with np.errstate(over="ignore"):
-                    inf = value(X, named, {k: v[cid] for k, v in consts.items() if k != "live"})
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(c) for c in keep_cols] + [pa.array(inf, pa.float64())],
-                    names=[*keep_cols, "inf"],
-                )
-
-    return _live_rows(cell_df, consts).select(*keep_cols, *xcols, *cols).mapInArrow(part, schema)
 
 
 # -- per-row building blocks ---------------------------------------------------
@@ -215,21 +150,20 @@ def _irls_terms(X, c, k):
 
 def irls_logit(
     table: DataFrame,
+    layout: CellLayout,
     xcols: list[str],
-    spark: SparkSession,  # noqa: ARG001 - kept for callers; passes need no session
     active_cids: list[int],
     max_iter: int = 25,
     tol: float = 1e-8,
     init: dict[int, np.ndarray] | None = None,
-    layout: PanelLayout | None = None,
 ) -> dict[int, np.ndarray | None]:
     """Weighted logistic regression of d on X per cell, all cells
     simultaneously: each IRLS iteration is one ``cell_sums`` pass (one
-    Spark job) over the cached table (a unit table expanded by
-    ``layout``, or a cell-form table) with the coefficients in the
-    closure; the p×p solves happen on the driver. Converged cells leave
-    the pass: late iterations neither expand nor convert the rows of
-    converged cells.
+    Spark job) over the cached unit table expanded by ``layout``, with
+    the coefficients in the closure; the p×p solves happen on the
+    driver. Converged cells leave the pass: late iterations do not
+    expand their rows, and on repeated cross sections they do not
+    convert rows of periods only converged cells use.
 
     ``init`` warm-starts the intercept (e.g. logit of the cell's
     treatment share) — the fixed point is unchanged, it just converges
@@ -251,7 +185,7 @@ def irls_logit(
         if not active:
             break
         consts = consts_df({cid: {"gma": beta[cid]} for cid in active})
-        sums = cell_sums(table, xcols, ["d", "w"], _irls_terms, consts, layout)
+        sums = cell_sums(table, layout, xcols, _irls_terms, consts)
         next_active = set()
         for cid in active:
             new = solve_safe(sums["H"][cid], sums["r"][cid])

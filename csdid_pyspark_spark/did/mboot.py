@@ -20,15 +20,17 @@ SURVEY.md §4). A unit that carries its cluster — ``cl`` (cluster hash)
 and ``cl_w`` (1/cluster size) — takes its cluster's sign with weight
 a_u = 1/n_cl (a_u = 1 otherwise). Two passes share that block method:
 
-- ``row_moments`` reads a table holding each unit in one row (the
-  panel's unit table): a caller-supplied function forms each batch's
-  dense z_u blocks, so the panel's influence functions are never
+- ``row_moments`` reads a table holding each unit in one row (a fit's
+  unit table: a panel's units or a repeated cross section's
+  observations): a caller-supplied function forms each batch's dense
+  z_u blocks, so the built-in kernels' influence functions are never
   materialized, and no shuffle is needed. The driver adds one blob per
   task, at most 64 MiB of them (one blob at least) whatever the
   partition count: never O(n).
-- ``unit_moments`` reads a (key, unit hash, value) table (the RC
-  influence-function rows), repartitioned and sorted by unit hash; the
-  per-partition sums are added on one executor and a single
+- ``unit_moments`` reads a (key, unit hash, value) table (a custom
+  kernel's influence-function rows with the unit weights, or
+  ``robust_cells``' per-unit rows), repartitioned and sorted by unit
+  hash; the per-partition sums are added on one executor and a single
   (M² + M + biters·M)-value blob reaches the driver.
 
 Quantile semantics match the reference exactly (inverted-CDF for both

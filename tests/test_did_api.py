@@ -23,21 +23,25 @@ def _fit(spark, pdf, **kw):
     return est
 
 
-def test_callable_est_method_matches_builtin(spark, dgp):
+@pytest.mark.parametrize("design", ["panel", "rc"])
+def test_callable_est_method_matches_builtin(spark, dgp, design):
     """A custom kernel (the NumPy reference drdid) routed through
     applyInPandas must reproduce the built-in aggregation-pass kernel
-    exactly — two entirely different execution paths, one answer."""
+    exactly — two entirely different execution paths, one answer — on
+    panels and on repeated cross sections."""
 
-    def custom(y1, y0, D, i_weights, covariates):
+    def custom_panel(y1, y0, D, i_weights, covariates):
         return ref_drdid.drdid_panel(y1, y0, D, covariates, i_weights)
 
+    def custom_rc(y, post, D, i_weights, covariates):
+        return ref_drdid.drdid_rc(y, post, D, covariates, i_weights)
+
     sdf = spark.createDataFrame(dgp)
-    a = ATTgt(sdf, "Y", "period", "id", "G", xfmla="Y ~ x1", weights_name="wgt",
-              allow_unbalanced_panel=False)
-    builtin = a.fit(est_method="dr")
-    b = ATTgt(sdf, "Y", "period", "id", "G", xfmla="Y ~ x1", weights_name="wgt",
-              allow_unbalanced_panel=False)
-    custom_t = b.fit(est_method=custom)
+    kw = {"xfmla": "Y ~ x1", "weights_name": "wgt", "allow_unbalanced_panel": False,
+          "panel": design == "panel"}
+    builtin = ATTgt(sdf, "Y", "period", "id", "G", **kw).fit(est_method="dr")
+    b = ATTgt(sdf, "Y", "period", "id", "G", **kw)
+    custom_t = b.fit(est_method=custom_panel if design == "panel" else custom_rc)
     for (_, r1), (_, r2) in zip(builtin.iterrows(), custom_t.iterrows()):
         assert r2["att"] == pytest.approx(r1["att"], abs=1e-8)
         assert r2["se"] == pytest.approx(r1["se"], rel=1e-6)

@@ -101,20 +101,20 @@ def test_irls_nonconvergence_returns_none(spark):
     """Perfect separation never meets tol: irls_logit must return None
     for that cell (an unconverged iterate is not an MLE) rather than
     silently using the last iterate."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+    from csdid_pyspark_spark.did.cells import CellLayout, build_cell_specs
     from csdid_pyspark_spark.did.linalg import irls_logit
 
+    # observations of cell 0 (cohort 3, t = 2, base period 1) only:
+    # treated (cohort 3) exactly when x > 0, else never treated
     rows = []
     for i in range(200):
         x = (i % 20) / 10.0 - 1.0
-        d = 1.0 if x > 0 else 0.0  # d is a deterministic function of x
-        rows.append((0, d, 1.0, 1.0, x))
-    cell = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cid", "d", "w", "_x0", "_x1"])
-    )
-    out = irls_logit(cell, ["_x0", "_x1"], spark, [0], max_iter=8)
+        rows.append((i, 3.0 if x > 0 else 0.0, 1.0, 0, 0.0, 1.0, x))
+    obs = spark.createDataFrame(rows, "uh long, g double, w double, t int, _y double, "
+                                      "_x0 double, _x1 double")
+    tlist = [1.0, 2.0, 3.0]
+    layout = CellLayout.of(build_cell_specs(tlist, [3.0]), tlist, "nevertreated", 0, rc=True)
+    out = irls_logit(obs, layout, ["_x0", "_x1"], [0], max_iter=8)
     assert out[0] is None
 
 # Slow tier: deselected by the default `-m "not slow"` (pytest.ini) so the

@@ -7,7 +7,8 @@ dr on the panel (not-yet-treated controls) and on repeated cross
 sections, at the same tolerances (ATT abs 1e-8, SE rel 1e-6). It also
 pins the two ways a cell is skipped inside the kernels: a propensity
 logit that does not converge (perfect separation) and a singular
-outcome-regression design. Two more tests check that a pass's sums do
+outcome-regression design. Two more tests check, on a small
+observation table read through a ``CellLayout``, that a pass's sums do
 not depend on which partition holds a live cell's rows: a last
 partition with no live row adds nothing to ``cell_sums`` or to an IRLS
 iteration.
@@ -142,18 +143,32 @@ def test_fit_with_every_cell_skipped_returns_nan_table(spark):
 
 
 def _logit_rows(cid, n, slope, seed):
+    """n observations that only cell ``cid`` of ``_layout()`` reads
+    (cell 0: period 1, its base; cell 1: period 3, its t), treated
+    (cohort 3) with probability sigmoid(slope·x), else never treated."""
     rng = np.random.default_rng(seed)
     x = rng.normal(size=n)
     d = (rng.random(n) < 1 / (1 + np.exp(-slope * x))).astype(float)
-    return pd.DataFrame({"cid": cid, "d": d, "w": 1.0 + (np.arange(n) % 3), "dy": x + d,
+    return pd.DataFrame({"uh": seed * 1000 + np.arange(n), "g": 3.0 * d,
+                         "w": 1.0 + (np.arange(n) % 3), "t": 2 * cid, "_y": x + d,
                          "_x0": 1.0, "_x1": x})
 
 
+def _layout():
+    """Two RC cells of cohort 3 over periods 1..3: cell 0 (t = 2, base
+    period 1) and cell 1 (t = 3, base period 2)."""
+    from csdid_pyspark_spark.did.cells import CellLayout, build_cell_specs
+
+    tlist = [1.0, 2.0, 3.0]
+    return CellLayout.of(build_cell_specs(tlist, [3.0]), tlist, "nevertreated", 0, rc=True)
+
+
 def _partitions(spark, *pdfs):
-    """A cached cell table whose i-th partition holds exactly pdfs[i]."""
-    rows = [[tuple(r) for r in p.astype(float).itertuples(index=False)] for p in pdfs]
+    """A cached observation table whose i-th partition holds exactly pdfs[i]."""
+    rows = [list(p.astype(object).itertuples(index=False, name=None)) for p in pdfs]
     rdd = spark.sparkContext.parallelize(rows, len(rows)).flatMap(list)
-    out = spark.createDataFrame(rdd, "cid double, d double, w double, dy double, _x0 double, _x1 double")
+    out = spark.createDataFrame(
+        rdd, "uh long, g double, w double, t int, _y double, _x0 double, _x1 double")
     out = out.cache()
     out.count()
     return out
@@ -164,7 +179,7 @@ def test_cell_sums_independent_of_where_live_rows_sit(spark):
     sits: the sums of a table whose last partition is empty, or holds
     only rows of cells the pass does not read, equal those of the same
     rows in one partition."""
-    from csdid_pyspark_spark.did.kernels import PANEL_COLS, _panel_pass1
+    from csdid_pyspark_spark.did.kernels import _rc_pass1
     from csdid_pyspark_spark.did.linalg import _irls_terms, cell_sums, consts_df
 
     a = pd.concat([_logit_rows(0, 80, 1.0, 1), _logit_rows(1, 60, 0.5, 2)])
@@ -172,18 +187,18 @@ def test_cell_sums_independent_of_where_live_rows_sit(spark):
     split = _partitions(spark, a, b)
     empty_last = _partitions(spark, a, a.iloc[:0])
     whole = split.coalesce(1)
-    xcols = ["_x0", "_x1"]
+    layout, xcols = _layout(), ["_x0", "_x1"]
     try:
         assert split.rdd.getNumPartitions() == 2
         consts = consts_df({0: {"gma": np.array([0.2, -0.4])}})
-        got = cell_sums(split, xcols, ["d", "w"], _irls_terms, consts)
-        want = cell_sums(whole, xcols, ["d", "w"], _irls_terms, consts)
+        got = cell_sums(split, layout, xcols, _irls_terms, consts)
+        want = cell_sums(whole, layout, xcols, _irls_terms, consts)
         assert set(got) == {"H", "r"}
         for k in want:
             np.testing.assert_allclose(got[k][0], want[k][0], rtol=1e-12)
         assert got["H"][0][0, 0] > 0
-        got1 = cell_sums(empty_last, xcols, PANEL_COLS, _panel_pass1)
-        want1 = cell_sums(empty_last.coalesce(1), xcols, PANEL_COLS, _panel_pass1)
+        got1 = cell_sums(empty_last, layout, xcols, _rc_pass1)
+        want1 = cell_sums(empty_last.coalesce(1), layout, xcols, _rc_pass1)
         for k in want1:
             np.testing.assert_allclose(got1[k], want1[k], rtol=1e-12)
         assert list(got1["n"]) == [80, 60]
@@ -201,11 +216,11 @@ def test_irls_straggler_absent_from_last_partition(spark):
     a = pd.concat([_logit_rows(0, 150, 1.5, 4), _logit_rows(1, 80, 0.5, 5)])
     b = _logit_rows(1, 90, 0.5, 6)
     split = _partitions(spark, a, b)
-    xcols = ["_x0", "_x1"]
+    layout, xcols = _layout(), ["_x0", "_x1"]
     try:
-        whole = irls_logit(split.coalesce(1), xcols, spark, [0, 1])
+        whole = irls_logit(split.coalesce(1), layout, xcols, [0, 1])
         assert whole[0] is not None and whole[1] is not None
-        got = irls_logit(split, xcols, spark, [0, 1], init={1: whole[1]})
+        got = irls_logit(split, layout, xcols, [0, 1], init={1: whole[1]})
     finally:
         split.unpersist()
     assert got[0] is not None and got[1] is not None

@@ -6,7 +6,7 @@ partitions and Arrow batches far smaller than a partition, so units
 straddle batch boundaries. The draws must equal
 Σ_rows _splitmix_sign(uh, b, seed)·inf (per cluster: the cluster's
 sign, weight 1/cluster size) and the Gram Σ_u z_u z_uᵀ, up to summation
-order. The panel's fused pass (``panel_moments``) is checked the same
+order. The panel's fused pass (``cell_moments``) is checked the same
 way over a unit table: each unit's IF in every cell it enters, formed
 unit by unit and cell by cell in plain Python, plus its cohort weight."""
 
@@ -110,13 +110,13 @@ def _unit_table(clustered: bool) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
 
 
 def _panel_fit():
-    from csdid_pyspark_spark.did.cells import PanelLayout, build_cell_specs
-    from csdid_pyspark_spark.did.kernels import PanelIF
+    from csdid_pyspark_spark.did.cells import CellLayout, build_cell_specs
+    from csdid_pyspark_spark.did.kernels import CellIF
     from csdid_pyspark_spark.did.linalg import consts_df
 
     tlist = [1.0, 2.0, 3.0, 4.0, 5.0]
     specs = build_cell_specs(tlist, [3.0, 4.0])
-    layout = PanelLayout.of(specs, tlist, "notyettreated", 0)
+    layout = CellLayout.of(specs, tlist, "notyettreated", 0)
     rng = np.random.default_rng(4)
     per_cell = {
         int(c): {"eta_t": rng.normal(), "eta_c": rng.normal(), "m_wt": rng.uniform(0.2, 1),
@@ -125,7 +125,7 @@ def _panel_fit():
                  "a_ps": rng.normal(size=2), "n1": float(rng.integers(10, 40))}
         for c in layout.cells if c != 2  # cell 2 was skipped by the fit
     }
-    return specs, PanelIF(layout, "dr", consts_df(per_cell)), per_cell
+    return specs, CellIF(layout, "dr", consts_df(per_cell)), per_cell
 
 
 def _direct_panel(pdf, y, x1, specs, per_cell, cohort_keys, clustered):
@@ -161,7 +161,7 @@ def _direct_panel(pdf, y, x1, specs, per_cell, cohort_keys, clustered):
 @pytest.mark.parametrize("parts", [1, 4])
 @pytest.mark.parametrize("clustered", [False, True], ids=["plain", "clustered"])
 def test_panel_moments_equal_direct_sum(spark, parts, clustered):
-    from csdid_pyspark_spark.did.kernels import panel_moments
+    from csdid_pyspark_spark.did.kernels import cell_moments
 
     pdf, y, x1 = _unit_table(clustered)
     specs, fit, per_cell = _panel_fit()
@@ -171,7 +171,7 @@ def test_panel_moments_equal_direct_sum(spark, parts, clustered):
     try:
         assert units.rdd.getNumPartitions() == parts
         with _conf(spark, **{"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
-            mom = panel_moments(units, fit, ["_x0", "_x1"], len(pdf), cohort_keys, BITERS, SEED)
+            mom = cell_moments(units, fit, ["_x0", "_x1"], len(pdf), cohort_keys, BITERS, SEED)
     finally:
         units.unpersist()
     np.testing.assert_array_equal(mom.keys, keys)

@@ -153,49 +153,58 @@ def test_uncovered_aggte_bootstrap_runs_one_moment_pass(spark):
 
 
 def test_irls_runs_one_spark_job_per_iteration(spark, monkeypatch):
-    """Each IRLS iteration is one pass over the cell table: the
+    """Each IRLS iteration is one pass over the unit table: the
     coefficients travel with the task, so no constants table, broadcast
     or shuffle adds jobs. Iterations are counted as calls of the helper
     that packs a pass's per-cell constants."""
     import pandas as pd
 
     from csdid_pyspark_spark.did import linalg
+    from tests.test_kernel_guard import _layout, _logit_rows, _partitions
 
-    rng = np.random.default_rng(3)
-    x = rng.normal(size=600)
-    d = (rng.random(600) < 1 / (1 + np.exp(-0.8 * x))).astype(float)
-    cell = spark.createDataFrame(pd.DataFrame(
-        {"cid": np.arange(600) % 3, "d": d, "w": 1.0, "_x0": 1.0, "_x1": x}
-    )).cache()
-    cell.count()
+    obs = _partitions(spark, pd.concat([_logit_rows(0, 300, 0.8, 3), _logit_rows(1, 300, 0.8, 4)]))
     iters = []
     real = linalg.consts_df
     monkeypatch.setattr(linalg, "consts_df", lambda *a, **k: iters.append(1) or real(*a, **k))
     try:
         out = {}
         jobs = _jobs_started(
-            spark, lambda: out.update(linalg.irls_logit(cell, ["_x0", "_x1"], spark, [0, 1, 2]))
+            spark, lambda: out.update(linalg.irls_logit(obs, _layout(), ["_x0", "_x1"], [0, 1]))
         )
     finally:
-        cell.unpersist()
-    assert all(out[c] is not None for c in (0, 1, 2))
+        obs.unpersist()
+    assert all(out[c] is not None for c in (0, 1))
     assert len(iters) >= 3
     assert jobs == len(iters)
 
 
-def _dr_panel(spark, **kw):
+def _dr_est(spark, design="panel"):
+    """A DR estimator over a seeded 120-unit panel, or over the same rows
+    as repeated cross sections (``design="rc"``). There, x1 in periods 1
+    and 2 is symmetric within each cohort, so the propensity logits of
+    the cells that read only those periods start at their MLE and leave
+    IRLS after one iteration."""
     from csdid_pyspark_spark.did import ATTgt
     from tests.test_did_parity import make_panel_dgp
 
-    return ATTgt(spark.createDataFrame(make_panel_dgp(n_units=120, seed=5)), "Y", "period", "id",
-                 "G", xfmla="Y ~ x1", allow_unbalanced_panel=False, biters=99, **kw)
+    pdf = make_panel_dgp(n_units=120, seed=5)
+    if design == "rc":
+        early = pdf.period <= 2
+        pdf.loc[early, "x1"] = pdf[early].groupby(["G", "period"])["x1"].transform(
+            lambda x: np.linspace(-1.0, 1.0, len(x)))
+    return ATTgt(spark.createDataFrame(pdf), "Y", "period", "id", "G", xfmla="Y ~ x1",
+                 allow_unbalanced_panel=False, biters=99, panel=design == "panel")
 
 
-def test_dr_panel_passes_read_unit_table_cache_without_exchange(spark, monkeypatch):
-    """Every pass of a bootstrapped DR panel fit (pass 1, each IRLS
-    iteration, the propensity pass and the moment pass) maps over the
-    cached unit table directly: no shuffle and no broadcast between the
-    cache and the pass."""
+@pytest.mark.parametrize("design", ["panel", "rc"])
+def test_dr_passes_read_the_cached_table_without_exchange(spark, monkeypatch, design):
+    """Every pass of a bootstrapped DR fit (pass 1, each IRLS iteration,
+    the propensity pass and the moment pass) maps over the cached unit
+    table directly, a panel's units or a repeated cross section's
+    observations: no shuffle, no broadcast and no single-partition
+    reduce between the cache and the pass. On repeated cross sections
+    the late IRLS iterations, which read only some cells, drop the rows
+    of other periods on the Spark side."""
     df_cls = type(spark.range(1))
     plans = []
     orig = df_cls.toArrow
@@ -205,65 +214,33 @@ def test_dr_panel_passes_read_unit_table_cache_without_exchange(spark, monkeypat
         return orig(self, *a, **k)
     monkeypatch.setattr(df_cls, "toArrow", recorded)
 
-    est = _dr_panel(spark)
+    est = _dr_est(spark, design)
     try:
         plans.clear()
         est.fit("dr", bstrap=True)
     finally:
         est.unpersist()
     assert len(plans) >= 4, plans
-    for plan in plans:
-        # the text after the first InMemoryRelation replays the cached
-        # table's own lineage; the live pass is the segment before it
-        head = plan.split("InMemoryRelation", 1)[0]
-        assert "InMemoryTableScan" in head, plan
-        assert "Exchange" not in head, plan
-        assert "PythonMapInArrow" in head or "MapInArrow" in head, plan
-
-
-def test_dr_rc_passes_filter_live_cells_on_the_cache(spark, monkeypatch):
-    """On a repeated-cross-section fit, the passes that read only some
-    cells (each IRLS iteration, the propensity pass) drop the other
-    cells' rows on the Spark side, before the Arrow conversion, with no
-    shuffle or broadcast between the cached cell table and the pass."""
-    from csdid_pyspark_spark.did import attgt
-
-    df_cls = type(spark.range(1))
-    plans, inside = [], []
-    orig, real = df_cls.toArrow, attgt.estimate_rc
-
-    def recorded(self, *a, **k):
-        if inside:
-            plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return orig(self, *a, **k)
-
-    def kernels(*a, **k):
-        inside.append(1)
-        try:
-            return real(*a, **k)
-        finally:
-            inside.clear()
-    monkeypatch.setattr(df_cls, "toArrow", recorded)
-    monkeypatch.setattr(attgt, "estimate_rc", kernels)
-
-    est = _dr_panel(spark, panel=False)
-    try:
-        plans.clear()
-        est.fit("dr")
-    finally:
-        est.unpersist()
+    # the text after the first InMemoryRelation replays the cached
+    # table's own lineage; the live pass is the segment before it
     heads = [plan.split("InMemoryRelation", 1)[0] for plan in plans]
-    assert len(heads) >= 3, plans
     for head in heads:
         assert "InMemoryTableScan" in head, head
         assert "Exchange" not in head, head
-    assert sum(" IN (" in head for head in heads) >= 2, heads
+        assert "PythonMapInArrow" in head or "MapInArrow" in head, head
+    filtered = [" IN (" in head for head in heads]
+    if design == "rc":
+        assert not filtered[0] and any(filtered), heads
+    else:
+        assert not any(filtered), heads
 
 
-def test_bootstrapped_dr_panel_fit_job_count(spark, monkeypatch):
-    """A bootstrapped DR panel fit starts at most 5 Spark jobs besides
-    its IRLS iterations: the unit table's shuffle, pass 1, the
-    propensity pass and the fused IF + moment pass."""
+@pytest.mark.parametrize("design", ["panel", "rc"])
+def test_bootstrapped_dr_fit_job_count(spark, monkeypatch, design):
+    """A bootstrapped DR fit starts at most 5 Spark jobs besides its
+    IRLS iterations: the unit table's build, pass 1, the propensity pass
+    and the fused IF + moment pass. A bootstrap the fit did not draw
+    re-runs only the moment pass: one job."""
     from csdid_pyspark_spark.did import kernels, linalg
 
     inside, iters = [], []
@@ -282,22 +259,25 @@ def test_bootstrapped_dr_panel_fit_job_count(spark, monkeypatch):
         return real_consts(*a, **k)
     monkeypatch.setattr(kernels, "irls_logit", irls)
     monkeypatch.setattr(linalg, "consts_df", consts)
-    est = _dr_panel(spark)
+    est = _dr_est(spark, design)
     try:
         jobs = _jobs_started(spark, lambda: est.fit("dr", bstrap=True))
+        reboot = _jobs_started(spark, lambda: est.compute_aggte("dynamic", bstrap=True, biters=49))
     finally:
         est.unpersist()
     assert iters, "the DR fit runs its propensity logit"
     assert jobs <= 5 + len(iters), (jobs, len(iters))
+    assert reboot == 1
 
 
-def test_unpersist_releases_every_cache_of_a_fit(spark):
-    """Construction, a bootstrapped panel fit, a re-bootstrapped
-    aggregation and ``unpersist()`` leave the persisted RDDs as they
-    were before construction."""
+@pytest.mark.parametrize("design", ["panel", "rc"])
+def test_unpersist_releases_every_cache_of_a_fit(spark, design):
+    """Construction, a bootstrapped fit, a re-bootstrapped aggregation
+    and ``unpersist()`` leave the persisted RDDs as they were before
+    construction."""
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    est = _dr_panel(spark)
+    est = _dr_est(spark, design)
     est.fit("dr", bstrap=True)
     est.compute_aggte("dynamic", bstrap=True, biters=49)
     est.unpersist()
@@ -311,7 +291,7 @@ def test_preprocess_jobs_carry_the_callers_job_group(spark):
     sc = spark.sparkContext
     sc.setJobGroup("g", "estimator construction")
     try:
-        est = _dr_panel(spark)
+        est = _dr_est(spark)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     est.unpersist()
@@ -510,31 +490,6 @@ def test_attgt_unit_table_one_shuffle_no_join(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
     assert "SinglePartition" not in plan, plan
-
-
-def test_attgt_if_table_cached_and_se_pass_reads_cache(spark):
-    """A repeated-cross-section fit persists its influence-function
-    table; the moment pass that yields the SEs (and re-runs for a
-    bootstrap the fit's draws do not cover) must re-read that
-    InMemoryRelation, not re-derive the kernel lineage. Gated on the
-    plan of the pass's input table."""
-    from csdid_pyspark_spark.did import ATTgt
-
-    est = ATTgt(_synth_panel(spark), "y", "t", "id", "g", panel=False)
-    est.fit("reg")
-    if_df = est.fit_result.if_df
-    assert if_df.storageLevel.useMemory, "IF table must be persisted after fit()"
-    z_df = est._moment_table(if_df, est.fit_result.cohort_keys)
-    plan = z_df._jdf.queryExecution().executedPlan().toString()
-    est.unpersist()
-    # Everything after the first InMemoryRelation is the cached table's
-    # stored-lineage replay text (it embeds the whole kernel plan); the
-    # LIVE pass is the segment before it: a scan of the cache, no joins,
-    # no shuffle.
-    head = plan.split("InMemoryRelation", 1)[0]
-    assert "InMemoryTableScan" in head, plan
-    assert "Exchange" not in head, plan
-    assert "Join" not in head, plan
 
 
 def test_dedup_shingles_built_once_above_widening_exchange(spark):
